@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query formatted-plan dump for the optimization-round deliverables:
@@ -13,8 +12,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *   sbt "runMain graft.PlanDump <suffix> <queryName ...>"
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1 — the bench SF, so plan claims
-  * match the benched shapes), SPARK_GRAFT_CPUS (default 32, bench parity),
-  * SPARK_GRAFT_PLANS_DIR (round subdir, default r15).
+  * match the benched shapes), SPARK_GRAFT_CPUS (as in [[Session.local]];
+  * set it to the bench's core count for parity), SPARK_GRAFT_PLANS_DIR
+  * (round subdir, default r15).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,20 +22,11 @@ object PlanDump {
     val suffix = args.head
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), "plans",
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "r15"))
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     try graft.queries.Fixtures.ensureAll(spark, sfDir)
     catch { case _: Throwable => () }

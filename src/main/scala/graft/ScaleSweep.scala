@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{BpeTokenizer, Chunking, Components, Dedup, HashMode, Indexing, Similarity, TextAnalysis}
 
@@ -24,57 +24,65 @@ import graft.operators.{BpeTokenizer, Chunking, Components, Dedup, HashMode, Ind
   * (like a stopword df threshold), so a fixed absolute df at 10× data
   * would be 10× stricter, not the same filter.
   *
-  * `runMain graft.ScaleSweep [sfDir] [llm|load|dup|inc|vec] [onlyCsv]` —
-  * `load` delegates to [[graft.queries.LoadSweep]] (statement/calendar
-  * load pipelines); `dup` runs only the duplication-preserving section;
-  * `inc` times dd13's store-at-rest incremental screen (store signatures
-  * materialized untimed, the batch join timed); default `llm` sweeps
-  * everything, optionally filtered to the comma-separated op names in
-  * `onlyCsv`. Results recorded in SCALE.md.
+  * `runMain graft.ScaleSweep [sfDir] [mode] [onlyCsv]`, mode one of:
+  *  - `llm` (default): the LLM-layer operators below, then the
+  *    duplication-preserving section; `onlyCsv` filters to the named ops;
+  *  - `dup`: only the duplication-preserving section;
+  *  - `inc`: dd13's store-at-rest incremental screen (store signatures
+  *    materialized untimed, the batch join timed);
+  *  - `vec`: the vector family on perturbed embedding copies;
+  *  - `pipe`: [[graft.operators.CurationPipeline]] per-stage walls;
+  *  - `graph`, `behavior`, `skew`, `prefix`: see [[SweepExtras]].
+  * The copy factor is SPARK_GRAFT_SWEEP_FACTOR (default 10; 30 gives a
+  * second scaling interval). Results recorded in SCALE.md.
   */
 object ScaleSweep {
+
+  /** Best of two runs of `thunk` (wall seconds) and its row count. */
+  private[graft] def time(thunk: () => Long): (Double, Long) = {
+    var best = Double.MaxValue; var rows = 0L
+    (1 to 2).foreach { _ =>
+      val t0 = System.nanoTime()
+      rows = thunk()
+      best = math.min(best, (System.nanoTime() - t0) / 1e9)
+    }
+    (best, rows)
+  }
+
+  private[graft] def header(factor: Int): Unit =
+    println(f"${"op"}%-20s ${"t1x"}%8s ${s"t${factor}x"}%8s ${"ratio"}%6s  rows1x/rows${factor}x")
+
+  private[graft] def row(name: String, t1: Double, r1: Long,
+                         tN: Double, rN: Long): Unit =
+    println(f"$name%-20s $t1%8.2f $tN%8.2f ${tN / t1}%6.1f  $r1/$rN")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val mode = args.drop(1).headOption.getOrElse("llm")
     // fail fast on a typo'd mode: an unrecognized argument must not fall
     // through the guards below and silently run only the tail sections
-    require(Set("llm", "load", "dup", "inc", "vec", "pipe",
-        "graph", "behavior", "skew", "prefix", "cchub").contains(mode),
-      s"unknown mode '$mode' (expected llm|load|dup|inc|vec|pipe|graph|behavior|skew|prefix|cchub)")
+    require(Set("llm", "dup", "inc", "vec", "pipe",
+        "graph", "behavior", "skew", "prefix").contains(mode),
+      s"unknown mode '$mode' (expected llm|dup|inc|vec|pipe|graph|behavior|skew|prefix)")
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    if (mode == "load") {
-      graft.queries.LoadSweep.run(spark, sfDir)
-      spark.stop()
-      return
-    }
+    val factor = sys.env.getOrElse("SPARK_GRAFT_SWEEP_FACTOR", "10").toInt
+    require(factor >= 2, s"sweep factor must be >= 2, got $factor")
     // round-12 modes (VERDICT r11 items 4/5) live in SweepExtras
-    val factor0 = sys.env.getOrElse("SPARK_GRAFT_SWEEP_FACTOR", "10").toInt
     if (mode == "graph") {
-      SweepExtras.runGraph(spark, sfDir, factor0, only); spark.stop(); return
+      SweepExtras.runGraph(spark, sfDir, factor, only); spark.stop(); return
     }
     if (mode == "behavior") {
-      SweepExtras.runBehavior(spark, sfDir, factor0, only); spark.stop(); return
+      SweepExtras.runBehavior(spark, sfDir, factor, only); spark.stop(); return
     }
     if (mode == "skew") {
-      SweepExtras.runSkew(spark, sfDir, factor0); spark.stop(); return
+      SweepExtras.runSkew(spark, sfDir, factor); spark.stop(); return
     }
     if (mode == "prefix") {
-      SweepExtras.runPrefix(spark, sfDir, factor0, only); spark.stop(); return
-    }
-    if (mode == "cchub") {
-      SweepExtras.runCcHub(spark, sfDir, factor0); spark.stop(); return
+      SweepExtras.runPrefix(spark, sfDir, factor, only); spark.stop(); return
     }
 
     if (mode == "pipe") {
@@ -288,23 +296,10 @@ object ScaleSweep {
       "ix3_bm25" -> (d => Indexing.bm25TopK(d, "doc_id", "text",
         Seq("spark", "shuffle", "broadcast"), k = 10)))
 
-    def time(fn: DataFrame => DataFrame, d: DataFrame): (Double, Long) = {
-      var best = Double.MaxValue; var rows = 0L
-      (1 to 2).foreach { _ =>
-        val t0 = System.nanoTime()
-        rows = fn(d).count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      (best, rows)
-    }
+    def timeOn(fn: DataFrame => DataFrame, d: DataFrame): (Double, Long) =
+      time(() => fn(d).count())
 
-    // enlargement copy factor (default 10); SPARK_GRAFT_SWEEP_FACTOR=30
-    // gives the second measured scaling interval so claimed linearity has
-    // two ratios (10×, 30×) instead of one
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SWEEP_FACTOR", "10").toInt
-    require(factor >= 2, s"sweep factor must be >= 2, got $factor")
-
-    println(f"${"op"}%-20s ${"t1x"}%8s ${s"t${factor}x"}%8s ${"ratio"}%6s  rows1x/rows${factor}x")
+    header(factor)
 
     if (mode == "vec") {
       // The vector family's 1×-vs-10× rows: embeddings enlarged with a
@@ -355,9 +350,9 @@ object ScaleSweep {
       vops.filter { case (name, _) => only.forall(_.contains(name)) }
         .foreach { case (name, fn) =>
           fn(ebase).count() // warm
-          val (t1, r1) = time(fn, ebase)
-          val (t10, r10) = time(fn, e10)
-          println(f"$name%-20s $t1%8.2f $t10%8.2f ${t10 / t1}%6.1f  $r1/$r10")
+          val (t1, r1) = timeOn(fn, ebase)
+          val (t10, r10) = timeOn(fn, e10)
+          row(name, t1, r1, t10, r10)
         }
       // dd15 semantic dedup: the fixed-nlist row shows the within-cell
       // quadratic honestly (10× data in the SAME 8 cells is ~100× pair
@@ -368,22 +363,22 @@ object ScaleSweep {
         val fixed = (e: DataFrame) =>
           Similarity.semanticDedup(e, "vec_id", "embedding")
         fixed(ebase).count() // warm
-        val (t1, r1) = time(fixed, ebase)
-        val (t10, r10) = time(fixed, e10)
-        println(f"${"dd15_semantic"}%-20s $t1%8.2f $t10%8.2f ${t10 / t1}%6.1f  $r1/$r10")
+        val (t1, r1) = timeOn(fixed, ebase)
+        val (t10, r10) = timeOn(fixed, e10)
+        row("dd15_semantic", t1, r1, t10, r10)
         val scaled = (e: DataFrame) =>
           Similarity.semanticDedup(e, "vec_id", "embedding",
             nlist = 8 * factor)
-        val (ts, rs) = time(scaled, e10)
-        println(f"${"dd15_nlist_scaled"}%-20s $t1%8.2f $ts%8.2f ${ts / t1}%6.1f  $r1/$rs")
+        val (ts, rs) = timeOn(scaled, e10)
+        row("dd15_nlist_scaled", t1, r1, ts, rs)
         // sample-trained + scaled cells: the production path — centroid
         // training cost is bounded by the sample, cell size bounded by
         // nlist, so this row should return toward linear
         val sampled = (e: DataFrame) =>
           Similarity.semanticDedup(e, "vec_id", "embedding",
             nlist = 8 * factor, trainFraction = 0.1)
-        val (tp, rp) = time(sampled, e10)
-        println(f"${"dd15_sample_train"}%-20s $t1%8.2f $tp%8.2f ${tp / t1}%6.1f  $r1/$rp")
+        val (tp, rp) = timeOn(sampled, e10)
+        row("dd15_sample_train", t1, r1, tp, rp)
       }
 
       // Planted DEGENERATE bucket: 10k byte-identical copies of vector 0.
@@ -408,9 +403,9 @@ object ScaleSweep {
           .localCheckpoint(eager = true)
         val fn = (e: DataFrame) =>
           Similarity.cosineNearDupPairs(e, "vec_id", "embedding", 0.3)
-        val (t1, r1) = time(fn, ebase)
-        val (th, rh) = time(fn, planted)
-        println(f"${"dd5_hot10k"}%-20s $t1%8.2f $th%8.2f ${th / t1}%6.1f  $r1/$rh")
+        val (t1, r1) = timeOn(fn, ebase)
+        val (th, rh) = timeOn(fn, planted)
+        row("dd5_hot10k", t1, r1, th, rh)
       }
       spark.stop()
       return
@@ -441,9 +436,9 @@ object ScaleSweep {
       val f1 = incremental(base)
       val f10 = incremental(x10)
       f1(base).count() // warm
-      val (t1, r1) = time(f1, base)
-      val (t10, r10) = time(f10, x10)
-      println(f"${"dd13_incremental"}%-20s $t1%8.2f $t10%8.2f ${t10 / t1}%6.1f  $r1/$r10")
+      val (t1, r1) = timeOn(f1, base)
+      val (t10, r10) = timeOn(f10, x10)
+      row("dd13_incremental", t1, r1, t10, r10)
       spark.stop()
       return
     }
@@ -459,9 +454,9 @@ object ScaleSweep {
       ops.filter { case (name, _) => only.forall(_.contains(name)) }
         .foreach { case (name, fn) =>
           fn(base).count() // warm codegen/JIT on the small corpus
-          val (t1, r1) = time(fn, base)
-          val (t10, r10) = time(fn, x10)
-          println(f"$name%-20s $t1%8.2f $t10%8.2f ${t10 / t1}%6.1f  $r1/$r10")
+          val (t1, r1) = timeOn(fn, base)
+          val (t10, r10) = timeOn(fn, x10)
+          row(name, t1, r1, t10, r10)
         }
     }
 
@@ -488,9 +483,9 @@ object ScaleSweep {
     dupOps.filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, mk) =>
       mk(1)(base).count() // warm
-      val (t1, r1) = time(mk(1), base)
-      val (t10, r10) = time(mk(factor), x10dup)
-      println(f"$name%-20s $t1%8.2f $t10%8.2f ${t10 / t1}%6.1f  $r1/$r10")
+      val (t1, r1) = timeOn(mk(1), base)
+      val (t10, r10) = timeOn(mk(factor), x10dup)
+      row(name, t1, r1, t10, r10)
     }
     spark.stop()
   }

@@ -3,27 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Components
+import ScaleSweep.{header, row, time}
 
 /** Round-12 sweep modes (VERDICT r11 items 4 and 5): measured 1×-vs-N×
   * rows for the graph family (`graph`), the market-basket / session-path
   * behavior family (`behavior`), and the hot-symbol skew validation for
-  * the load layer's AQE claim (`skew`). Dispatched from
+  * the load layer's AQE claim (`skew`), and the two-level prefix-sum
+  * operators (`prefix`). Dispatched from
   * [[graft.ScaleSweep]]; results recorded in SCALE.md.
   */
 object SweepExtras {
-
-  private def time(thunk: () => Long): (Double, Long) = {
-    var best = Double.MaxValue; var rows = 0L
-    (1 to 2).foreach { _ =>
-      val t0 = System.nanoTime()
-      rows = thunk()
-      best = math.min(best, (System.nanoTime() - t0) / 1e9)
-    }
-    (best, rows)
-  }
-
-  private def header(factor: Int): Unit =
-    println(f"${"op"}%-20s ${"t1x"}%8s ${s"t${factor}x"}%8s ${"ratio"}%6s  rows1x/rows${factor}x")
 
   // ---------------------------------------------------------------- graph
 
@@ -71,108 +60,8 @@ object SweepExtras {
         fn(e1, v1).count() // warm
         val (t1, r1) = time(() => fn(e1, v1).count())
         val (tN, rN) = time(() => fn(eN, vN).count())
-        println(f"$name%-20s $t1%8.2f $tN%8.2f ${tN / t1}%6.1f  $r1/$rN")
+        row(name, t1, r1, tN, rN)
       }
-  }
-
-  // ---------------------------------------------------------------- cchub
-
-  /** VERDICT r14 item 4: the skewed-hub fixture for the connected-
-    * components round body. r14 replaced each star's groupBy(min)+equi-join
-    * with `min over (partition by u)` on the same exchange (fewer
-    * exchanges, verified win on uniform graphs), but the window form
-    * BUFFERS a node's whole neighbor list in one WindowExec group (spilling
-    * past `spark.sql.windowExec.buffer.spill.threshold` rows) where the old
-    * aggregate reached the reducer map-side-combined and the probe join
-    * STREAMED the hub's edges. This mode measures both round bodies on
-    * (a) the uniform chain+hub graph of [[runGraph]] at `factor`× and
-    * (b) the same graph plus one monster hub (node 0 adjacent to ~1e6
-    * nodes — far past the spill threshold). Both shapes' walls land in
-    * SCALE.md; the decision comment sits in Components.scala.
-    */
-  def runCcHub(spark: SparkSession, sfDir: String, factor: Int): Unit = {
-    val par = spark.sparkContext.defaultParallelism
-    val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
-    val n = nDocs * 10 * factor
-    val hubDeg = math.min(1_000_000L, n / 2)
-    def graph(withHub: Boolean): DataFrame = {
-      val ids = spark.range(1, n + 1).select(col("id"))
-      val chain = ids.filter(col("id") % 100 =!= 0)
-        .select(col("id").as("a"), (col("id") - 1).as("b"))
-      val hub = ids.filter(col("id") % 10 =!= 0)
-        .select(col("id").as("a"), (col("id") - col("id") % 10).as("b"))
-      val base = chain.unionByName(hub)
-      val monster =
-        if (withHub) spark.range(1, hubDeg + 1)
-          .select(lit(0L).as("a"), (col("id") * 2).as("b"))
-        else spark.range(0, 0).select(col("id").as("a"), col("id").as("b"))
-      base.unionByName(monster).repartition(par).localCheckpoint(eager = true)
-    }
-    val uniform = graph(withHub = false)
-    val hubbed = graph(withHub = true)
-    val shapes: Seq[(String, DataFrame => Long)] = Seq(
-      "window_min_r14" -> (e =>
-        Components.connectedComponents(e, "a", "b").count()),
-      "groupby_join_r13" -> (e => ccOldShape(e).count()))
-    println(f"${"fixture"}%-12s ${"shape"}%-18s ${"wall_s"}%8s ${"rows"}%10s")
-    Seq(("uniform", uniform), (s"hub${hubDeg / 1000}k", hubbed)).foreach {
-      case (fname, e) =>
-        shapes.foreach { case (sname, fn) =>
-          fn(e) // warm
-          val (t, r) = time(() => fn(e))
-          println(f"$fname%-12s $sname%-18s $t%8.2f $r%10d")
-        }
-    }
-  }
-
-  /** The RETIRED r13 round body (groupBy(min) + equi-join per star),
-    * verbatim from commit 1d8b7df — kept ONLY as the [[runCcHub]]
-    * measurement reference; the product path is
-    * [[Components.connectedComponentsWithStats]]. */
-  private def ccOldShape(edges: DataFrame): DataFrame = {
-    // the r13 per-round fixpoint checksum, replicated (it is private in
-    // Components): count-only would fairly often converge EARLY and make
-    // the old shape look cheaper than it was
-    def checksum(df: DataFrame): (Long, Long, BigDecimal) = {
-      val r = df.withColumn("h", xxhash64(col("u"), col("v")))
-        .agg(count(lit(1)).as("c"), expr("bit_xor(h)").as("x"),
-          sum(col("h").cast("decimal(38,0)")).as("s")).collect()(0)
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) BigDecimal(0) else BigDecimal(r.getDecimal(2)))
-    }
-    var e = edges
-      .select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-      .localCheckpoint(eager = false)
-    var prev = checksum(e)
-    var converged = false
-    var it = 0
-    while (!converged && it < 50) {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val lmin = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val large = sym.filter(col("v") > col("u"))
-        .join(lmin, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-      val dir = large.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val smin = dir.groupBy("u").agg(min("v").as("m"))
-      val small = dir.join(smin, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(smin.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val cur = checksum(small)
-      converged = cur == prev
-      prev = cur
-      e = small
-      it += 1
-    }
-    e
   }
 
   // ------------------------------------------------------------- behavior
@@ -278,7 +167,7 @@ object SweepExtras {
         fn(b1, 1).count() // warm
         val (t1, r1) = time(() => fn(b1, 1).count())
         val (tN, rN) = time(() => fn(bN, factor).count())
-        println(f"$name%-20s $t1%8.2f $tN%8.2f ${tN / t1}%6.1f  $r1/$rN")
+        row(name, t1, r1, tN, rN)
       }
   }
 
@@ -355,9 +244,6 @@ object SweepExtras {
       val plan = df.queryExecution.executedPlan
       val rows = plan.execute().count()
       val s = plan.toString
-      if (sys.env.contains("SPARK_GRAFT_SKEW_DEBUG"))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"/tmp/skewplan_${System.nanoTime()}.txt"), s)
       val splits = "skewed=(\\d+)".r.findAllMatchIn(s).map(_.group(1).toInt).sum +
         "\\bskew=true\\b".r.findAllIn(s).length
       (rows, splits)
@@ -448,7 +334,7 @@ object SweepExtras {
       if (only.forall(_.contains(name))) {
         val (t1, r1) = time(() => f(if (name == "sweep_concurrency") iv1 else k1))
         val (tN, rN) = time(() => f(if (name == "sweep_concurrency") ivN else kN))
-        println(f"$name%-20s $t1%8.2f $tN%8.2f ${tN / t1}%6.1f  $r1/$rN")
+        row(name, t1, r1, tN, rN)
       }
     }
   }

@@ -92,9 +92,9 @@ object Components {
       // unchanged, so results and the convergence trace are bit-identical.
       //
       // r15 skewed-hub decision (VERDICT r14 item 2, measured — SCALE.md
-      // "Round 15 cchub", ScaleSweep cchub mode): the window form BUFFERS
-      // a hub's whole neighbor list in one WindowExec group where the old
-      // aggregate enjoyed map-side partial min and a streamed probe. On
+      // "Round 15 cchub"): the window form BUFFERS a hub's whole neighbor
+      // list in one WindowExec group where the old aggregate enjoyed
+      // map-side partial min and a streamed probe. On
       // the 2M-node fixture the window form is equal-or-faster up to a
       // 250k-degree hub (3.15 s vs 3.37 s) and 1.2× SLOWER only at a
       // 1e6-degree hub (9.12 s vs 7.61 s) — a bounded straggler, not a
@@ -104,7 +104,7 @@ object Components {
       // buckets are pre-collapsed (exact-dedup-first composition), so
       // realistic hub degrees sit where the window form wins; a corpus
       // with an adversarial >1e6-degree hub should swap this body back to
-      // groupBy+join (reference copy: SweepExtras.ccOldShape).
+      // the groupBy(min) + equi-join round of commit 1d8b7df.
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val byU = org.apache.spark.sql.expressions.Window.partitionBy("u")
       val large = sym

@@ -43,8 +43,7 @@ object Dedup {
     * is doc-local/bounded, SIGNATURES that are approximate by design
     * (minhash band minima, simhash, winnowing fingerprints), and WEIGHT
     * keys where a collision only wobbles a score
-    * ([[TextAnalysis.sparseCosinePairs]] terms — 128-bit there is an
-    * opt-in, `hash128Terms`) stay 64-bit.
+    * ([[TextAnalysis.sparseCosinePairs]] terms) stay 64-bit.
     */
   def hash128(c: Column): Column =
     struct(xxhash64(c).as("h1"), xxhash64(lit(1), c).as("h2"))

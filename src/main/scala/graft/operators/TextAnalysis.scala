@@ -562,8 +562,7 @@ object TextAnalysis {
     * story; without the cap one "the"-like term is a corpus² join.
     */
   def sparseCosinePairs(docs: DataFrame, idCol: String, textCol: String,
-                        maxDf: Int, shingle: Int = 3,
-                        hash128Terms: Boolean = false): DataFrame = {
+                        maxDf: Int, shingle: Int = 3): DataFrame = {
     // r14 (guide §2.3): terms are xxhash64'd at the explode so the tf
     // aggregation, the df dictionary, and the postings self-join all key
     // on 8-byte longs instead of n-word shingle strings (the biggest
@@ -573,21 +572,14 @@ object TextAnalysis {
     // counts twice. tf feeds two consumers (dfreq and the weights), so it
     // is pinned once with the lazy-localCheckpoint convention.
     //
-    // r15 term-hash width (ADVICE r14 #2, measured): `hash128Terms = true`
-    // switches the term keys to the two-seed 128-bit Dedup.hash128. Unlike
-    // the dedup IDENTITY keys (where a collision silently DROPS a
-    // document and 128-bit is mandatory — Dedup.hash128's bound table),
-    // a term collision here merges two terms' tf/df and perturbs a few
-    // cosines in the 6th decimal — a score wobble, not a keep/drop flip —
-    // and the widening costs ~1.25× on this operator's hottest exchanges
-    // (measured at sf0.1: 2.44 s → 3.09 s). Default stays 64-bit (the
-    // graded face, collision-free at every testable SF); a 100 TB run
-    // that needs exact weights opts in, the minhashSignatures convention.
-    val termHash = (c: Column) =>
-      if (hash128Terms) Dedup.hash128(c) else xxhash64(c)
+    // Term keys stay 64-bit: a collision merges two terms' tf/df and
+    // perturbs a few cosines in the 6th decimal (a score wobble, not the
+    // keep/drop flip that makes Dedup.hash128 mandatory for identity
+    // keys), and 128-bit terms measured 2.44 → 3.09 s at sf0.1
+    // (OPTIMIZATION_r15.md).
     val tf = docs.select(col(idCol).as("doc_id"),
         explode(Dedup.wordShingles(col(textCol), shingle)).as("tok"))
-      .select(col("doc_id"), termHash(col("tok")).as("th"))
+      .select(col("doc_id"), xxhash64(col("tok")).as("th"))
       .groupBy("doc_id", "th").agg(count(lit(1)).as("tf"))
       .localCheckpoint(eager = false)
     val dfreq = tf.groupBy("th").agg(count(lit(1)).as("df"))

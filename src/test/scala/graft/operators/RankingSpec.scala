@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark
 
 /** `Ranking.globalRowNumber` laws: equals the naive global window for any
   * bucket size (two-level prefix sum must be layout-invariant), including
@@ -11,19 +11,16 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RankingSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("ranking-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   test("matches the naive global row_number for any bucket size") {
     val s = spark
     import s.implicits._
     // keys with heavy ties (i % 17) and ids shuffled via a multiplicative
-    // permutation so arrival order differs from rank order
+    // permutation so arrival order differs from rank order, spread over
+    // four input shards
     val df = (0L until 500L).map(i => ((i * 97) % 500, i % 17))
-      .toDF("id", "key")
+      .toDF("id", "key").repartition(4)
     val naive = df.withColumn("rn",
       row_number().over(Window.orderBy(col("key"), col("id"))).cast("long"))
       .select("id", "rn").collect()

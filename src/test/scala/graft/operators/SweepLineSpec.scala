@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark
 
 /** `SweepLine.concurrency` laws: hand-computed fixture, bucket-size
   * invariance (the two-level prefix sum must not depend on the shard
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SweepLineSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]").appName("sweepline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   // [0,10] [5,15] [10,20] [30,30]: overlap at t=10 is 3 (touching counts,
   // inclusive convention), the singleton is isolated.

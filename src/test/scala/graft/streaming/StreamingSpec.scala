@@ -111,9 +111,13 @@ class StreamingSpec extends AnyFunSuite {
       windowLen = "1 hour", watermark = "2 hours", valueCol = col("value"))
     val query = agg.writeStream.outputMode("complete")
       .format("memory").queryName("tumble").start()
+    // two micro-batches in ts order; the 10:00 click window spans both
     Files.writeString(new java.io.File(inDir, "e1.json").toPath,
       """{"ts":"2024-01-01T10:15:00.000Z","event_type":"click","value":1.5}
-        |{"ts":"2024-01-01T10:45:00.000Z","event_type":"click","value":2.0}
+        |""".stripMargin)
+    query.processAllAvailable()
+    Files.writeString(new java.io.File(inDir, "e2.json").toPath,
+      """{"ts":"2024-01-01T10:45:00.000Z","event_type":"click","value":2.0}
         |{"ts":"2024-01-01T11:05:00.000Z","event_type":"view","value":1.0}
         |""".stripMargin)
     query.processAllAvailable()
@@ -121,6 +125,12 @@ class StreamingSpec extends AnyFunSuite {
     val out = spark.table("tumble").orderBy("ws", "event_type").collect()
     assert(out.map(r => (r.getString(1), r.getLong(2), r.getDouble(3))).toSeq
       === Seq(("click", 2L, 3.5), ("view", 1L, 1.0)))
+    // the streaming form equals the batch form over the same events
+    val batch = StreamingLoad.tumblingCounts(
+      spark.read.schema(evSchema).json(inDir.getAbsolutePath),
+      "ts", col("event_type"), valueCol = col("value"))
+      .orderBy("ws", "event_type").collect()
+    assert(out.toSeq === batch.toSeq)
   }
 
   test("firstSeenDedup drops re-arrivals across micro-batches via key state") {
