@@ -26,11 +26,11 @@ object CsvExport {
     * no quoting, `dump-dolt-statements.rkt:51-52` — we emit standard quoted
     * CSV and document the divergence). */
   def writeSnapshot(df: DataFrame, pk: Seq[String], path: String): Unit =
-    // sort on the TYPED columns before the all-string projection (string
-    // order would put '10' before '2'); the projection and coalesce(1)
-    // both preserve the global sort order
-    projectForCsv(df.orderBy(pk.map(col): _*))
-      .coalesce(1)
+    // one task gathers the rows and sorts them on the TYPED columns before
+    // the all-string projection (string order would put '10' before '2');
+    // a global orderBy would add a range-partitioning sample job that a
+    // one-file output does not need
+    projectForCsv(df.repartition(1).sortWithinPartitions(pk.map(col): _*))
       .write.mode("overwrite").option("header", true)
       // bare empty for NULL, like the reference's coalesce(col::text, '')
       .option("emptyValue", "").csv(path)
@@ -40,8 +40,10 @@ object CsvExport {
     * is date-partitioned parquet. */
   def writePerDate(df: DataFrame, dateCol: String, pk: Seq[String],
                    baseDir: String): Seq[String] = {
+    // a handful of distinct dates: sorted on the driver (a NULL first, as
+    // orderBy put it), not by a range-partitioned Spark sort
     val dates = df.select(date_format(col(dateCol), "yyyy-MM-dd").as("d"))
-      .distinct().orderBy("d").collect().map(_.getString(0)).toSeq
+      .distinct().collect().map(_.getString(0)).toSeq.sortBy(Option(_))
     dates.foreach { d =>
       writeSnapshot(df.filter(col(dateCol) === lit(d).cast("date")),
         pk, s"$baseDir/$d")

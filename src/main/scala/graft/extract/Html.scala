@@ -35,9 +35,25 @@ final case class HElem(tag: String, attrs: Map[String, String],
   /** First child with the given tag. */
   def kid(t: String): Option[HElem] = kids(t).headOption
 
+  /** All descendant nodes, document order (pre-order). An explicit stack,
+    * not recursion, like [[Html.parse]]: each node costs O(1) whatever its
+    * depth, and a deeply nested document cannot overflow the JVM stack. */
+  private def nodes: Iterator[HNode] = new Iterator[HNode] {
+    private val stack = new java.util.ArrayDeque[HNode]()
+    pushChildren(HElem.this)
+    private def pushChildren(e: HElem): Unit = {
+      var i = e.children.length - 1
+      while (i >= 0) { stack.push(e.children(i)); i -= 1 }
+    }
+    def hasNext: Boolean = !stack.isEmpty
+    def next(): HNode = stack.pop() match {
+      case e: HElem => pushChildren(e); e
+      case t => t
+    }
+  }
+
   /** All descendant elements, document order. */
-  def descendants: Iterator[HElem] =
-    childElems.iterator.flatMap(e => Iterator.single(e) ++ e.descendants)
+  def descendants: Iterator[HElem] = nodes.collect { case e: HElem => e }
 
   /** sxpath `// (tag (@ (equal? (id "x"))))` — descendant-or-self by id. */
   def byId(t: String, idValue: String): Option[HElem] =
@@ -68,11 +84,7 @@ final case class HElem(tag: String, attrs: Map[String, String],
   /** All descendant text concatenated (no separators), document order. */
   def allText: String = {
     val sb = new StringBuilder
-    def walk(n: HNode): Unit = n match {
-      case HText(s) => sb.append(s)
-      case e: HElem => e.children.foreach(walk)
-    }
-    children.foreach(walk)
+    nodes.foreach { case HText(s) => sb.append(s); case _ => }
     sb.toString
   }
 
@@ -82,11 +94,10 @@ final case class HElem(tag: String, attrs: Map[String, String],
     * are skipped so indentation after an inner element doesn't win. */
   def lastText: String = {
     var out = ""
-    def walk(n: HNode): Unit = n match {
+    nodes.foreach {
       case HText(s) => if (s.trim.nonEmpty) out = s.trim
-      case e: HElem => e.children.foreach(walk)
+      case _ =>
     }
-    children.foreach(walk)
     out
   }
 }

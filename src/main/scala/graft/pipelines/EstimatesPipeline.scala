@@ -77,10 +77,21 @@ object EstimatesPipeline {
     * so a caller consuming several of the six tables parses each document
     * once, not once per table; a single-table consumer should pass
     * `pin = false` — materializing the deeply nested cell struct costs more
-    * than the one parse it saves. */
+    * than the one parse it saves.
+    *
+    * The pinned base is rebalanced, so AQE sizes its partitions to the
+    * parsed bytes. The scan's split is set by file count, not by bytes:
+    * `binaryFile` charges each file its length plus `openCostInBytes`
+    * (4 MB) against `maxPartitionBytes` (128 MB), so a weekly folder of
+    * 2,000 pages of ≈60 KB packs ≈31 files per split, ≈63 partitions.
+    * Checkpointing those as they are makes each of the six projections and
+    * each K1 exchange run ≈63 tiny tasks. With the rebalance the parse
+    * still runs on the ≈63 scan tasks, and AQE coalesces its output into
+    * the few partitions its bytes need. */
   def tables(docs: DataFrame, pin: Boolean = true): Map[String, DataFrame] = {
     val base =
-      if (pin) parsed(docs).localCheckpoint(eager = false) else parsed(docs)
+      if (pin) parsed(docs).hint("rebalance").localCheckpoint(eager = false)
+      else parsed(docs)
     val per = byPeriod(base)
 
     val rankScore = base.select(

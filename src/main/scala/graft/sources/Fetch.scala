@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDate
 
 /** S1–S4 — the rate-limited raw-zone ingest utilities
@@ -47,7 +47,12 @@ object Fetch {
 
   /** Sequential rate-limited sweep; mkdirs parents, replaces existing files
     * (reference `#:exists 'replace`). The first request fires immediately —
-    * delays are spacing BETWEEN requests, like the reference's scheduler. */
+    * delays are spacing BETWEEN requests, like the reference's scheduler.
+    *
+    * Each body goes to a temp file in the target's directory and is then
+    * moved over the target atomically, so a crash never leaves a truncated
+    * document for the transform stage. The temp name ends in `.part`, which
+    * no [[RawZone]] `pathGlobFilter` (`*.<kind>.html`, `*.json`) matches. */
   def sweep(targets: Seq[Target], transport: Transport,
             sleep: Long => Unit = Thread.sleep): SweepReport = {
     var ok = 0
@@ -55,8 +60,16 @@ object Fetch {
     targets.zipWithIndex.foreach { case (t, idx) =>
       if (t.delayMillis > 0 && idx > 0) sleep(t.delayMillis)
       try {
+        val body = transport(t.url)
         Files.createDirectories(t.path.getParent)
-        Files.write(t.path, transport(t.url))
+        // not createTempFile: its owner-only mode would stick to the document
+        val tmp = t.path.resolveSibling(
+          s".${t.path.getFileName}.${java.util.UUID.randomUUID}.part")
+        try {
+          Files.write(tmp, body)
+          Files.move(tmp, t.path, StandardCopyOption.ATOMIC_MOVE,
+            StandardCopyOption.REPLACE_EXISTING)
+        } finally Files.deleteIfExists(tmp)
         ok += 1
       } catch {
         case e: Exception =>

@@ -76,4 +76,22 @@ class HtmlSpec extends AnyFunSuite {
     assert(doc.kid("div").get.kid("p", 2).get.allText === "b")
     assert(doc.kid("div").get.kid("p", 3).isEmpty)
   }
+
+  test("a 20k-deep nest walks without overflowing the stack") {
+    val depth = 20000
+    val html = "<html><body id=home>" + "<div>" * depth +
+      "<section id=s class='deep x'><table><tbody><tr><td>x <b>7</b> </td>" +
+      "</tr></tbody></table></section>" + "</div>" * depth + "</body></html>"
+    val body = Html.parse(html).kid("html").get.kid("body").get
+    assert(body.byId("section", "s").isDefined)
+    assert(body.byId("section", "absent").isEmpty)
+    assert(body.byClass("section", "deep").isDefined)
+    assert(body.nthDescendant("div", depth).isDefined)
+    assert(body.nthDescendant("div", depth + 1).isEmpty)
+    assert(body.allText === "x 7 ")
+    assert(body.lastText === "7")
+    val parsed = EstimateExtract.parse(html, java.time.LocalDate.of(2025, 1, 15))
+    assert(parsed.rank === "")
+    assert(parsed.cells.values.forall(_.values.forall(_ == "")))
+  }
 }

@@ -3,7 +3,7 @@ package graft.pipelines
 import java.nio.file.Files
 import java.sql.Date
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -88,6 +88,38 @@ class PipelinesSpec extends AnyFunSuite {
     assert(lines.head === "act_symbol,period_end_date,reported,estimate")
     assert(lines.exists(_.endsWith(","))) // NA estimate rendered as ''
     assert(lines.tail === lines.tail.sorted)
+  }
+
+  test("estimates: the pinned base equals the unpinned one on a many-split scan") {
+    val base = Files.createTempDirectory("graft_estimates_pin").toFile
+    val day = new java.io.File(base, "2025-01-15"); day.mkdirs()
+    val ranks = Seq("1-Strong Buy", "2-Buy", "3-Hold", "9-Garbage")
+    (1 to 24).foreach { i =>
+      Files.writeString(new java.io.File(day,
+        s"S$i.detailed-estimates.html").toPath,
+        estimateDoc(ranks(i % ranks.size), s"$i.25"))
+    }
+    // one file per input partition, as a weekly folder splits into many
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      val docs = RawZone.scanDocuments(spark, base.getAbsolutePath,
+        "2025-01-15", "detailed-estimates")
+      assert(docs.rdd.getNumPartitions === 24)
+      val pinned = EstimatesPipeline.tables(docs)
+      val unpinned = EstimatesPipeline.tables(docs, pin = false)
+      assert(pinned.keySet === unpinned.keySet && pinned.size === 6)
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      pinned.keys.foreach { t =>
+        val p = rows(pinned(t))
+        assert(p.nonEmpty, t)
+        assert(p === rows(unpinned(t)), t)
+      }
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   private def incomeDoc(dates: Seq[String]): String = {

@@ -4,6 +4,8 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -81,5 +83,43 @@ class FetchSpec extends AnyFunSuite {
       sleep = ms => slept += ms)
     assert(report.succeeded === 3)
     assert(slept.toSeq === Seq(100L, 100L)) // no delay before the first
+  }
+
+  private def allFiles(dir: java.nio.file.Path): Seq[String] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(dir.relativize(_).toString).toSeq.sorted
+    finally s.close()
+  }
+
+  test("sweep replaces by atomic move and leaves no temp file behind") {
+    val dir = Files.createTempDirectory("graft_atomic")
+    val day = Files.createDirectories(dir.resolve("2024-01-15"))
+    def target(sym: String) = day.resolve(s"$sym.detailed-estimates.html")
+    // a reader holding last week's OK document (a hard link to it) keeps
+    // the whole old body: the new one arrives by rename, not in place
+    Files.writeString(target("OK"), "old")
+    Files.createLink(dir.resolve("held"), target("OK"))
+    // a target that is a non-empty directory fails at the move, after the
+    // temp file was written
+    Files.createDirectories(target("BUSY"))
+    Files.writeString(target("BUSY").resolve("x"), "keep")
+    val targets = Seq("OK", "FAIL", "BUSY", "OK").map(sym =>
+      Fetch.Target(s"u/$sym", target(sym)))
+    var calls = 0
+    val report = Fetch.sweep(targets, url => {
+      calls += 1
+      if (url.endsWith("FAIL")) throw new java.io.IOException("reset")
+      s"$url#$calls".getBytes("UTF-8")
+    })
+    assert(report.attempted === 4 && report.succeeded === 2 &&
+      report.failed === 2)
+    assert(report.errors.map(_._1) === Seq("u/FAIL", "u/BUSY"))
+    assert(allFiles(dir) === Seq(
+      "2024-01-15/BUSY.detailed-estimates.html/x",
+      "2024-01-15/OK.detailed-estimates.html",
+      "held"))
+    assert(Files.readString(target("OK")) === "u/OK#4")
+    assert(Files.readString(dir.resolve("held")) === "old")
   }
 }
