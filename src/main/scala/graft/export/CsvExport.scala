@@ -7,13 +7,6 @@ import org.apache.spark.sql.functions._
   * `dump-dat.rkt:39-76`): every column rendered `coalesce(col::text, '')`,
   * header row, PK-ordered, one snapshot per date (the A3 distinct-date
   * loop, `dump-dolt-statements.rkt:81-93`).
-  *
-  * Two write paths:
-  *  - [[writePerDate]] mirrors the reference's driver loop — one ordered
-  *    single-file CSV per date (a Dolt-import-shaped artifact);
-  *  - [[writePartitioned]] is the 100-TB path — one job, `partitionBy(date)`,
-  *    no driver iteration; per-file ordering preserved via
-  *    `sortWithinPartitions` after repartitioning by the date column.
   */
 object CsvExport {
 
@@ -50,14 +43,4 @@ object CsvExport {
     }
     dates
   }
-
-  /** Scale path: single job, hash-partitioned by date then sorted within
-    * each partition — no driver-side date loop. */
-  def writePartitioned(df: DataFrame, dateCol: String, pk: Seq[String],
-                       baseDir: String): Unit =
-    projectForCsv(df.repartition(col(dateCol))
-      .sortWithinPartitions(pk.map(col): _*))
-      .write.mode("overwrite").option("header", true)
-      .option("emptyValue", "")
-      .partitionBy(dateCol).csv(baseDir)
 }

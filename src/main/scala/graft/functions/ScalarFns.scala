@@ -33,15 +33,6 @@ object ScalarFns {
     when(s === "NA" || s === "", lit(null)).otherwise(s).cast("double")
   }
 
-  /** Same, into the exact `numeric` → Decimal(38,4) type of the model. */
-  def sanitizeToMoney(c: Column): Column = {
-    val s = sanitizeNumericText(c)
-    // Decimal cast rejects scientific notation in ANSI contexts; go via
-    // double (exact for the integral magnitudes Zacks publishes).
-    when(s === "NA" || s === "", lit(null))
-      .otherwise(s).cast("double").cast(Schemas.Money)
-  }
-
   /** F2 — simple statement-cell sanitizer: trim + strip commas
     * (`income-statement-transform-load.rkt:53-55`). */
   def trimCommas(c: Column): Column = regexp_replace(trim(c), ",", "")

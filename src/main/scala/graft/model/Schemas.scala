@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * Postgres `numeric` (unbounded) maps to `DecimalType(38, 4)`: the largest
   * observed magnitude is a `T`-suffixed figure expanded ×1e12 then unit-scaled
   * ×1e6 (~1e19), comfortably inside 38-4=34 integer digits. Enum columns stay
-  * `StringType`; membership is validated at load (see [[Enums.isValid]]).
+  * `StringType`; rank/score membership is the `isin` filter in
+  * [[graft.pipelines.EstimatesPipeline.parsed]], which drops the document.
   */
 object Schemas {
 
@@ -25,12 +26,6 @@ object Schemas {
     val score: Seq[String] = Seq("A", "B", "C", "D", "F")
     val statementPeriod: Seq[String] = Seq("Year", "Quarter")
     val when: Seq[String] = Seq("Before market open", "After market close")
-
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions._
-    /** CHECK-constraint analogue: membership in the vocabulary (null ok). */
-    def isValid(c: Column, vocab: Seq[String]): Column =
-      c.isNull || c.isin(vocab: _*)
   }
 
   /** Money figure: Postgres unbounded numeric. */

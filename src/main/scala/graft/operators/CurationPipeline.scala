@@ -32,7 +32,7 @@ import graft.operators.{TextAnalysis => TA}
   * stage's lineage replays an earlier stage's work.
   *
   * [[stages]] exposes the cumulative survivor frame after every stage for
-  * per-stage wall attribution (ScaleSweep `pipe` mode → SCALE.md).
+  * per-stage wall attribution (recorded in SCALE.md "pipe10 (round 10)").
   */
 object CurationPipeline {
 

@@ -138,7 +138,8 @@ object StatementsPipeline {
 
   /** The load half of [[loadIncomeStatement]] (J1 guard with the quarterly
     * D&A null-safe facts + K1 dedup-append) over already-parsed rows —
-    * split out so the scale sweep can clock parse and load separately. */
+    * split out for callers that parse once and load later, like
+    * perfbench's statements daily run. */
   def loadIncomeRows(existing: DataFrame, incoming: DataFrame): DataFrame = {
     val facts = Schemas.incomeStatement.fieldNames.toSeq
       .diff(Seq("act_symbol", "date", "period",

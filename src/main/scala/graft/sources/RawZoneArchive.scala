@@ -18,11 +18,10 @@ import scala.jdk.CollectionConverters._
   */
 object RawZoneArchive {
 
-  /** Archive `<base>/<date>/` to `<base>/<date>.zip`; optionally delete the
-    * folder afterwards (the reference always does). Returns the number of
-    * files archived. */
-  def archiveDay(baseDir: String, date: String,
-                 deleteOriginals: Boolean = true): Int = {
+  /** Archive `<base>/<date>/` to `<base>/<date>.zip`, then delete the
+    * archived files and the folder, as the reference does. Returns the
+    * number of files archived. */
+  def archiveDay(baseDir: String, date: String): Int = {
     val dir = Paths.get(baseDir, date)
     require(Files.isDirectory(dir), s"no raw-zone folder $dir")
     val zipPath = Paths.get(baseDir, s"$date.zip")
@@ -39,13 +38,11 @@ object RawZoneArchive {
       try in.transferTo(out) finally in.close()
       out.closeEntry()
     } finally out.close()
-    if (deleteOriginals) {
-      files.foreach(Files.delete)
-      // only regular files were archived; leave the folder in place if
-      // something else (a subdirectory) still lives there
-      try Files.delete(dir)
-      catch { case _: java.nio.file.DirectoryNotEmptyException => () }
-    }
+    files.foreach(Files.delete)
+    // only regular files were archived; leave the folder in place if
+    // something else (a subdirectory) still lives there
+    try Files.delete(dir)
+    catch { case _: java.nio.file.DirectoryNotEmptyException => () }
     files.size
   }
 

@@ -1,6 +1,8 @@
 package graft.sources
 
+import java.io.FileOutputStream
 import java.nio.file.Files
+import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** K7 — archive + restore round trip over a raw-zone date folder. */
@@ -23,5 +25,22 @@ class RawZoneArchiveSpec extends AnyFunSuite {
     assert(restored === 2)
     assert(Files.readString(new java.io.File(day,
       "AAPL.detailed-estimates.html").toPath) === "<html>a</html>")
+  }
+
+  test("restoreDay refuses a zip entry that escapes the raw zone") {
+    val root = Files.createTempDirectory("graft_slip")
+    val base = Files.createDirectory(root.resolve("zone"))
+    val out = new ZipOutputStream(
+      new FileOutputStream(base.resolve("2024-01-15.zip").toFile))
+    try {
+      out.putNextEntry(new ZipEntry("../outside.html"))
+      out.write("<html>x</html>".getBytes("UTF-8"))
+      out.closeEntry()
+    } finally out.close()
+
+    intercept[IllegalArgumentException] {
+      RawZoneArchive.restoreDay(base.toString, "2024-01-15")
+    }
+    assert(!Files.exists(root.resolve("outside.html")))
   }
 }
