@@ -24,7 +24,8 @@ object CsvExport {
     // a global orderBy would add a range-partitioning sample job that a
     // one-file output does not need
     projectForCsv(df.repartition(1).sortWithinPartitions(pk.map(col): _*))
-      .write.mode("overwrite").option("header", true)
+      .write.mode("overwrite").options(graft.sinks.LocalFs.writeOptions)
+      .option("header", true)
       // bare empty for NULL, like the reference's coalesce(col::text, '')
       .option("emptyValue", "").csv(path)
 

@@ -22,7 +22,7 @@ object JsonlExport {
                    shards: Int, maxRecordsPerShard: Int): Unit =
     df.repartition(shards, hash(col(idCol)))
       .sortWithinPartitions(col(idCol))
-      .write.mode("overwrite")
+      .write.mode("overwrite").options(graft.sinks.LocalFs.writeOptions)
       .option("maxRecordsPerFile", maxRecordsPerShard)
       .json(path)
 }

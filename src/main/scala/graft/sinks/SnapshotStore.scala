@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions.col
   *
   *  - tables persist as parquet partitioned by their date column (K3's
   *    "version per date" becomes a partition per date — time travel is a
-  *    partition filter, and loaders rewrite only touched partitions);
+  *    partition filter); [[write]] is a static-mode overwrite, so each
+  *    write replaces the whole table at its path, untouched dates included;
   *  - K6's `vacuum full` / `reindex` becomes [[compact]]: rewrite a table's
   *    files at a target partition count (small-file compaction after many
   *    incremental appends). Postgres-side index maintenance has no Spark
@@ -20,7 +21,8 @@ object SnapshotStore {
     * gives every per-date reader partition pruning for free. */
   def write(df: DataFrame, path: String,
             partitionCol: String = "date"): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
+    df.write.mode("overwrite").options(LocalFs.writeOptions)
+      .partitionBy(partitionCol).parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -60,7 +62,8 @@ object SnapshotStore {
     val tmp = path.stripSuffix("/") + ".compact.tmp"
     df.repartition(col(partitionCol),
       graft.operators.SkewOps.rowSalt(filesPerPartition))
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
+      .write.mode("overwrite").options(LocalFs.writeOptions)
+      .partitionBy(partitionCol).parquet(tmp)
     fs.delete(old, true)
     if (!fs.rename(dst, old))
       throw new java.io.IOException(s"compact: cannot move $dst aside")

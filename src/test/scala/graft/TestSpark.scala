@@ -19,6 +19,11 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // fixture-sized global windows are deliberate; WindowExec's
+    // "No Partition Defined" warning would otherwise flood the test log
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
 }
