@@ -9,6 +9,10 @@ import org.apache.spark.sql.types._
   * the `to_integer_rank` ordinal helper (realized in
   * [[graft.functions.ScalarFns.toIntegerRank]]).
   *
+  * Each struct is the only statement of its table's columns, their order
+  * and their types: the pipelines project every table but `eps_history`
+  * from it.
+  *
   * Postgres `numeric` (unbounded) maps to `DecimalType(38, 4)`: the largest
   * observed magnitude is a `T`-suffixed figure expanded ×1e12 then unit-scaled
   * ×1e6 (~1e19), comfortably inside 38-4=34 integer digits. Enum columns stay

@@ -28,46 +28,43 @@ object CalendarPipeline {
     * balance-sheet-assets (symbol, date) history J2 derives windows from. */
   def runEarnings(existing: DataFrame, payloads: DataFrame,
                   folderDate: java.sql.Date,
-                  stmtDates: DataFrame): DataFrame = {
-    // Multi-consumer intermediates use a LAZY localCheckpoint rather than
-    // cache(): same materialize-once behavior on first action, but the
-    // storage is plain RDD blocks the ContextCleaner frees once the plan is
-    // garbage-collected — a cache() here pins cache-manager storage for the
-    // session, which in a daily loop over date folders accumulates until
-    // eviction thrash (the caller would have to know to unpersist a plan it
-    // never built).
-    val fresh = CalendarExtract
-      .earningsRows(payloads, col("raw"), col("event_date"))
-      .filter(col("act_symbol").isNotNull && col("date").isNotNull)
-      // consumed by K5's retraction probe AND K1's insert
-      .localCheckpoint(eager = false)
-    val afterK4 = existing.filter(col("date") < lit(folderDate))
-    // K1 consumes `existing` twice (PK anti-join probe + the union) — for a
-    // stored-table input that is two cheap pruned scans, but here the
-    // existing side is the derived K4∘K5 plan: materialize it once
-    val retracted =
-      LoadOps.slideForwardRetract(afterK4, fresh, "act_symbol", "date")
-        .localCheckpoint(eager = false)
-    val loaded = LoadOps.dedupAppend(retracted, fresh,
-      Schemas.primaryKeys("earnings_calendar"))
-    LoadOps.supersededCleanup(loaded, stmtDates)
-  }
+                  stmtDates: DataFrame): DataFrame =
+    LoadOps.supersededCleanup(
+      load(existing,
+        CalendarExtract.earningsRows(payloads, col("raw"), col("event_date")),
+        "earnings_calendar", "date", folderDate),
+      stmtDates)
 
   /** Dividends: same shape minus the J2 cleanup; PK is (act_symbol,
     * ex_date) and the slide-forward window runs on `ex_date`. */
   def runDividends(existing: DataFrame, payloads: DataFrame,
-                   folderDate: java.sql.Date): DataFrame = {
-    val fresh = CalendarExtract.dividendRows(payloads, col("raw"))
-      .filter(col("act_symbol").isNotNull && col("ex_date").isNotNull &&
-        col("amount").isNotNull)
-      // K5 probe + K1 insert; lazy checkpoint, not cache — see runEarnings
+                   folderDate: java.sql.Date): DataFrame =
+    load(existing, CalendarExtract.dividendRows(payloads, col("raw")),
+      "dividend_calendar", "ex_date", folderDate)
+
+  /** K4 → K5 → K1 of parsed calendar rows into `table`. Rows missing a
+    * `Schemas` NOT NULL column are dropped before the load.
+    *
+    * Both multi-consumer intermediates use a LAZY localCheckpoint rather
+    * than cache(): same materialize-once behavior on first action, but the
+    * storage is plain RDD blocks the ContextCleaner frees once the plan is
+    * garbage-collected — a cache() here pins cache-manager storage for the
+    * session, which in a daily loop over date folders accumulates until
+    * eviction thrash (the caller would have to know to unpersist a plan it
+    * never built). `fresh` feeds K5's retraction probe and K1's insert; the
+    * K4∘K5 plan is K1's existing side, which K1 reads twice (PK anti-join
+    * probe + the union) — two cheap pruned scans for a stored table, a
+    * re-run of K4∘K5 for a derived one. */
+  private def load(existing: DataFrame, parsed: DataFrame, table: String,
+                   dateCol: String, folderDate: java.sql.Date): DataFrame = {
+    val fresh = parsed
+      .filter(Schemas.tables(table).fields.filterNot(_.nullable)
+        .map(f => col(f.name).isNotNull).reduce(_ && _))
       .localCheckpoint(eager = false)
-    val afterK4 = existing.filter(col("ex_date") < lit(folderDate))
+    val afterK4 = existing.filter(col(dateCol) < lit(folderDate))
     val retracted =
-      LoadOps.slideForwardRetract(afterK4, fresh, "act_symbol", "ex_date")
-        // K1 reads the derived existing side twice
+      LoadOps.slideForwardRetract(afterK4, fresh, "act_symbol", dateCol)
         .localCheckpoint(eager = false)
-    LoadOps.dedupAppend(retracted, fresh,
-      Schemas.primaryKeys("dividend_calendar"))
+    LoadOps.dedupAppend(retracted, fresh, Schemas.primaryKeys(table))
   }
 }

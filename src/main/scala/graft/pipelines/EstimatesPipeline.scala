@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ShortType
 import graft.extract.EstimateExtract
 import graft.functions.{DateFns, ScalarFns}
 import graft.model.Schemas
@@ -94,53 +95,32 @@ object EstimatesPipeline {
       else parsed(docs)
     val per = byPeriod(base)
 
-    val rankScore = base.select(
-      col("act_symbol"), col("folder_date").as("date"),
-      col("p").getField("rank").as("rank"),
-      col("p").getField("value").as("value"),
-      col("p").getField("growth").as("growth"),
-      col("p").getField("momentum").as("momentum"),
-      col("p").getField("vgm").as("vgm"))
+    // The four period tables take their columns from `Schemas`: each value
+    // column `c` is the section's `c` cell (`_` written `-`), typed by its
+    // struct field; `period_end_date` is `headerSection`'s column header.
+    def periodTable(table: String, section: String,
+                    headerSection: String): DataFrame =
+      per.select(Schemas.tables(table).fields.toSeq.map { f =>
+        val c = f.name match {
+          case "act_symbol" | "period" => col(f.name)
+          case "date" => col("folder_date")
+          case "period_end_date" =>
+            DateFns.endOfMonthFromHeader(cellFor(headerSection, "date"))
+          case name =>
+            val cell = cellFor(section, name.replace('_', '-'))
+            f.dataType match {
+              case ShortType => short(cell)
+              case Schemas.Money => money(cell)
+            }
+        }
+        c.as(f.name)
+      }: _*)
 
-    // Sales estimates use the EPS section's period header — coverage is
-    // sometimes worse on the sales side (`estimate-transform-load.rkt:252-253`).
-    val salesEstimate = per.select(
-      col("act_symbol"), col("folder_date").as("date"), col("period"),
-      DateFns.endOfMonthFromHeader(cellFor("eps-estimates", "date"))
-        .as("period_end_date"),
-      money(cellFor("sales-estimates", "consensus")).as("consensus"),
-      short(cellFor("sales-estimates", "count")).as("count"),
-      money(cellFor("sales-estimates", "high")).as("high"),
-      money(cellFor("sales-estimates", "low")).as("low"),
-      money(cellFor("sales-estimates", "year-ago")).as("year_ago"))
-
-    val epsEstimate = per.select(
-      col("act_symbol"), col("folder_date").as("date"), col("period"),
-      DateFns.endOfMonthFromHeader(cellFor("eps-estimates", "date"))
-        .as("period_end_date"),
-      money(cellFor("eps-estimates", "consensus")).as("consensus"),
-      short(cellFor("eps-estimates", "count")).as("count"),
-      money(cellFor("eps-estimates", "recent")).as("recent"),
-      money(cellFor("eps-estimates", "high")).as("high"),
-      money(cellFor("eps-estimates", "low")).as("low"),
-      money(cellFor("eps-estimates", "year-ago")).as("year_ago"))
-
-    val epsRevision = per.select(
-      col("act_symbol"), col("folder_date").as("date"), col("period"),
-      DateFns.endOfMonthFromHeader(cellFor("eps-revisions", "date"))
-        .as("period_end_date"),
-      short(cellFor("eps-revisions", "up-7")).as("up_7"),
-      short(cellFor("eps-revisions", "up-30")).as("up_30"),
-      short(cellFor("eps-revisions", "up-60")).as("up_60"),
-      short(cellFor("eps-revisions", "down-7")).as("down_7"),
-      short(cellFor("eps-revisions", "down-30")).as("down_30"),
-      short(cellFor("eps-revisions", "down-60")).as("down_60"))
-
-    val epsPerception = per.select(
-      col("act_symbol"), col("folder_date").as("date"), col("period"),
-      DateFns.endOfMonthFromHeader(cellFor("eps-upside", "date"))
-        .as("period_end_date"),
-      money(cellFor("eps-upside", "most-accurate")).as("most_accurate"))
+    val rankScore = base.select(Schemas.rankScore.fieldNames.toSeq.map {
+      case "act_symbol" => col("act_symbol")
+      case "date" => col("folder_date").as("date")
+      case f => col("p").getField(f).as(f)
+    }: _*)
 
     val epsHistory = base.withColumn("zper",
       explode(array(EstimateExtract.HistoryQuarters.map(lit): _*)))
@@ -153,10 +133,16 @@ object EstimatesPipeline {
 
     Map(
       "rank_score" -> rankScore,
-      "sales_estimate" -> salesEstimate,
-      "eps_estimate" -> epsEstimate,
-      "eps_revision" -> epsRevision,
-      "eps_perception" -> epsPerception,
+      // Sales estimates use the EPS section's period header — coverage is
+      // sometimes worse on the sales side (`estimate-transform-load.rkt:252-253`).
+      "sales_estimate" ->
+        periodTable("sales_estimate", "sales-estimates", "eps-estimates"),
+      "eps_estimate" ->
+        periodTable("eps_estimate", "eps-estimates", "eps-estimates"),
+      "eps_revision" ->
+        periodTable("eps_revision", "eps-revisions", "eps-revisions"),
+      "eps_perception" ->
+        periodTable("eps_perception", "eps-upside", "eps-upside"),
       "eps_history" -> epsHistory)
   }
 

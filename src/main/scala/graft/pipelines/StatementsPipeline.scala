@@ -17,11 +17,14 @@ import graft.operators.LoadOps
   * → typed projection with F4 ×1e6 scaling (per-share columns exempt) → J1
   * prior-period poison guard → K1 dedup-append.
   *
+  * Every projection and J1 fact list comes from the table's `Schemas`
+  * struct; the only per-column policy is [[PerShare]] and [[AnnualOnly]].
+  *
   * Divergence from the reference, by design: a cell that fails its decimal
   * cast becomes NULL instead of aborting the (doc, period, date) insert —
   * Postgres enforced that with cast errors + rollback; a distributed load
-  * prefers tolerant nulls over task retries. Strictness can be layered back
-  * with a filter on the raw strings.
+  * prefers tolerant nulls over task retries. `incomeStatement(strict = true)`
+  * keeps the reference's abort semantics instead.
   */
 object StatementsPipeline {
 
@@ -76,87 +79,66 @@ object StatementsPipeline {
         (k, _) => k =!= "date")),
       v => v.try_cast("double").isNull)
 
-  private def explodeRows(parsedDocs: DataFrame,
-                          strict: Boolean = false): DataFrame = {
-    val rows = parsedDocs.select(col("act_symbol"), col("folder_date"),
-      explode(col("p").getField("rows")).as("r"))
-    if (strict) rows.filter(strictRowOk) else rows
-  }
+  /** Per-share columns: figures per share, not in millions, so F4 does not
+    * scale them (`balance-sheet-transform-load.rkt:432`). */
+  private val PerShare: Set[String] = Set(
+    "diluted_eps_before_non_recurring_items", "diluted_net_eps",
+    "book_value_per_share")
 
-  /** Income statement → `income_statement` rows
-    * (`income-statement-transform-load.rkt:106-277`). Quarterly documents
-    * store NULL for the two D&A columns (`:219-226`), and those columns are
-    * null-compared in the J1 guard (`:141-148`). */
-  def incomeStatement(docs: DataFrame, strict: Boolean = false): DataFrame = {
-    val parsedDocs = staleGuard(
-      docs.withColumn("p", parseIncomeUdf(col("html"))),
-      guardPeriod = "quarterly", twoDigitYear = true)
+  /** Income D&A columns: stored only from annual rows, NULL on quarterly
+    * ones (`income-statement-transform-load.rkt:219-226`), so J1 compares
+    * them null-safely (`:141-148`). */
+  private val AnnualOnly: Set[String] = Set(
+    "income_before_depreciation_and_amortization",
+    "depreciation_and_amortization")
+
+  /** One (period, date-column) row per parsed statement column, projected
+    * onto `table`'s `Schemas` struct. */
+  private def rows(parsedDocs: DataFrame, table: String,
+                   twoDigitYear: Boolean, strict: Boolean = false): DataFrame = {
+    val exploded = parsedDocs.select(col("act_symbol"), col("folder_date"),
+      explode(col("p").getField("rows")).as("r"))
     val annual = col("r").getField("period") === "annual"
-    explodeRows(parsedDocs, strict).select(
-      col("act_symbol"),
-      DateFns.parseStatementDate(entry("date"), twoDigitYear = true)
-        .as("date"),
-      periodEnum.as("period"),
-      moneyM(entry("sales")).as("sales"),
-      moneyM(entry("cost_of_goods")).as("cost_of_goods"),
-      moneyM(entry("gross_profit")).as("gross_profit"),
-      moneyM(entry("selling_administrative_depreciation_amortization_expenses"))
-        .as("selling_administrative_depreciation_amortization_expenses"),
-      moneyM(entry("income_after_depreciation_and_amortization"))
-        .as("income_after_depreciation_and_amortization"),
-      moneyM(entry("non_operating_income")).as("non_operating_income"),
-      moneyM(entry("interest_expense")).as("interest_expense"),
-      moneyM(entry("pretax_income")).as("pretax_income"),
-      moneyM(entry("income_taxes")).as("income_taxes"),
-      moneyM(entry("minority_interest")).as("minority_interest"),
-      moneyM(entry("investment_gains")).as("investment_gains"),
-      moneyM(entry("other_income")).as("other_income"),
-      moneyM(entry("income_from_continuing_operations"))
-        .as("income_from_continuing_operations"),
-      moneyM(entry("extras_and_discontinued_operations"))
-        .as("extras_and_discontinued_operations"),
-      moneyM(entry("net_income")).as("net_income"),
-      when(annual, moneyM(entry("income_before_depreciation_and_amortization")))
-        .otherwise(lit(null).cast(Schemas.Money))
-        .as("income_before_depreciation_and_amortization"),
-      when(annual, moneyM(entry("depreciation_and_amortization")))
-        .otherwise(lit(null).cast(Schemas.Money))
-        .as("depreciation_and_amortization"),
-      moneyM(entry("average_shares")).as("average_shares"),
-      money(entry("diluted_eps_before_non_recurring_items"))
-        .as("diluted_eps_before_non_recurring_items"),
-      money(entry("diluted_net_eps")).as("diluted_net_eps"))
+    (if (strict) exploded.filter(strictRowOk) else exploded)
+      .select(Schemas.tables(table).fieldNames.toSeq.map {
+        case "act_symbol" => col("act_symbol")
+        case "date" =>
+          DateFns.parseStatementDate(entry("date"), twoDigitYear).as("date")
+        case "period" => periodEnum.as("period")
+        case c =>
+          val v = if (PerShare(c)) money(entry(c)) else moneyM(entry(c))
+          val byPeriod =
+            if (AnnualOnly(c))
+              when(annual, v).otherwise(lit(null).cast(Schemas.Money))
+            else v
+          byPeriod.as(c)
+      }: _*)
       .filter(col("date").isNotNull)
   }
 
-  /** J1+K1 for income statement: guard against the stored table, then
-    * dedup-append. The two D&A columns null-compare per the reference.
-    * `strict` forwards the reference's abort-on-uncastable-cell semantics. */
+  /** Income statement → `income_statement` rows
+    * (`income-statement-transform-load.rkt:106-277`). */
+  def incomeStatement(docs: DataFrame, strict: Boolean = false): DataFrame =
+    rows(staleGuard(docs.withColumn("p", parseIncomeUdf(col("html"))),
+      guardPeriod = "quarterly", twoDigitYear = true),
+      "income_statement", twoDigitYear = true, strict)
+
+  /** J1+K1 for income statement documents. `strict` forwards the
+    * reference's abort-on-uncastable-cell semantics. */
   def loadIncomeStatement(existing: DataFrame, docs: DataFrame,
                           strict: Boolean = false): DataFrame =
     loadIncomeRows(existing, incomeStatement(docs, strict))
 
-  /** The load half of [[loadIncomeStatement]] (J1 guard with the quarterly
-    * D&A null-safe facts + K1 dedup-append) over already-parsed rows —
+  /** The load half of [[loadIncomeStatement]] over already-parsed rows —
     * split out for callers that parse once and load later, like
     * perfbench's statements daily run. */
-  def loadIncomeRows(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val facts = Schemas.incomeStatement.fieldNames.toSeq
-      .diff(Seq("act_symbol", "date", "period",
-        "income_before_depreciation_and_amortization",
-        "depreciation_and_amortization"))
-    val guarded = LoadOps.priorPeriodGuard(existing, incoming, facts,
-      nullSafeFacts = Seq("income_before_depreciation_and_amortization",
-        "depreciation_and_amortization"))
-    LoadOps.dedupAppend(existing, guarded,
-      Schemas.primaryKeys("income_statement"))
-  }
+  def loadIncomeRows(existing: DataFrame, incoming: DataFrame): DataFrame =
+    loadStatement(existing, incoming, "income_statement")
 
   /** Balance sheet → three tables from one parse
     * (`balance-sheet-transform-load.rkt:115-463`, one transaction per
-    * document covering assets/liabilities/equity).
-    * `book_value_per_share` is the one unscaled column (`:432`). */
-  def balanceSheet(docs: DataFrame, strict: Boolean = false,
+    * document covering assets/liabilities/equity). */
+  def balanceSheet(docs: DataFrame,
                    pin: Boolean = true): Map[String, DataFrame] = {
     // pin: as in EstimatesPipeline.tables — materialize the parsed base
     // (lazy localCheckpoint, ContextCleaner-freed) only when the caller
@@ -167,60 +149,32 @@ object StatementsPipeline {
       guardPeriod = "quarterly", twoDigitYear = false)
     val parsedDocs =
       if (pin) parsed0.localCheckpoint(eager = false) else parsed0
-    val rows = explodeRows(parsedDocs, strict)
-    def table(name: String, scaledCols: Seq[String],
-              unscaledCols: Seq[String] = Nil): DataFrame =
-      rows.select(Seq(
-        col("act_symbol"),
-        DateFns.parseStatementDate(entry("date"), twoDigitYear = false)
-          .as("date"),
-        periodEnum.as("period")) ++
-        scaledCols.map(c => moneyM(entry(c)).as(c)) ++
-        unscaledCols.map(c => money(entry(c)).as(c)): _*)
-        .filter(col("date").isNotNull)
-    Map(
-      "balance_sheet_assets" -> table("balance_sheet_assets",
-        Schemas.balanceSheetAssets.fieldNames.toSeq
-          .diff(Seq("act_symbol", "date", "period"))),
-      "balance_sheet_liabilities" -> table("balance_sheet_liabilities",
-        Schemas.balanceSheetLiabilities.fieldNames.toSeq
-          .diff(Seq("act_symbol", "date", "period"))),
-      "balance_sheet_equity" -> table("balance_sheet_equity",
-        Schemas.balanceSheetEquity.fieldNames.toSeq
-          .diff(Seq("act_symbol", "date", "period", "book_value_per_share")),
-        unscaledCols = Seq("book_value_per_share")))
+    Seq("balance_sheet_assets", "balance_sheet_liabilities",
+      "balance_sheet_equity")
+      .map(t => t -> rows(parsedDocs, t, twoDigitYear = false)).toMap
   }
 
   /** Cash-flow statement → `cash_flow_statement` rows. `layout2024` picks
     * the production U7 layout (both periods); the legacy U6 layout is
     * annual-only (`cash-flow-statement-transform-load.rkt:265` vs
-    * `.2024-02-01.rkt:104-110`). `diluted_net_eps` unscaled. */
-  def cashFlow(docs: DataFrame, layout2024: Boolean,
-               strict: Boolean = false): DataFrame = {
+    * `.2024-02-01.rkt:104-110`). */
+  def cashFlow(docs: DataFrame, layout2024: Boolean): DataFrame = {
     val parsed0 = docs.withColumn("p",
       if (layout2024) parseCf2024Udf(col("html"))
       else parseCfLegacyUdf(col("html")))
-    val parsedDocs = staleGuard(parsed0,
-      guardPeriod = "annual", twoDigitYear = false)
-    val scaled = Schemas.cashFlowStatement.fieldNames.toSeq
-      .diff(Seq("act_symbol", "date", "period", "diluted_net_eps"))
-    explodeRows(parsedDocs, strict).select(Seq(
-      col("act_symbol"),
-      DateFns.parseStatementDate(entry("date"), twoDigitYear = false)
-        .as("date"),
-      periodEnum.as("period")) ++
-      scaled.map(c => moneyM(entry(c)).as(c)) :+
-      money(entry("diluted_net_eps")).as("diluted_net_eps"): _*)
-      .filter(col("date").isNotNull)
+    rows(staleGuard(parsed0, guardPeriod = "annual", twoDigitYear = false),
+      "cash_flow_statement", twoDigitYear = false)
   }
 
-  /** J1+K1 for a statement table with plain equality facts (balance sheet
-    * tables and cash-flow). */
+  /** J1+K1 for a statement table: the prior-period guard against the stored
+    * table over every non-key column ([[AnnualOnly]] ones null-safe), then
+    * dedup-append. */
   def loadStatement(existing: DataFrame, incoming: DataFrame,
                     table: String): DataFrame = {
-    val facts = Schemas.tables(table).fieldNames.toSeq
-      .diff(Seq("act_symbol", "date", "period"))
-    val guarded = LoadOps.priorPeriodGuard(existing, incoming, facts)
-    LoadOps.dedupAppend(existing, guarded, Schemas.primaryKeys(table))
+    val pk = Schemas.primaryKeys(table)
+    val (nullSafe, facts) =
+      Schemas.tables(table).fieldNames.toSeq.diff(pk).partition(AnnualOnly)
+    val guarded = LoadOps.priorPeriodGuard(existing, incoming, facts, nullSafe)
+    LoadOps.dedupAppend(existing, guarded, pk)
   }
 }

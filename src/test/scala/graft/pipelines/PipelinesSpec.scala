@@ -72,7 +72,7 @@ class PipelinesSpec extends AnyFunSuite {
     assert(rows.map(r => r.getDecimal(4).doubleValue()).toSeq ===
       Seq(1.5, 2.5))
     assert(rows.head.getDate(3) === Date.valueOf("2025-03-31")) // D1
-    assert(rows.head.getShort(5) === 4.toShort)                 // count
+    assert(rows.head.getAs[Short]("count") === 4.toShort)       // count
 
     val hist = tables("eps_history").filter(col("act_symbol") === "AAPL")
     assert(hist.count() === 4)
