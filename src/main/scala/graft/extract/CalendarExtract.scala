@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import graft.functions.ScalarFns
+import graft.model.Schemas
 
 /** U8 — calendar payload parser (`earnings-calendar-transform-load.rkt:64-70`,
   * `dividend-calendar-transform-load.rkt:64-70`).
@@ -29,13 +30,15 @@ object CalendarExtract {
 
   /** Earnings rows: index 1 = act_symbol, index 4 = amc/bmo/-- mapped to the
     * `when` enum or NULL (`earnings-calendar-transform-load.rkt:86-105`). */
-  def earningsRows(df: DataFrame, rawCol: Column, date: Column): DataFrame =
+  def earningsRows(df: DataFrame, rawCol: Column, date: Column): DataFrame = {
+    val Seq(bmo, amc) = Schemas.Enums.when
     explodeEntries(df, rawCol).select(
       element_at(col("entry"), 1).as("act_symbol"),
       date.cast("date").as("date"),
-      when(element_at(col("entry"), 4) === "amc", lit("After market close"))
-        .when(element_at(col("entry"), 4) === "bmo", lit("Before market open"))
+      when(element_at(col("entry"), 4) === "amc", lit(amc))
+        .when(element_at(col("entry"), 4) === "bmo", lit(bmo))
         .otherwise(lit(null).cast("string")).as("when"))
+  }
 
   /** Dividend rows: index 1 = act_symbol, 4 = $-prefixed amount, 6 = ex-date,
     * 8 = payable date or "--" (`dividend-calendar-transform-load.rkt:104-107`). */

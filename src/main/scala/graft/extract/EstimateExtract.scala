@@ -71,8 +71,11 @@ object EstimateExtract {
     SectionSpec("surprised_reported", 1, Seq("reported" -> 1, "estimate" -> 2))
 
   /** F1 — the estimate-cell sanitizer chain, string side
-    * (`estimate-transform-load.rkt:118-125`). Must stay in lockstep with
-    * `ScalarFns.sanitizeNumericText` (the Column form). */
+    * (`estimate-transform-load.rkt:118-125`). Agrees with
+    * `ScalarFns.sanitizeNumericText` (the Column form) on every Zacks cell
+    * shape, but not on other whitespace at the ends: `String.trim` strips
+    * every char ≤ U+0020, Spark's `trim` only spaces. Cells reach this
+    * already trimmed (`lastText`). ScalarFnsSpec pins both. */
   def sanitizeCell(raw: String): String = {
     val t = raw.trim
     val s1 = t.replace("T", "e12").replace("B", "e9")

@@ -60,11 +60,6 @@ final case class HElem(tag: String, attrs: Map[String, String],
     (Iterator.single(this) ++ descendants)
       .find(e => e.tag == t && e.attrs.get("id").contains(idValue))
 
-  /** Descendant element whose class attribute contains the given class. */
-  def byClass(t: String, cls: String): Option[HElem] =
-    (Iterator.single(this) ++ descendants).find(e =>
-      e.tag == t && e.attrs.get("class").exists(_.split("\\s+").contains(cls)))
-
   /** n-th (1-based) descendant with the given tag, document order. */
   def nthDescendant(t: String, n: Int): Option[HElem] = {
     val it = descendants.filter(_.tag == t).drop(n - 1)

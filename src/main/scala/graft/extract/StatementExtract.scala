@@ -24,7 +24,10 @@ object StatementExtract {
 
   final case class StmtParsed(rows: Seq[StmtRow])
 
-  /** F2 — trim + strip commas (`income-statement-transform-load.rkt:53-55`). */
+  /** F2 — trim + strip commas (`income-statement-transform-load.rkt:53-55`).
+    * The string side of `ScalarFns.trimCommas`, with the same whitespace
+    * difference as [[EstimateExtract.sanitizeCell]]: `String.trim` strips
+    * every char ≤ U+0020, Spark's `trim` only spaces. */
   def sanitizeStatementCell(raw: String): String =
     raw.trim.replace(",", "")
 

@@ -18,6 +18,10 @@ object ScalarFns {
     * strip `( ) ,`. Parentheses are *stripped, not negated* — "(12.3)" stays
     * positive, bug-compatible with the reference. The result is a still-string
     * normalized numeric ("1.5e9", "1234.5", "NA").
+    *
+    * `trim` strips spaces only, so a tab or newline at either end survives,
+    * where the string side (`EstimateExtract.sanitizeCell`, `String.trim`)
+    * strips it.
     */
   def sanitizeNumericText(c: Column): Column = {
     val t  = trim(c)
@@ -33,8 +37,8 @@ object ScalarFns {
     when(s === "NA" || s === "", lit(null)).otherwise(s).cast("double")
   }
 
-  /** F2 — simple statement-cell sanitizer: trim + strip commas
-    * (`income-statement-transform-load.rkt:53-55`). */
+  /** F2 — simple statement-cell sanitizer: trim (spaces only) + strip
+    * commas (`income-statement-transform-load.rkt:53-55`). */
   def trimCommas(c: Column): Column = regexp_replace(trim(c), ",", "")
 
   /** F3 — `'NA'` (or empty) → NULL passthrough. */

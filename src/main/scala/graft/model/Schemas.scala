@@ -10,8 +10,7 @@ import org.apache.spark.sql.types._
   * [[graft.functions.ScalarFns.toIntegerRank]]).
   *
   * Each struct is the only statement of its table's columns, their order
-  * and their types: the pipelines project every table but `eps_history`
-  * from it.
+  * and their types: the pipelines project every table from it.
   *
   * Postgres `numeric` (unbounded) maps to `DecimalType(38, 4)`: the largest
   * observed magnitude is a `T`-suffixed figure expanded ×1e12 then unit-scaled
@@ -146,17 +145,6 @@ object Schemas {
   /** `schema.sql:268-278` — PK (act_symbol, date); `when` nullable. */
   val earningsCalendar: StructType = StructType(Seq(
     sym, dt("date"), StructField("when", StringType, nullable = true)))
-
-  /** Symbol universe dimension (`nasdaq.symbol` per the P1 universe filter,
-    * `estimate-extract.rkt:57-85`). */
-  val symbolDim: StructType = StructType(Seq(
-    StructField("act_symbol", StringType, nullable = false),
-    StructField("nasdaq_symbol", StringType, nullable = false),
-    StructField("security_name", StringType, nullable = true),
-    StructField("is_etf", BooleanType, nullable = false),
-    StructField("is_test_issue", BooleanType, nullable = false),
-    StructField("is_next_shares", BooleanType, nullable = false),
-    StructField("last_seen", DateType, nullable = false)))
 
   /** Primary keys, table → PK column list (schema.sql PKEY constraints). */
   val primaryKeys: Map[String, Seq[String]] = Map(

@@ -42,6 +42,35 @@ object AsOfJoin {
            probeTime: String, factTime: String, factPayload: Seq[String],
            strict: Boolean = false, inner: Boolean = true): DataFrame = {
     val pCols = probes.columns.toSeq
+    // at equal times a fact sorts before the probe (>=) unless strict (>);
+    // among facts sharing (key, time) the fact STRUCT itself is the final
+    // sort key, so the carried payload is deterministic across runs and
+    // partitionings — the greatest struct wins (r12 ADVICE; struct ordering
+    // is lexicographic over (__ft, payload...), so this only disambiguates
+    // true same-time ties)
+    val sideOrder = if (strict) col("__side").desc else col("__side").asc
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("__t").asc, sideOrder, col("__f").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    val joined = sides(probes, facts, keys, probeTime, factTime, factPayload)
+      .withColumn("__last", last(col("__f"), ignoreNulls = true).over(w))
+      .filter(col("__side") === 1)
+    val matched = if (inner) joined.filter(col("__last").isNotNull) else joined
+    matched.select(
+      pCols.map(col) ++
+        (col("__last").getField("__ft").as(factTime) +:
+          factPayload.map(p => col("__last").getField(p).as(p))): _*)
+  }
+
+  /** Both sides of an as-of join in one frame: every probe column, `__t`
+    * (the row's time), `__side` (1 probe, 0 fact) and `__f`, the fact
+    * struct (`__ft` + payload), NULL on probe rows. Fact rows carry the
+    * keys and NULL in every other probe column. */
+  private def sides(probes: DataFrame, facts: DataFrame, keys: Seq[String],
+                    probeTime: String, factTime: String,
+                    factPayload: Seq[String]): DataFrame = {
+    val pCols = probes.columns.toSeq
     require(keys.nonEmpty, "as-of join needs at least one equality key")
     require(!factPayload.exists(pCols.contains),
       s"fact payload ${factPayload.mkString(",")} collides with probe columns")
@@ -63,26 +92,7 @@ object AsOfJoin {
         else lit(null).cast(probes.schema(c).dataType).as(c)) :+
         col(factTime).as("__t") :+ lit(0).as("__side") :+
         factStruct.as("__f"): _*)
-
-    // at equal times a fact sorts before the probe (>=) unless strict (>);
-    // among facts sharing (key, time) the fact STRUCT itself is the final
-    // sort key, so the carried payload is deterministic across runs and
-    // partitionings — the greatest struct wins (r12 ADVICE; struct ordering
-    // is lexicographic over (__ft, payload...), so this only disambiguates
-    // true same-time ties)
-    val sideOrder = if (strict) col("__side").desc else col("__side").asc
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__t").asc, sideOrder, col("__f").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val joined = pSide.unionByName(fSide)
-      .withColumn("__last", last(col("__f"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-    val matched = if (inner) joined.filter(col("__last").isNotNull) else joined
-    matched.select(
-      pCols.map(col) ++
-        (col("__last").getField("__ft").as(factTime) +:
-          factPayload.map(p => col("__last").getField(p).as(p))): _*)
+    pSide.unionByName(fSide)
   }
 
   /** Nearest-in-time as-of: for each probe row, the fact row closest in
@@ -102,22 +112,6 @@ object AsOfJoin {
                   factPayload: Seq[String],
                   inner: Boolean = true): DataFrame = {
     val pCols = probes.columns.toSeq
-    require(keys.nonEmpty, "as-of join needs at least one equality key")
-    require(!factPayload.exists(pCols.contains),
-      s"fact payload ${factPayload.mkString(",")} collides with probe columns")
-    val factStruct = struct(
-      (col(factTime).as("__ft") +: factPayload.map(col)): _*)
-    val factStructType = facts.select(factStruct.as("__f")).schema("__f").dataType
-    val pSide = probes.select(
-      pCols.map(col) :+
-        col(probeTime).as("__t") :+ lit(1).as("__side") :+
-        lit(null).cast(factStructType).as("__f"): _*)
-    val fSide = facts.select(
-      pCols.map(c =>
-        if (keys.contains(c)) col(c)
-        else lit(null).cast(probes.schema(c).dataType).as(c)) :+
-        col(factTime).as("__t") :+ lit(0).as("__side") :+
-        factStruct.as("__f"): _*)
     // equal-time facts sort before the probe: they land in the PREV frame
     // at distance 0 and win every tie; among facts sharing (key, time) the
     // fact struct is the final sort key so the carried payload is
@@ -128,7 +122,7 @@ object AsOfJoin {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNext = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val both = pSide.unionByName(fSide)
+    val both = sides(probes, facts, keys, probeTime, factTime, factPayload)
       .withColumn("__prev", last(col("__f"), ignoreNulls = true).over(wPrev))
       .withColumn("__next", first(col("__f"), ignoreNulls = true).over(wNext))
       .filter(col("__side") === 1)

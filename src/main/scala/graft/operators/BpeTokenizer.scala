@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   * word-frequency aggregation — the R merge iterations run over the
   * DISTINCT-word table (bounded vocabulary, the same bounded-state
   * argument as [[Similarity.trainCentroids]]'s centroid set), each
-  * iteration one mergeable pair-count aggregation plus a 1-row argmax
-  * collect and a scan-side rewrite, lineage cut per iteration via
+  * iteration one mergeable pair-count aggregation plus a collect of its
+  * top rows and a scan-side rewrite, lineage cut per iteration via
   * localCheckpoint. Apply is pure per-row string work under the tiny
   * driver-held merge list — zero joins, zero shuffles, fully codegen.
   *
@@ -54,15 +54,8 @@ object BpeTokenizer {
   def applyMerge(s: Column, l: String, r: String): Column =
     regexp_replace(s, s" $l $r(?= )", s" $l$r")
 
-  /** Learn the top-`ranks` byte-pair merges from the corpus: split
-    * `textCol` on single spaces, aggregate the distinct-word frequency
-    * table once, then per rank count occurrence-weighted adjacent symbol
-    * pairs, take the argmax (ties: count desc, then lexicographic (l, r) —
-    * deterministic across layouts), and rewrite the word table under the
-    * winning merge. Returns (merge_rank, lhs, rhs, merged, pair_count),
-    * `ranks` rows. Fails fast if the corpus exhausts its pairs early —
-    * callers pick `ranks` ≪ total byte mass. */
-  /** Each merge rank costs one driver round-trip (a 1-row argmax collect) —
+  /** Each pass costs one driver round-trip (a collect of the pair-count
+    * table's top rows), one merge rank per pass when unbatched —
     * negligible for small rank counts, but a 50k-rank production vocabulary
     * would mean 50k sequential driver round-trips over the word table. Cap
     * the driver-loop shape here; the production path for large vocabularies
@@ -71,42 +64,20 @@ object BpeTokenizer {
     * ranks per pass — see SCALE.md. */
   val MaxDriverLoopRanks = 256
 
-  def trainMerges(docs: DataFrame, textCol: String, ranks: Int): DataFrame = {
-    require(ranks <= MaxDriverLoopRanks,
-      s"trainMerges is a per-rank driver loop — $ranks ranks exceeds the " +
-        s"$MaxDriverLoopRanks cap; train large vocabularies on a sampled, " +
-        "frequency-capped word table instead (SCALE.md: BPE training bound)")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    var wf = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .select(symbolize(col("w")).as("s"), col("cnt"))
-      .localCheckpoint(eager = true)
-    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    var k = 1
-    while (k <= ranks) {
-      val toks = split(trim(col("s")), " ")
-      val best = wf
-        .select(col("cnt"), explode(zip_with(
-          slice(toks, lit(1), size(toks) - 1),
-          slice(toks, lit(2), size(toks) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("cnt").as("pair_count"))
-        .orderBy(desc("pair_count"), asc("l"), asc("r"))
-        .limit(1).collect()
-      require(best.nonEmpty, s"corpus exhausted its byte pairs at rank $k")
-      val (l, r, c) =
-        (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-      merges += ((k, l, r, l + r, c))
-      wf = wf.withColumn("s", applyMerge(col("s"), l, r))
-        .localCheckpoint(eager = true)
-      k += 1
-    }
-    merges.result().toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-  }
+  /** Learn the top-`ranks` byte-pair merges from the corpus: split
+    * `textCol` on single spaces, aggregate the distinct-word frequency
+    * table once, then per rank count occurrence-weighted adjacent symbol
+    * pairs, take the argmax (ties: count desc, then lexicographic (l, r) —
+    * deterministic across layouts), and rewrite the word table under the
+    * winning merge. Returns (merge_rank, lhs, rhs, merged, pair_count),
+    * `ranks` rows. Fails fast if the corpus exhausts its pairs early —
+    * callers pick `ranks` ≪ total byte mass.
+    *
+    * This is [[trainMergesBatched]] at `batch = 1`: a pass that picks one
+    * pair takes the first of its (count desc, l, r)-ordered candidates,
+    * which is the argmax, and checkpoints the word table after it. */
+  def trainMerges(docs: DataFrame, textCol: String, ranks: Int): DataFrame =
+    trainMergesBatched(docs, textCol, ranks, batch = 1)
 
   /** Batched variant of [[trainMerges]] — the SCALE.md "BPE training
     * bound" production path made real. Each pass aggregates the pair-count

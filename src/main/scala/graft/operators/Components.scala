@@ -162,27 +162,11 @@ object Components {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                nodes: DataFrame, nodeCol: String,
-               iters: Int = 5, damping: Double = 0.85): DataFrame = {
-    val n = nodes.select(col(nodeCol).as("node")).distinct()
-    val deg = edges.groupBy(srcCol).agg(count(lit(1)).as("__outdeg"))
-    val e = edges.join(deg, srcCol)
-      .select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
-        col("__outdeg"))
-      .localCheckpoint(eager = false)
-    var ranks = n.withColumn("rank", lit(1.0))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(ranks, e("__src") === ranks("node"))
-        .select(col("__dst").as("node"),
-          (col("rank") / col("__outdeg")).as("__c"))
-        .groupBy("node").agg(sum("__c").as("__s"))
-      ranks = n.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"))
-        .localCheckpoint(eager = false)
-    }
-    ranks
-  }
+               iters: Int = 5, damping: Double = 0.85): DataFrame =
+    rankLoop(edges, srcCol, dstCol,
+      nodes.select(col(nodeCol).as("node")).distinct()
+        .withColumn("__seed", lit(1.0)),
+      iters, damping)
 
   /** Personalized PageRank: [[pageRank]] with the teleport mass restricted
     * to a SEED set — the "relevance to these known-good/known-bad nodes"
@@ -208,6 +192,14 @@ object Components {
         .withColumn("__seed", lit(1.0)), Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(0.0)).as("__seed"))
       .localCheckpoint(eager = false)
+    rankLoop(edges, srcCol, dstCol, n, iters, damping)
+  }
+
+  /** The rank loop both PageRanks run over `n` = (node, __seed):
+    * r₀ = seed, r ← (1-d)·seed + d·Σ_in r/outdeg, `iters` rounds. */
+  private def rankLoop(edges: DataFrame, srcCol: String, dstCol: String,
+                       n: DataFrame, iters: Int,
+                       damping: Double): DataFrame = {
     val deg = edges.groupBy(srcCol).agg(count(lit(1)).as("__outdeg"))
     val e = edges.join(deg, srcCol)
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
@@ -228,6 +220,18 @@ object Components {
     ranks
   }
 
+  /** An undirected edge list as symmetric long (u, v) rows: self-loops and
+    * null ends dropped, every edge once in each direction. */
+  private def symmetricEdges(edges: DataFrame, aCol: String,
+                             bCol: String): DataFrame = {
+    val und = edges
+      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
+      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
+    und.unionByName(und.select(col("v").as("u"), col("u").as("v")))
+      .distinct()
+      .localCheckpoint(eager = false)
+  }
+
   /** Multi-source BFS levels over an undirected edge list: the minimum hop
     * distance from any source node, up to `maxRounds` hops — the reach /
     * influence-radius primitive (how far does a seed set of known-bad docs,
@@ -246,12 +250,7 @@ object Components {
   def bfsLevels(edges: DataFrame, aCol: String, bCol: String,
                 sources: DataFrame, srcCol: String,
                 maxRounds: Int): DataFrame = {
-    val und = edges
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-    val e = und.unionByName(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(eager = false)
+    val e = symmetricEdges(edges, aCol, bCol)
     var frontier = sources.select(col(srcCol).cast("long").as("node"))
       .distinct().localCheckpoint(eager = false)
     var visited = frontier.withColumn("dist", lit(0))
@@ -290,12 +289,7 @@ object Components {
     */
   def kCore(edges: DataFrame, aCol: String, bCol: String,
             k: Int, rounds: Int): DataFrame = {
-    val und = edges
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-    var e = und.unionByName(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(eager = false) // symmetric: every edge in both rows
+    var e = symmetricEdges(edges, aCol, bCol)
     (1 to rounds).foreach { _ =>
       val keep = e.groupBy("u").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
@@ -325,12 +319,7 @@ object Components {
     */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
                        rounds: Int): DataFrame = {
-    val und = edges
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-    val e = und.unionByName(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(eager = false)
+    val e = symmetricEdges(edges, aCol, bCol)
     val nodes = e.select(col("u").as("node")).distinct()
     var labels = nodes.select(col("node"), col("node").as("label"))
     (1 to rounds).foreach { _ =>

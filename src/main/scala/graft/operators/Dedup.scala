@@ -330,20 +330,12 @@ object Dedup {
     * less exchange volume, cheaper sort/probe), with the corpus-universe
     * collision margin the [[hash128]] table documents. */
   def jaccardOnCandidates(cand: DataFrame, shingles: DataFrame,
-                          idCol: String): DataFrame = {
-    val hashed = hashShingles(shingles, idCol)
-    val counts = hashed.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val x = hashed.select(col(idCol).as("doc_a"), col("shh"))
-    val y = hashed.select(col(idCol).as("doc_b"), col("shh"))
-    val shared = cand.join(x, "doc_a").join(y, Seq("doc_b", "shh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
-    shared
-      .join(counts.select(col(idCol).as("doc_a"), col("n").as("na")), "doc_a")
-      .join(counts.select(col(idCol).as("doc_b"), col("n").as("nb")), "doc_b")
+                          idCol: String): DataFrame =
+    sharedShingles(cand, hashShingles(shingles, idCol), idCol,
+      "doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b"),
         round(col("shared").cast("double") /
           (col("na") + col("nb") - col("shared")), 4).as("jaccard"))
-  }
 
   /** Exact-verified near-dup pairs from a candidate set — the production
     * block-then-verify shape with an INTEGER-exact Jaccard gate: keeps
@@ -368,18 +360,26 @@ object Dedup {
   private[graft] def verifiedPairsHashed(cand: DataFrame, hashed: DataFrame,
                                          idCol: String,
                                          aCol: String, bCol: String,
-                                         minNum: Int, minDen: Int): DataFrame = {
-    val counts = hashed.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val x = hashed.select(col(idCol).as(aCol), col("shh"))
-    val y = hashed.select(col(idCol).as(bCol), col("shh"))
-    val shared = cand.select(aCol, bCol).join(x, aCol).join(y, Seq(bCol, "shh"))
-      .groupBy(aCol, bCol).agg(count(lit(1)).as("shared"))
-    shared
-      .join(counts.select(col(idCol).as(aCol), col("n").as("na")), aCol)
-      .join(counts.select(col(idCol).as(bCol), col("n").as("nb")), bCol)
+                                         minNum: Int, minDen: Int): DataFrame =
+    sharedShingles(cand.select(aCol, bCol), hashed, idCol, aCol, bCol)
       .withColumn("union_sz", col("na") + col("nb") - col("shared"))
       .filter(col("shared") * minDen >= col("union_sz") * minNum)
       .select(col(aCol), col(bCol), col("shared"), col("union_sz"))
+
+  /** The candidate pairs (aCol, bCol) with `shared`, the number of shingle
+    * hashes the two documents have in common, and `na`/`nb`, each side's
+    * shingle count: the intersection runs as an equi-join on the shingle
+    * hashes of the (id, shh) frame, restricted to the candidates. */
+  private def sharedShingles(cand: DataFrame, hashed: DataFrame,
+                             idCol: String, aCol: String,
+                             bCol: String): DataFrame = {
+    val counts = hashed.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+    val x = hashed.select(col(idCol).as(aCol), col("shh"))
+    val y = hashed.select(col(idCol).as(bCol), col("shh"))
+    cand.join(x, aCol).join(y, Seq(bCol, "shh"))
+      .groupBy(aCol, bCol).agg(count(lit(1)).as("shared"))
+      .join(counts.select(col(idCol).as(aCol), col("n").as("na")), aCol)
+      .join(counts.select(col(idCol).as(bCol), col("n").as("nb")), bCol)
   }
 
   /** LSH S-curve audit — the measurement that justifies a banding config:
@@ -429,20 +429,12 @@ object Dedup {
     * equi-join shape as [[jaccardOnCandidates]] — shuffle ∝ candidates,
     * never all pairs. */
   def containmentOnCandidates(cand: DataFrame, shingles: DataFrame,
-                              idCol: String): DataFrame = {
-    val hashed = hashShingles(shingles, idCol)
-    val counts = hashed.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val x = hashed.select(col(idCol).as("doc_a"), col("shh"))
-    val y = hashed.select(col(idCol).as("doc_b"), col("shh"))
-    val shared = cand.join(x, "doc_a").join(y, Seq("doc_b", "shh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared"))
-    shared
-      .join(counts.select(col(idCol).as("doc_a"), col("n").as("na")), "doc_a")
-      .join(counts.select(col(idCol).as("doc_b"), col("n").as("nb")), "doc_b")
+                              idCol: String): DataFrame =
+    sharedShingles(cand, hashShingles(shingles, idCol), idCol,
+      "doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b"),
         round(col("shared").cast("double") / col("na"), 4).as("cont_a"),
         round(col("shared").cast("double") / col("nb"), 4).as("cont_b"))
-  }
 
   /** Full near-dup pipeline, composed the way a production corpus run is:
     * exact-dedup FIRST (collapse byte-identical docs onto their min-id

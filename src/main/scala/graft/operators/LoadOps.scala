@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.DateFns
+import graft.model.Schemas
 
 /** Load-layer operators: the reference pushes these into Postgres SQL
   * (ON CONFLICT, DELETE+reload, CTE guards); here each is a pure
@@ -91,8 +92,9 @@ object LoadOps {
       col("act_symbol").as("__sym"), col("date").as("__pdate"),
       col("period").as("__pper"),
       struct((facts ++ nullSafeFacts).map(col): _*).as("__pfacts"))
+    val Seq(year, _) = Schemas.Enums.statementPeriod
     val withPrior = incoming.withColumn("__prior_date",
-      when(col("period") === "Year", DateFns.priorYear(col("date")))
+      when(col("period") === year, DateFns.priorYear(col("date")))
         .otherwise(DateFns.priorQuarter(col("date"))))
     val joined = withPrior.join(prior,
       withPrior("act_symbol") === col("__sym") &&

@@ -54,9 +54,7 @@ object Multimodal {
       rows.map { r =>
         val out = if (r.payload.length <= maxBytes) r.payload
           else java.util.Arrays.copyOf(r.payload, maxBytes)
-        md.reset()
-        val digest = md.digest(out).map("%02x".format(_)).mkString
-        MediaRow(r.media_id, r.mime, out.length.toLong, digest, out)
+        MediaRow(r.media_id, r.mime, out.length.toLong, md5Hex(md, out), out)
       }
     }
   }
@@ -105,14 +103,37 @@ object Multimodal {
     * a deterministic stand-in for a learned embedding's projection). */
   def ppmFeatureCodec(payload: Array[Byte], dims: Int): (Int, Int, Array[Float]) = {
     val (w, h, rgb) = PpmCodec.decode(payload)
+    val sums = channelSums(rgb)
+    val n = (w * h).toFloat
+    (w, h, Array.tabulate(dims)(d => sums(d % 3) / n / 255.0f))
+  }
+
+  /** Per-channel byte sums (R, G, B) of an interleaved RGB raster. */
+  private def channelSums(rgb: Array[Byte]): Array[Long] = {
     val sums = new Array[Long](3)
     var i = 0
     while (i < rgb.length) {
       sums(i % 3) += java.lang.Byte.toUnsignedInt(rgb(i))
       i += 1
     }
-    val n = (w * h).toFloat
-    (w, h, Array.tabulate(dims)(d => sums(d % 3) / n / 255.0f))
+    sums
+  }
+
+  /** Lowercase hex MD5 of `bytes` on a per-partition digest instance. */
+  private def md5Hex(md: java.security.MessageDigest,
+                     bytes: Array[Byte]): String = {
+    md.reset()
+    md.digest(bytes).map("%02x".format(_)).mkString
+  }
+
+  /** [[md5Hex]] of the UPPERCASE hex rendering of `bytes`: the digest
+    * form an oracle without blob-digest support rebuilds from the source
+    * bytes. */
+  private def md5OfHex(md: java.security.MessageDigest,
+                       bytes: Array[Byte]): String = {
+    val sb = new StringBuilder(bytes.length * 2)
+    bytes.foreach(b => sb.append("%02X".format(b)))
+    md5Hex(md, sb.toString.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
   }
 
   /** Encode each document's text bytes (cycled to fill the raster) as a
@@ -120,24 +141,39 @@ object Multimodal {
     * both engines can rebuild the identical pixels, so the decode grades.
     * Empty texts are dropped (no zero-pixel image exists in the format). */
   def ppmFromText(df: DataFrame, idCol: String, textCol: String,
-                  width: Int = 8): Dataset[MediaRow] = {
+                  width: Int = 8): Dataset[MediaRow] =
+    mediaFromText(df, idCol, textCol, "image/x-portable-pixmap", 1) {
+      (_, txt) =>
+        val (h, rgb) = raster(txt, width)
+        PpmCodec.encode(width, h, rgb)
+    }
+
+  /** The body of the `*FromText` encoders: each text of at least `minLen`
+    * bytes becomes one `mime` payload, `encode(id, bytes)`, with its length
+    * and MD5 (one digest instance per partition). */
+  private def mediaFromText(df: DataFrame, idCol: String, textCol: String,
+                            mime: String, minLen: Int)(
+      encode: (Long, Array[Byte]) => Array[Byte]): Dataset[MediaRow] = {
     implicit val tupleEnc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
     implicit val rowEnc = Encoders.product[MediaRow]
     df.select(col(idCol).cast("long"), col(textCol).cast("binary"))
       .as[(Long, Array[Byte])]
-      .filter((r: (Long, Array[Byte])) => r._2 != null && r._2.nonEmpty)
+      .filter((r: (Long, Array[Byte])) => r._2 != null && r._2.length >= minLen)
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.map { case (id, txt) =>
-          val h = 1 + (txt.length % 16)
-          val rgb = Array.tabulate(width * h * 3)(i => txt(i % txt.length))
-          val payload = PpmCodec.encode(width, h, rgb)
-          md.reset()
-          val digest = md.digest(payload).map("%02x".format(_)).mkString
-          MediaRow(id, "image/x-portable-pixmap", payload.length.toLong,
-            digest, payload)
+          val payload = encode(id, txt)
+          MediaRow(id, mime, payload.length.toLong, md5Hex(md, payload),
+            payload)
         }
       }
+  }
+
+  /** The text-derived RGB raster: h = 1 + (byte length mod 16) rows of
+    * `width` pixels whose bytes cycle the text's bytes. Returns (h, rgb). */
+  private def raster(txt: Array[Byte], width: Int): (Int, Array[Byte]) = {
+    val h = 1 + (txt.length % 16)
+    (h, Array.tabulate(width * h * 3)(i => txt(i % txt.length)))
   }
 
   /** mm3's graded row: decoded dims, EXACT per-channel byte sums (integer,
@@ -170,13 +206,7 @@ object Multimodal {
         val (rw, rh) = (math.max(w / 2, 1), math.max(h / 2, 1))
         val half = PpmCodec.resizeNearest(w, h, rgb, rw, rh)
         val out = PpmCodec.encode(rw, rh, half)
-        val sb = new StringBuilder(out.length * 2)
-        out.foreach(b => sb.append("%02X".format(b)))
-        md.reset()
-        val dig = md.digest(sb.toString
-            .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-          .map("%02x".format(_)).mkString
-        PpmResized(r.media_id, rw, rh, out.length.toLong, dig)
+        PpmResized(r.media_id, rw, rh, out.length.toLong, md5OfHex(md, out))
       }
     }.toDF()
   }
@@ -206,19 +236,9 @@ object Multimodal {
         val (w, h, rgb) = PpmCodec.decode(r.payload)
         val (w2, h2, rgb2) = PngCodec.decode(PngCodec.encode(w, h, rgb))
         require(w2 == w && h2 == h, s"png roundtrip moved dims to ${w2}x$h2")
-        val sums = new Array[Long](3)
-        val sb = new StringBuilder(rgb2.length * 2)
-        var i = 0
-        while (i < rgb2.length) {
-          sums(i % 3) += java.lang.Byte.toUnsignedInt(rgb2(i))
-          sb.append("%02X".format(rgb2(i)))
-          i += 1
-        }
-        md.reset()
-        val dig = md.digest(sb.toString
-            .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-          .map("%02x".format(_)).mkString
-        PngStats(r.media_id, w, h, sums(0), sums(1), sums(2), dig)
+        val sums = channelSums(rgb2)
+        PngStats(r.media_id, w, h, sums(0), sums(1), sums(2),
+          md5OfHex(md, rgb2))
       }
     }.toDF()
   }
@@ -238,30 +258,18 @@ object Multimodal {
     * the decoder must WALK chunks, not assume offsets. Both engines can
     * rebuild the identical samples from the text, so the decode grades. */
   def wavFromText(df: DataFrame, idCol: String, textCol: String,
-                  sampleRate: Int = 8000): Dataset[MediaRow] = {
-    implicit val tupleEnc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    implicit val rowEnc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long"), col(textCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .filter((r: (Long, Array[Byte])) => r._2 != null && r._2.length >= 2)
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.map { case (id, txt) =>
-          val m = txt.length - (txt.length % 2)
-          val samples = Array.tabulate[Short](m) { i =>
-            val low = txt(i) & 0xFF
-            val high = ((txt((i + 1) % m) & 0xFF) * 3 + i) % 256
-            ((high << 8) | low).toShort
-          }
-          val extra =
-            if (id % 2 == 0) Some(txt.take(math.min(5, txt.length))) else None
-          val payload = WavCodec.encode(sampleRate, 2, samples, extra)
-          md.reset()
-          val digest = md.digest(payload).map("%02x".format(_)).mkString
-          MediaRow(id, "audio/wav", payload.length.toLong, digest, payload)
-        }
+                  sampleRate: Int = 8000): Dataset[MediaRow] =
+    mediaFromText(df, idCol, textCol, "audio/wav", 2) { (id, txt) =>
+      val m = txt.length - (txt.length % 2)
+      val samples = Array.tabulate[Short](m) { i =>
+        val low = txt(i) & 0xFF
+        val high = ((txt((i + 1) % m) & 0xFF) * 3 + i) % 256
+        ((high << 8) | low).toShort
       }
-  }
+      val extra =
+        if (id % 2 == 0) Some(txt.take(math.min(5, txt.length))) else None
+      WavCodec.encode(sampleRate, 2, samples, extra)
+    }
 
   /** mm6: REAL audio decode graded — parse the RIFF container (chunk walk
     * incl. the planted LIST chunks), decode int16 LE PCM, and grade the
@@ -351,12 +359,7 @@ object Multimodal {
     media.mapPartitions { rows =>
       rows.map { r =>
         val (w, h, rgb) = PpmCodec.decode(r.payload)
-        val sums = new Array[Long](3)
-        var i = 0
-        while (i < rgb.length) {
-          sums(i % 3) += java.lang.Byte.toUnsignedInt(rgb(i))
-          i += 1
-        }
+        val sums = channelSums(rgb)
         val (rw, rh) = (math.max(w / 2, 1), math.max(h / 2, 1))
         val half = PpmCodec.resizeNearest(w, h, rgb, rw, rh)
         var hs = 0L
@@ -378,24 +381,11 @@ object Multimodal {
     * row forces the 4-byte stride padding every real BMP reader must
     * honor), pixel bytes cycle the raw UTF-8 text. */
   def bmpFromText(df: DataFrame, idCol: String, textCol: String,
-                  width: Int = 7): Dataset[MediaRow] = {
-    implicit val tupleEnc = Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    implicit val rowEnc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long"), col(textCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .filter((r: (Long, Array[Byte])) => r._2 != null && r._2.nonEmpty)
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.map { case (id, txt) =>
-          val h = 1 + (txt.length % 16)
-          val rgb = Array.tabulate(width * h * 3)(i => txt(i % txt.length))
-          val payload = BmpCodec.encode(width, h, rgb)
-          md.reset()
-          val digest = md.digest(payload).map("%02x".format(_)).mkString
-          MediaRow(id, "image/bmp", payload.length.toLong, digest, payload)
-        }
-      }
-  }
+                  width: Int = 7): Dataset[MediaRow] =
+    mediaFromText(df, idCol, textCol, "image/bmp", 1) { (_, txt) =>
+      val (h, rgb) = raster(txt, width)
+      BmpCodec.encode(width, h, rgb)
+    }
 
   /** Decode-and-audit for BMP payloads: per-channel sums (row-order
     * invariant) PLUS two positional probes that are NOT — the top-half
@@ -407,12 +397,7 @@ object Multimodal {
     media.mapPartitions { rows =>
       rows.map { r =>
         val (w, h, rgb) = BmpCodec.decode(r.payload)
-        val sums = new Array[Long](3)
-        var i = 0
-        while (i < rgb.length) {
-          sums(i % 3) += java.lang.Byte.toUnsignedInt(rgb(i))
-          i += 1
-        }
+        val sums = channelSums(rgb)
         var topHalf = 0L
         var j = 0
         val topEnd = (h / 2) * w * 3

@@ -60,27 +60,33 @@ object PngCodec {
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
   }
 
+  /** The filter-type `ft` prediction for byte `i` of a scanline from its
+    * RAW left (a), up (b) and up-left (c) neighbours: `row` holds raw bytes
+    * before `i`, `prev` is the previous RAW scanline (zeros for row 0). */
+  private def predict(ft: Int, row: Array[Byte], prev: Array[Byte],
+                      i: Int): Int = {
+    val a = if (i >= Bpp) row(i - Bpp) & 0xff else 0
+    val b = prev(i) & 0xff
+    val c = if (i >= Bpp) prev(i - Bpp) & 0xff else 0
+    ft match {
+      case 0 => 0
+      case 1 => a
+      case 2 => b
+      case 3 => (a + b) / 2
+      case 4 => paeth(a, b, c)
+      case other =>
+        throw new IllegalArgumentException(
+          s"requirement failed: bad scanline filter type $other")
+    }
+  }
+
   /** Filter one scanline in place into `filt` (length w·bpp), given the
     * previous RAW scanline (`prev`, zeros for row 0). */
   private def filterRow(ft: Int, row: Array[Byte], prev: Array[Byte],
                         filt: Array[Byte]): Unit = {
-    val n = row.length
     var i = 0
-    while (i < n) {
-      val raw = row(i) & 0xff
-      val a = if (i >= Bpp) row(i - Bpp) & 0xff else 0
-      val b = prev(i) & 0xff
-      val c = if (i >= Bpp) prev(i - Bpp) & 0xff else 0
-      val pred = ft match {
-        case 0 => 0
-        case 1 => a
-        case 2 => b
-        case 3 => (a + b) / 2
-        case 4 => paeth(a, b, c)
-        case other =>
-          throw new IllegalArgumentException(s"bad filter type $other")
-      }
-      filt(i) = ((raw - pred) & 0xff).toByte
+    while (i < row.length) {
+      filt(i) = (((row(i) & 0xff) - predict(ft, row, prev, i)) & 0xff).toByte
       i += 1
     }
   }
@@ -89,23 +95,9 @@ object PngCodec {
     * entry, raw bytes on exit; `prev` is the previous RAW scanline. */
   private def unfilterRow(ft: Int, row: Array[Byte],
                           prev: Array[Byte]): Unit = {
-    val n = row.length
     var i = 0
-    while (i < n) {
-      val a = if (i >= Bpp) row(i - Bpp) & 0xff else 0
-      val b = prev(i) & 0xff
-      val c = if (i >= Bpp) prev(i - Bpp) & 0xff else 0
-      val pred = ft match {
-        case 0 => 0
-        case 1 => a
-        case 2 => b
-        case 3 => (a + b) / 2
-        case 4 => paeth(a, b, c)
-        case other =>
-          throw new IllegalArgumentException(
-            s"requirement failed: bad scanline filter type $other")
-      }
-      row(i) = (((row(i) & 0xff) + pred) & 0xff).toByte
+    while (i < row.length) {
+      row(i) = (((row(i) & 0xff) + predict(ft, row, prev, i)) & 0xff).toByte
       i += 1
     }
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,13 +24,19 @@ import org.apache.spark.sql.functions._
   */
 object Quantiles {
 
+  /** The value's bin in [lo, lo + nBins·width), out-of-range values clamped
+    * into the first or last bin. */
+  private def binOf(valueCol: String, lo: Double, width: Double,
+                    nBins: Int): Column =
+    least(greatest(floor((col(valueCol) - lo) / width), lit(0.0)),
+      lit((nBins - 1).toDouble)).cast("long")
+
   def histQuantiles(df: DataFrame, valueCol: String,
                     lo: Double, hi: Double, nBins: Int,
                     qs: Seq[Double]): DataFrame = {
     require(hi > lo && nBins > 0 && qs.nonEmpty)
     val width = (hi - lo) / nBins
-    val bin = least(greatest(floor((col(valueCol) - lo) / width), lit(0.0)),
-      lit((nBins - 1).toDouble)).cast("long")
+    val bin = binOf(valueCol, lo, width, nBins)
     val full = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
     val counts = df.select(bin.as("bin"))
@@ -38,18 +44,7 @@ object Quantiles {
       .withColumn("cum", sum("cnt").over(
         Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("n", sum("cnt").over(full))
-    val probes = df.sparkSession.range(1)
-      .select(explode(typedLit(qs)).as("q"))
-    counts
-      .crossJoin(broadcast(probes))
-      .filter(col("cum") >= col("q") * col("n"))
-      .groupBy("q")
-      .agg(min_by(
-        round(lit(lo) + lit(width) *
-          (col("bin") + (col("q") * col("n") - (col("cum") - col("cnt")))
-            / col("cnt")), 6),
-        col("bin")).as("est"))
-      .select(col("q"), col("est"))
+    readOut(counts, Nil, qs, lo, width)
   }
 
   /** The grouped form — one histogram (and quantile read-out) per group
@@ -62,24 +57,31 @@ object Quantiles {
                            qs: Seq[Double]): DataFrame = {
     require(hi > lo && nBins > 0 && qs.nonEmpty)
     val width = (hi - lo) / nBins
-    val bin = least(greatest(floor((col(valueCol) - lo) / width), lit(0.0)),
-      lit((nBins - 1).toDouble)).cast("long")
+    val bin = binOf(valueCol, lo, width, nBins)
     val counts = df.select(col(groupCol).as("grp"), bin.as("bin"))
       .groupBy("grp", "bin").agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum("cnt").over(Window.partitionBy("grp")
         .orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)))
       .withColumn("n", sum("cnt").over(Window.partitionBy("grp")))
-    val probes = df.sparkSession.range(1)
+    readOut(counts, Seq("grp"), qs, lo, width)
+  }
+
+  /** The read-out of per-`keys` bin histograms (bin, cnt, cum, n): for
+    * each q of the broadcast probe set, the first bin whose cumulative
+    * count reaches q·n, interpolated linearly inside that bin. */
+  private def readOut(counts: DataFrame, keys: Seq[String], qs: Seq[Double],
+                      lo: Double, width: Double): DataFrame = {
+    val probes = counts.sparkSession.range(1)
       .select(explode(typedLit(qs)).as("q"))
     counts
       .crossJoin(broadcast(probes))
       .filter(col("cum") >= col("q") * col("n"))
-      .groupBy("grp", "q")
+      .groupBy((keys :+ "q").map(col): _*)
       .agg(min_by(
         round(lit(lo) + lit(width) *
           (col("bin") + (col("q") * col("n") - (col("cum") - col("cnt")))
             / col("cnt")), 6),
         col("bin")).as("est"))
-      .select(col("grp"), col("q"), col("est"))
+      .select((keys :+ "q" :+ "est").map(col): _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -45,24 +46,46 @@ object Similarity {
                      queryId: Long, k: Int): DataFrame = {
     val e = widened(emb, idCol, vecCol)
     val q = e.filter(col(idCol) === queryId).select(col("v").as("qv"))
-    e.crossJoin(broadcast(q))
-      .select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
+    rankTopK(e.crossJoin(broadcast(q)), idCol, k)
+  }
+
+  /** The candidates' rounded cosine to `qv`, best first (ties by id), cut
+    * at k: the tail every single-query top-k shares. */
+  private def rankTopK(cands: DataFrame, idCol: String, k: Int): DataFrame =
+    cands.select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
+
+  /** The query's bucket followed by every bucket at Hamming distance 1
+    * from it (each of the `bits` sign bits flipped once). */
+  private def hamming1(qbucket: Column, bits: Int): Column =
+    array(qbucket +:
+      (0 until bits).map(b => qbucket.bitwiseXOR(lit(1 << b))): _*)
+
+  /** The body of the four bucketed top-k forms: bucket `e0` (`widened` or
+    * `widened2`), take the query's vector and bucket, and score the corpus
+    * rows (only the `__keep` ones when `filtered`) in the query's bucket,
+    * or with `multiProbe` in its Hamming-1 neighbourhood. */
+  private def bucketProbeTopK(e0: DataFrame, idCol: String, queryId: Long,
+                              k: Int, bits: Int, multiProbe: Boolean,
+                              filtered: Boolean): DataFrame = {
+    val e = e0.withColumn("bucket", signBucket(col("v"), bits))
+    val q = e.filter(col(idCol) === queryId)
+      .select(col("v").as("qv"), col("bucket").as("qbucket"))
+    val (probes, key) =
+      if (multiProbe)
+        (q.withColumn("probe", explode(hamming1(col("qbucket"), bits))), "probe")
+      else (q, "qbucket")
+    val corpus = if (filtered) e.filter(col("__keep")) else e
+    rankTopK(corpus.join(broadcast(probes), col("bucket") === col(key)),
+      idCol, k)
   }
 
   /** LSH-bucketed cosine top-k: probe only the query's sign-bit bucket. */
   def bucketedTopK(emb: DataFrame, idCol: String, vecCol: String,
-                   queryId: Long, k: Int, bits: Int = 4): DataFrame = {
-    val e = widened(emb, idCol, vecCol)
-      .withColumn("bucket", signBucket(col("v"), bits))
-    val q = e.filter(col(idCol) === queryId)
-      .select(col("v").as("qv"), col("bucket").as("qbucket"))
-    e.join(broadcast(q), col("bucket") === col("qbucket"))
-      .select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
+                   queryId: Long, k: Int, bits: Int = 4): DataFrame =
+    bucketProbeTopK(widened(emb, idCol, vecCol), idCol, queryId, k, bits,
+      multiProbe = false, filtered = false)
 
   /** Multi-probe variant of [[bucketedTopK]]: also probe every bucket at
     * Hamming distance 1 from the query's (flip each sign bit once). Recall
@@ -71,20 +94,9 @@ object Similarity {
     * pruning to (bits+1)/2^bits of the data. */
   def bucketedTopKMultiProbe(emb: DataFrame, idCol: String, vecCol: String,
                              queryId: Long, k: Int,
-                             bits: Int = 4): DataFrame = {
-    val e = widened(emb, idCol, vecCol)
-      .withColumn("bucket", signBucket(col("v"), bits))
-    val probeSet = array(
-      col("qbucket") +:
-        (0 until bits).map(b => col("qbucket").bitwiseXOR(lit(1 << b))): _*)
-    val q = e.filter(col(idCol) === queryId)
-      .select(col("v").as("qv"), col("bucket").as("qbucket"))
-      .withColumn("probe", explode(probeSet))
-    e.join(broadcast(q), col("bucket") === col("probe"))
-      .select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
+                             bits: Int = 4): DataFrame =
+    bucketProbeTopK(widened(emb, idCol, vecCol), idCol, queryId, k, bits,
+      multiProbe = true, filtered = false)
 
   /** IVF (inverted-file) ANN: a fixed set of coarse centroids partitions the
     * corpus into cells; a query probes only its own cell. Centroids here are
@@ -107,10 +119,8 @@ object Similarity {
     val assigned = assignCells(e, centroids)
     val q = assigned.filter(col(idCol) === queryId)
       .select(col("v").as("qv"), col("cell").as("qcell"))
-    assigned.join(broadcast(q), col("cell") === col("qcell"))
-      .select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    rankTopK(assigned.join(broadcast(q), col("cell") === col("qcell")),
+      idCol, k)
   }
 
   /** Squared L2 distance (sequential fold — used inside centroid argmin). */
@@ -216,7 +226,6 @@ object Similarity {
     * dedup the id first. */
   def cosineNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, bits: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // rep = min id per distinct vector value (window keys hash internally;
     // this is the same one-shuffle shape as nearDupPairs' md5 window);
     // lazy localCheckpoint: e feeds members and reps across three joins —
@@ -284,7 +293,6 @@ object Similarity {
                     nlist: Int = 8, iters: Int = 5,
                     tau: Double = 0.3,
                     trainFraction: Double = 1.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(trainFraction > 0.0 && trainFraction <= 1.0,
       s"trainFraction must be in (0, 1], got $trainFraction")
     val e = widened(emb, idCol, vecCol)
@@ -347,16 +355,9 @@ object Similarity {
     * required to pass the filter (search category X from any query). */
   def filteredBucketedTopK(emb: DataFrame, idCol: String, vecCol: String,
                            queryId: Long, k: Int, pred: Column,
-                           bits: Int = 4): DataFrame = {
-    val e = widened2(emb, idCol, vecCol, pred)
-      .withColumn("bucket", signBucket(col("v"), bits))
-    val q = e.filter(col(idCol) === queryId)
-      .select(col("v").as("qv"), col("bucket").as("qbucket"))
-    e.filter(col("__keep")).join(broadcast(q), col("bucket") === col("qbucket"))
-      .select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
+                           bits: Int = 4): DataFrame =
+    bucketProbeTopK(widened2(emb, idCol, vecCol, pred), idCol, queryId, k,
+      bits, multiProbe = false, filtered = true)
 
   /** [[filteredBucketedTopK]]'s recall path: when the filter is selective
     * enough that the query's single bucket can't fill k (sim6's measured
@@ -367,21 +368,9 @@ object Similarity {
   def filteredBucketedTopKMultiProbe(emb: DataFrame, idCol: String,
                                      vecCol: String, queryId: Long, k: Int,
                                      pred: Column,
-                                     bits: Int = 4): DataFrame = {
-    val e = widened2(emb, idCol, vecCol, pred)
-      .withColumn("bucket", signBucket(col("v"), bits))
-    val probeSet = array(
-      col("qbucket") +:
-        (0 until bits).map(b =>
-          col("qbucket").bitwiseXOR(lit(1 << b))): _*)
-    val q = e.filter(col(idCol) === queryId)
-      .select(col("v").as("qv"), col("bucket").as("qbucket"))
-      .withColumn("probe", explode(probeSet))
-    e.filter(col("__keep")).join(broadcast(q), col("bucket") === col("probe"))
-      .select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
+                                     bits: Int = 4): DataFrame =
+    bucketProbeTopK(widened2(emb, idCol, vecCol, pred), idCol, queryId, k,
+      bits, multiProbe = true, filtered = true)
 
   /** AUTO-WIDENING filtered ANN — one call that fills k under any filter
     * selectivity: probes are ALL buckets tagged with their Hamming radius
@@ -404,7 +393,6 @@ object Similarity {
                                     vecCol: String, queryId: Long, k: Int,
                                     pred: Column, bits: Int = 4,
                                     maxRadius: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = widened2(emb, idCol, vecCol, pred)
       .withColumn("bucket", signBucket(col("v"), bits))
     // every bucket, tagged with Hamming distance to the query's bucket
@@ -431,11 +419,8 @@ object Similarity {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val cutoff = cum.filter(col("cum") >= k)
       .agg(coalesce(min(col("radius")), lit(maxRadius)).as("__r"))
-    cand.crossJoin(broadcast(cutoff))
-      .filter(col("radius") <= col("__r"))
-      .select(col(idCol), round(cosine(col("v"), col("qv")), 6).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    rankTopK(cand.crossJoin(broadcast(cutoff))
+      .filter(col("radius") <= col("__r")), idCol, k)
   }
 
   /** [[widened]] plus the filter predicate evaluated BEFORE the projection
@@ -546,6 +531,35 @@ object Similarity {
       .limit(k)
   }
 
+  /** Per-query top-k of (qid, qv, qn) × (idCol, v, nrm) candidate pairs by
+    * rounded cosine with hoisted norms (the same doubles as [[cosine]]'s
+    * sqrt·sqrt form), best first, ties by id. Returns (qid, idCol). */
+  private def perQueryTopK(cands: DataFrame, idCol: String,
+                           k: Int): DataFrame = {
+    val w = Window.partitionBy("qid")
+      .orderBy(col("score").desc, col(idCol))
+    cands
+      .withColumn("score",
+        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("qid"), col(idCol))
+  }
+
+  /** The recall read-out of every audit: per `method` of the approximate
+    * (qid, idCol, method) rows, the exact-integer hits against the
+    * brute-force (qid, idCol) truth out of nQueries·k. */
+  private def recallByMethod(ann: DataFrame, truth: DataFrame, idCol: String,
+                             nQueries: Int, k: Int): DataFrame = {
+    val denom = nQueries.toLong * k
+    ann.join(truth, Seq("qid", idCol))
+      .groupBy("method")
+      .agg(count(lit(1)).as("hits"))
+      .select(col("method"), col("hits"), lit(denom).as("denom"),
+        round(col("hits") / lit(denom.toDouble), 4).as("recall_at_k"))
+      .orderBy("method")
+  }
+
   /** Recall@k of every approximate path against the exact one, as a graded
     * number: each ANN variant (single-bucket LSH, Hamming-1 multi-probe,
     * IVF) runs over a fixed probe set (the first `nQueries` vectors by id)
@@ -564,7 +578,6 @@ object Similarity {
   def annRecallAtK(emb: DataFrame, idCol: String, vecCol: String,
                    nQueries: Int = 20, k: Int = 10,
                    bits: Int = 4, nlist: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = widened(emb, idCol, vecCol)
       .withColumn("bucket", signBucket(col("v"), bits))
     val centroids = e.filter(col(idCol) < nlist)
@@ -577,43 +590,20 @@ object Similarity {
     val probes = corpus.filter(col(idCol) < nQueries)
       .select(col(idCol).as("qid"), col("v").as("qv"), col("nrm").as("qn"),
         col("bucket").as("qbucket"), col("cell").as("qcell"))
-
-    // hoisted-norm cosine: identical doubles to cosine()'s sqrt·sqrt form
-    def topk(cands: DataFrame): DataFrame = {
-      val w = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col(idCol))
-      cands
-        .withColumn("score",
-          round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col(idCol))
-    }
+    def topk(cands: DataFrame) = perQueryTopK(cands, idCol, k)
 
     val bf = topk(corpus.crossJoin(broadcast(probes)))
     val lsh = topk(corpus.join(broadcast(probes),
       col("bucket") === col("qbucket")))
-    val mp = {
-      val probeSet = array(
-        col("qbucket") +:
-          (0 until bits).map(b =>
-            col("qbucket").bitwiseXOR(lit(1 << b))): _*)
-      val p2 = probes.withColumn("pb", explode(probeSet))
-      topk(corpus.join(broadcast(p2), col("bucket") === col("pb")))
-    }
+    val p2 = probes.withColumn("pb", explode(hamming1(col("qbucket"), bits)))
+    val mp = topk(corpus.join(broadcast(p2), col("bucket") === col("pb")))
     val ivf = topk(corpus.join(broadcast(probes),
       col("cell") === col("qcell")))
 
     val ann = lsh.withColumn("method", lit("lsh"))
       .unionByName(mp.withColumn("method", lit("multiprobe")))
       .unionByName(ivf.withColumn("method", lit("ivf")))
-    val denom = nQueries.toLong * k
-    ann.join(bf, Seq("qid", idCol))
-      .groupBy("method")
-      .agg(count(lit(1)).as("hits"))
-      .select(col("method"), col("hits"), lit(denom).as("denom"),
-        round(col("hits") / lit(denom.toDouble), 4).as("recall_at_k"))
-      .orderBy("method")
+    recallByMethod(ann, bf, idCol, nQueries, k)
   }
 
   /** BATCHED ANN — the production serve shape: top-k cosine for a whole
@@ -633,7 +623,6 @@ object Similarity {
                 queries: DataFrame, qidCol: String, qvecCol: String,
                 k: Int, bits: Int = 4,
                 probeHamming1: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = widened(emb, idCol, vecCol)
       .withColumn("bucket", signBucket(col("v"), bits))
       .withColumn("nrm", l2norm(col("v")))
@@ -642,10 +631,8 @@ object Similarity {
       .withColumn("qbucket", signBucket(col("qv"), bits))
       .withColumn("qn", l2norm(col("qv")))
     val probes =
-      if (probeHamming1) qBase.withColumn("pb", explode(array(
-        col("qbucket") +:
-          (0 until bits).map(b =>
-            col("qbucket").bitwiseXOR(lit(1 << b))): _*)))
+      if (probeHamming1)
+        qBase.withColumn("pb", explode(hamming1(col("qbucket"), bits)))
       else qBase.withColumn("pb", col("qbucket"))
     val w = Window.partitionBy("qid")
       .orderBy(col("score").desc, col(idCol))
@@ -673,7 +660,6 @@ object Similarity {
   def ivfTrainedRecallAtK(emb: DataFrame, idCol: String, vecCol: String,
                           nQueries: Int = 20, k: Int = 10, nlist: Int = 8,
                           iters: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = widened(emb, idCol, vecCol)
       .withColumn("nrm", l2norm(col("v")))
       .localCheckpoint(eager = false)
@@ -681,16 +667,7 @@ object Similarity {
       .select(col(idCol).cast("int").as("cid"), col("v").as("cv"))
     val trained = trainCentroids(emb, idCol, vecCol, nlist, iters)
 
-    def topk(cands: DataFrame): DataFrame = {
-      val w = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col(idCol))
-      cands
-        .withColumn("score",
-          round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col(idCol))
-    }
+    def topk(cands: DataFrame) = perQueryTopK(cands, idCol, k)
 
     val probes = e.filter(col(idCol) < nQueries)
       .select(col(idCol).as("qid"), col("v").as("qv"), col("nrm").as("qn"))
@@ -708,13 +685,7 @@ object Similarity {
 
     val ann = arm(untrained, "ivf_first_n")
       .unionByName(arm(trained, "ivf_trained"))
-    val denom = nQueries.toLong * k
-    ann.join(bf, Seq("qid", idCol))
-      .groupBy("method")
-      .agg(count(lit(1)).as("hits"))
-      .select(col("method"), col("hits"), lit(denom).as("denom"),
-        round(col("hits") / lit(denom.toDouble), 4).as("recall_at_k"))
-      .orderBy("method")
+    recallByMethod(ann, bf, idCol, nQueries, k)
   }
 
   /** Sign bits of dims `from..from+width-1` (1-based, width ≤ 32) packed
@@ -750,7 +721,6 @@ object Similarity {
   def binaryRerankRecallAtK(emb: DataFrame, idCol: String, vecCol: String,
                             nQueries: Int = 20, k: Int = 10,
                             rerank: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val packed = widened(emb, idCol, vecCol)
       .withColumn("lo", packSignBits(col("v"), 1, 32))
       .withColumn("hi", packSignBits(col("v"), 33, 32))
@@ -769,20 +739,25 @@ object Similarity {
           bit_count(col("hi").bitwiseXOR(col("qhi"))))
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("ham"), col(idCol))))
+    coarseRerankRecall(ham, packed, probes, idCol, nQueries, k, rerank,
+      "binary_hamming", "binary_rerank")
+  }
 
-    def topk(cands: DataFrame): DataFrame = {
-      val w = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col(idCol))
-      cands
-        .withColumn("score",
-          round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col(idCol))
-    }
+  /** The tail of the two coarse-then-re-rank audits: `coarse` ranks each
+    * query's candidates as `rn`; the coarse arm keeps its top k, the
+    * re-rank arm rescores its top `rerank` with exact cosine over
+    * `packed`'s (v, nrm) and keeps the top k, and both are graded against
+    * the brute-force top-k of `packed` × `probes`. */
+  private def coarseRerankRecall(coarse: DataFrame, packed: DataFrame,
+                                 probes: DataFrame, idCol: String,
+                                 nQueries: Int, k: Int, rerank: Int,
+                                 coarseLabel: String,
+                                 rerankLabel: String): DataFrame = {
+    def topk(cands: DataFrame) = perQueryTopK(cands, idCol, k)
 
-    val hammingArm = ham.filter(col("rn") <= k).select(col("qid"), col(idCol))
-    val rerankArm = topk(ham.filter(col("rn") <= rerank)
+    val coarseArm = coarse.filter(col("rn") <= k)
+      .select(col("qid"), col(idCol))
+    val rerankArm = topk(coarse.filter(col("rn") <= rerank)
       .select(col("qid"), col(idCol))
       .join(packed.select(col(idCol), col("v"), col("nrm")), idCol)
       .join(broadcast(probes.select(col("qid"), col("qv"), col("qn"))),
@@ -790,15 +765,9 @@ object Similarity {
     val bf = topk(packed.crossJoin(broadcast(
       probes.select(col("qid"), col("qv"), col("qn")))))
 
-    val ann = hammingArm.withColumn("method", lit("binary_hamming"))
-      .unionByName(rerankArm.withColumn("method", lit("binary_rerank")))
-    val denom = nQueries.toLong * k
-    ann.join(bf, Seq("qid", idCol))
-      .groupBy("method")
-      .agg(count(lit(1)).as("hits"))
-      .select(col("method"), col("hits"), lit(denom).as("denom"),
-        round(col("hits") / lit(denom.toDouble), 4).as("recall_at_k"))
-      .orderBy("method")
+    val ann = coarseArm.withColumn("method", lit(coarseLabel))
+      .unionByName(rerankArm.withColumn("method", lit(rerankLabel)))
+    recallByMethod(ann, bf, idCol, nQueries, k)
   }
 
   /** Random-projection ANN with exact re-rank — the serve shape
@@ -814,7 +783,6 @@ object Similarity {
                         projDims: Int = 16, dims: Int = 64,
                         nQueries: Int = 20, k: Int = 10,
                         rerank: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val signs = RandomProjection.signMatrix(projDims, dims)
     val scale = math.sqrt(projDims.toDouble)
     val pvCol = array((0 until projDims).map(j =>
@@ -835,37 +803,8 @@ object Similarity {
         col("pn2") + col("qn2") - lit(2.0) * dot(col("pv"), col("qpv")), 6))
       .withColumn("rn", row_number().over(
         Window.partitionBy("qid").orderBy(col("pd2"), col(idCol))))
-
-    def topk(cands: DataFrame): DataFrame = {
-      val w = Window.partitionBy("qid")
-        .orderBy(col("score").desc, col(idCol))
-      cands
-        .withColumn("score",
-          round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col(idCol))
-    }
-
-    val coarseArm = coarse.filter(col("rn") <= k)
-      .select(col("qid"), col(idCol))
-    val rerankArm = topk(coarse.filter(col("rn") <= rerank)
-      .select(col("qid"), col(idCol))
-      .join(packed.select(col(idCol), col("v"), col("nrm")), idCol)
-      .join(broadcast(probes.select(col("qid"), col("qv"), col("qn"))),
-        "qid"))
-    val bf = topk(packed.crossJoin(broadcast(
-      probes.select(col("qid"), col("qv"), col("qn")))))
-
-    val ann = coarseArm.withColumn("method", lit("rp_coarse"))
-      .unionByName(rerankArm.withColumn("method", lit("rp_rerank")))
-    val denom = nQueries.toLong * k
-    ann.join(bf, Seq("qid", idCol))
-      .groupBy("method")
-      .agg(count(lit(1)).as("hits"))
-      .select(col("method"), col("hits"), lit(denom).as("denom"),
-        round(col("hits") / lit(denom.toDouble), 4).as("recall_at_k"))
-      .orderBy("method")
+    coarseRerankRecall(coarse, packed, probes, idCol, nQueries, k, rerank,
+      "rp_coarse", "rp_rerank")
   }
 
   /** Matryoshka truncation audit: recall@k of cosine over the FIRST `m`
@@ -881,7 +820,6 @@ object Similarity {
   def matryoshkaRecallAtK(emb: DataFrame, idCol: String, vecCol: String,
                           widths: Seq[Int] = Seq(8, 16, 32),
                           nQueries: Int = 20, k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val withSlices = widths.foldLeft(
       widened(emb, idCol, vecCol).withColumn("nrm", l2norm(col("v")))) {
       (df, m) =>
@@ -912,13 +850,7 @@ object Similarity {
     val bf = arm("s_full", "full").drop("method")
     val arms = widths.map(m => arm(s"s$m", f"trunc_$m%02d"))
       .reduce(_ unionByName _)
-    val denom = nQueries.toLong * k
-    arms.join(bf, Seq("qid", idCol))
-      .groupBy("method")
-      .agg(count(lit(1)).as("hits"))
-      .select(col("method"), col("hits"), lit(denom).as("denom"),
-        round(col("hits") / lit(denom.toDouble), 4).as("recall_at_k"))
-      .orderBy("method")
+    recallByMethod(arms, bf, idCol, nQueries, k)
   }
 
   /** Symmetric int8 scalar quantization audit — the compression step an

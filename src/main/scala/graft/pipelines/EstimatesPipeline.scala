@@ -30,10 +30,10 @@ object EstimatesPipeline {
       EstimateExtract.parse(html, LocalDate.parse(fd)))
       .asNondeterministic()
 
-  /** Estimate-period enum mapping (`estimate-transform-load.rkt:220-225`). */
-  private val PeriodEnum: Map[String, String] = Map(
-    "current-quarter" -> "Current Quarter", "next-quarter" -> "Next Quarter",
-    "current-year" -> "Current Year", "next-year" -> "Next Year")
+  /** Estimate-period enum mapping (`estimate-transform-load.rkt:220-225`):
+    * each extracted period to its `estimate_period` label, in order. */
+  private val PeriodEnum: Seq[(String, String)] =
+    EstimateExtract.Periods.zip(Schemas.Enums.estimatePeriod)
 
   // try_cast: under ANSI mode (Spark 4 default) a malformed numeric string
   // would abort the job; NULL-on-malformed is this pipeline's documented
@@ -95,12 +95,13 @@ object EstimatesPipeline {
       else parsed(docs)
     val per = byPeriod(base)
 
-    // The four period tables take their columns from `Schemas`: each value
-    // column `c` is the section's `c` cell (`_` written `-`), typed by its
-    // struct field; `period_end_date` is `headerSection`'s column header.
-    def periodTable(table: String, section: String,
+    // The period tables and eps_history take their columns from `Schemas`:
+    // each value column `c` is the section's `c` cell (`_` written `-`) of
+    // the row's `zper` column, typed by its struct field; `period_end_date`
+    // is `headerSection`'s column header.
+    def periodTable(rows: DataFrame, table: String, section: String,
                     headerSection: String): DataFrame =
-      per.select(Schemas.tables(table).fields.toSeq.map { f =>
+      rows.select(Schemas.tables(table).fields.toSeq.map { f =>
         val c = f.name match {
           case "act_symbol" | "period" => col(f.name)
           case "date" => col("folder_date")
@@ -122,28 +123,24 @@ object EstimatesPipeline {
       case f => col("p").getField(f).as(f)
     }: _*)
 
-    val epsHistory = base.withColumn("zper",
+    val history = base.withColumn("zper",
       explode(array(EstimateExtract.HistoryQuarters.map(lit): _*)))
-      .select(col("act_symbol"),
-        DateFns.endOfMonthFromHeader(cellFor("eps-surprise", "date"))
-          .as("period_end_date"),
-        money(cellFor("eps-surprise", "reported")).as("reported"),
-        money(cellFor("eps-surprise", "estimate")).as("estimate"))
-      .filter(col("period_end_date").isNotNull)
 
     Map(
       "rank_score" -> rankScore,
       // Sales estimates use the EPS section's period header — coverage is
       // sometimes worse on the sales side (`estimate-transform-load.rkt:252-253`).
       "sales_estimate" ->
-        periodTable("sales_estimate", "sales-estimates", "eps-estimates"),
+        periodTable(per, "sales_estimate", "sales-estimates", "eps-estimates"),
       "eps_estimate" ->
-        periodTable("eps_estimate", "eps-estimates", "eps-estimates"),
+        periodTable(per, "eps_estimate", "eps-estimates", "eps-estimates"),
       "eps_revision" ->
-        periodTable("eps_revision", "eps-revisions", "eps-revisions"),
+        periodTable(per, "eps_revision", "eps-revisions", "eps-revisions"),
       "eps_perception" ->
-        periodTable("eps_perception", "eps-upside", "eps-upside"),
-      "eps_history" -> epsHistory)
+        periodTable(per, "eps_perception", "eps-upside", "eps-upside"),
+      "eps_history" ->
+        periodTable(history, "eps_history", "eps-surprise", "eps-surprise")
+          .filter(col("period_end_date").isNotNull))
   }
 
   /** K1 load: PK-dedup append every fresh table into its stored counterpart. */

@@ -50,9 +50,11 @@ object StatementsPipeline {
     element_at(col("r").getField("entries"), name)
 
   /** Statement-period enum (`income-statement-transform-load.rkt:199-203`). */
-  private val periodEnum: Column =
-    when(col("r").getField("period") === "annual", lit("Year"))
-      .otherwise(lit("Quarter"))
+  private val periodEnum: Column = {
+    val Seq(year, quarter) = Schemas.Enums.statementPeriod
+    when(col("r").getField("period") === "annual", lit(year))
+      .otherwise(lit(quarter))
+  }
 
   /** P6 — drop whole documents whose most-recent statement date (from the
     * guard period's first date column) is within 15 days of the folder date

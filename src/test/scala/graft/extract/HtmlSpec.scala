@@ -85,7 +85,6 @@ class HtmlSpec extends AnyFunSuite {
     val body = Html.parse(html).kid("html").get.kid("body").get
     assert(body.byId("section", "s").isDefined)
     assert(body.byId("section", "absent").isEmpty)
-    assert(body.byClass("section", "deep").isDefined)
     assert(body.nthDescendant("div", depth).isDefined)
     assert(body.nthDescendant("div", depth + 1).isEmpty)
     assert(body.allText === "x 7 ")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.extract.{EstimateExtract, StatementExtract}
 
 /** F1–F10 edge cases (`estimate-transform-load.rkt:118-125` chain order
   * matters: T/B before the bare-M check, parens stripped not negated). */
@@ -34,6 +35,30 @@ class ScalarFnsSpec extends AnyFunSuite {
       ScalarFns.sanitizeToDouble(lit("")).as("empty")).head()
     assert(row.getDouble(0) === 2.5e9)
     assert(row.isNullAt(1) && row.isNullAt(2))
+  }
+
+  test("F1/F2 string and Column sanitizers agree on every cell shape") {
+    import spark.implicits._
+    // perfbench's estimate-page money tokens, then the edge shapes
+    val cells = Seq("1,234.5", "(0.12)", "NA", "2.5B", "1.2T", "10.00M",
+      "42.75", "M", "-1.07", "0.35", "", "(1,234.5)", " 2.5B ", "  M  ",
+      " (1,234.5) ")
+    val rows = cells.toDF("s").select(col("s"),
+      ScalarFns.sanitizeNumericText(col("s")).as("f1"),
+      ScalarFns.trimCommas(col("s")).as("f2")).collect()
+    rows.foreach { r =>
+      val s = r.getString(0)
+      assert(r.getString(1) === EstimateExtract.sanitizeCell(s), s"F1 '$s'")
+      assert(r.getString(2) === StatementExtract.sanitizeStatementCell(s),
+        s"F2 '$s'")
+    }
+    // not lockstep on other whitespace: String.trim strips every char
+    // <= U+0020, Spark's trim only spaces
+    val tab = "\t1,234.5\t"
+    assert(EstimateExtract.sanitizeCell(tab) === "1234.5")
+    assert(evalStr(ScalarFns.sanitizeNumericText(lit(tab))) === "\t1234.5\t")
+    assert(StatementExtract.sanitizeStatementCell(tab) === "1234.5")
+    assert(evalStr(ScalarFns.trimCommas(lit(tab))) === "\t1234.5\t")
   }
 
   test("F2/F3/F5/F6 small sanitizers") {
