@@ -17,10 +17,13 @@ object LoadOps {
     * (`estimate-transform-load.rkt:195` et al.).
     *
     * Existing rows always win; among duplicate incoming rows one survives
-    * deterministically (min over remaining columns). Scale note: at 100 TB
-    * the anti-join must not scan the whole `existing` table — callers pass
-    * only the date partitions the incoming batch touches (the PK always
-    * contains `date`), making the shuffle proportional to the batch.
+    * deterministically (min over remaining columns). Every pipeline caller
+    * passes the whole stored table as `existing` (the calendars after their
+    * K4/K5 retractions), so the anti-join scans all of it. A caller that
+    * filters `existing` to the date partitions the batch touches gets a
+    * pruned store scan, which makes the shuffle proportional to the batch;
+    * `SnapshotStoreSpec`'s "per-date loader reads prune the store scan"
+    * test holds that contract.
     */
   def dedupAppend(existing: DataFrame, incoming: DataFrame,
                   pk: Seq[String]): DataFrame = {

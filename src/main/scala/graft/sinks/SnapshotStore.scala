@@ -1,7 +1,18 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetReadSupport}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** K3/K6 — the storage model replacing Dolt-versioned tables and Postgres
   * maintenance:
@@ -24,8 +35,57 @@ object SnapshotStore {
     df.write.mode("overwrite").options(LocalFs.writeOptions)
       .partitionBy(partitionCol).parquet(path)
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Open the table version at `path`: the relation `spark.read.parquet`
+    * builds, with the same partition inference, but without its Spark jobs.
+    * Spark lists a directory with more than 32 subdirectories in a
+    * distributed job (one task per `date=` directory) and reads the schema
+    * in a one-task footer job; here both happen on the driver, with the
+    * path's own FileSystem and Spark's hidden-file rule (`_SUCCESS`, `.crc`,
+    * `_temporary/`). The listing lives only in this call's index. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(path).getFileSystem(conf)
+    val root = fs.makeQualified(new Path(path))
+    val top = try fs.getFileStatus(root) catch {
+      case _: FileNotFoundException =>
+        throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> root.toString))
+    }
+    val files = leafFiles(fs, top).toArray
+    val first = files.headOption.getOrElse(throw new AnalysisException(
+      "UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
+    val listed = new FileStatusCache { // a refresh of the index lists again
+      private var kept = true
+      override def getLeafFiles(p: Path) = if (kept && p == root) Some(files) else None
+      def putLeafFiles(p: Path, f: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = kept = false
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, None, listed)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      footerSchema(first, conf), None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  private def leafFiles(fs: FileSystem, s: FileStatus): Seq[FileStatus] =
+    if (!s.isDirectory) Seq(s)
+    else fs.listStatus(s.getPath).toSeq
+      .filterNot(c => hidden(c.getPath.getName)).flatMap(leafFiles(fs, _))
+
+  /** Spark's hidden-file rule (`HadoopFSUtils.shouldFilterOutPathName`,
+    * private to Spark): skip `_SUCCESS`, `.crc` sidecars, `_temporary/` and
+    * in-flight `._COPYING_` files; keep `k=v` directories and the parquet
+    * summary files. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  /** The schema Spark's writer stores in every footer, nullable as
+    * `DataSource` makes it. */
+  private def footerSchema(f: FileStatus, conf: Configuration): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType].toNullable
+    finally reader.close()
+  }
 
   /** Bucketed variant for co-located joins: two tables bucketed+sorted the
     * same way on the join key sort-merge-join with NO exchange on either
@@ -51,14 +111,13 @@ object SnapshotStore {
     * either the old or the new directory intact, never neither. */
   def compact(spark: SparkSession, path: String, partitionCol: String = "date",
               filesPerPartition: Int = 1): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path.stripSuffix("/") + ".compact.old")
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new Path(path.stripSuffix("/") + ".compact.old")
     // self-heal a crash between the two renames of a previous run: the data
     // is intact in .compact.old but nothing sits at the read path
     if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
-    val df = spark.read.parquet(path)
+    val df = read(spark, path)
     val tmp = path.stripSuffix("/") + ".compact.tmp"
     df.repartition(col(partitionCol),
       graft.operators.SkewOps.rowSalt(filesPerPartition))
@@ -67,7 +126,7 @@ object SnapshotStore {
     fs.delete(old, true)
     if (!fs.rename(dst, old))
       throw new java.io.IOException(s"compact: cannot move $dst aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
+    if (!fs.rename(new Path(tmp), dst)) {
       fs.rename(old, dst) // roll back
       throw new java.io.IOException(s"compact: cannot install $tmp at $dst")
     }
