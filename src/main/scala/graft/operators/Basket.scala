@@ -47,7 +47,7 @@ object Basket {
       .filter(col("basket").isNotNull && col("item").isNotNull)
       .groupBy("basket").agg(collect_set(col("item")).as("__items"))
       .filter(size(col("__items")) <= maxBasketSize)
-      .localCheckpoint(eager = false) // feeds N, item counts, and pair gen
+      .localCheckpoint() // feeds N, item counts, and pair gen
     val nBaskets = baskets.agg(count(lit(1)).as("n_baskets"))
     val sized = baskets.select(col("basket"),
       explode(col("__items")).as("item"))

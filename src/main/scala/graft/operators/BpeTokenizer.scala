@@ -35,9 +35,9 @@ import org.apache.spark.sql.functions._
   * DISTINCT-word table (bounded vocabulary, the same bounded-state
   * argument as [[Similarity.trainCentroids]]'s centroid set), each
   * iteration one mergeable pair-count aggregation plus a collect of its
-  * top rows and a scan-side rewrite, lineage cut per iteration via
-  * localCheckpoint. Apply is pure per-row string work under the tiny
-  * driver-held merge list — zero joins, zero shuffles, fully codegen.
+  * top rows and a scan-side rewrite, lineage cut per iteration by a pin.
+  * Apply is pure per-row string work under the tiny driver-held merge
+  * list — zero joins, zero shuffles, fully codegen.
   *
   * Reference scope: the reference engine has no tokenizer; this is part of
   * the beyond-reference LLM-pipeline layer (see SURVEY.md §2 addendum).
@@ -113,7 +113,7 @@ object BpeTokenizer {
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(symbolize(col("w")).as("s"), col("cnt"))
-      .localCheckpoint(eager = true)
+      .localCheckpoint()
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var k = 1
     while (k <= ranks) {
@@ -147,7 +147,7 @@ object BpeTokenizer {
         wf = wf.withColumn("s", applyMerge(col("s"), l, r))
         k += 1
       }
-      wf = wf.localCheckpoint(eager = true)
+      wf = wf.localCheckpoint()
     }
     merges.result().toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
   }

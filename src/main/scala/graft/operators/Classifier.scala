@@ -66,9 +66,9 @@ object Classifier {
                    label: Column, dims: Int = 32, iters: Int = 3,
                    lr: Double = 0.5): DataFrame = {
     require(dims > 0 && iters >= 0, s"bad dims=$dims iters=$iters")
-    // lazy localCheckpoint: the feature frame feeds iters+1 passes
+    // the feature frame feeds iters+1 passes
     val f = hashedFeatures(docs, idCol, textCol, label, dims)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val n = f.count().toDouble
     var w = Array.fill(dims)(0.0)
     var k = 0
@@ -114,7 +114,7 @@ object Classifier {
       s"keepFraction must be in (0, 1), got $keepFraction")
     // scored feeds the histogram AND the gate — materialize once
     val scored = logRegScores(docs, idCol, textCol, label, dims, iters, lr)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val thr = Quantiles.histQuantiles(scored, "score", lo, hi, nBins,
       qs = Seq(1.0 - keepFraction)).select(col("est").as("thr"))
     scored.crossJoin(broadcast(thr))

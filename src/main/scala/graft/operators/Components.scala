@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
   * fixpoint checksum. Rounds converge in O(log² n) (≤3 in practice for
   * near-dup graphs, whose components are shallow), and the edge set only
   * ever shrinks toward one star per component, so peak shuffle volume is
-  * the first round's O(|E|). Lineage is truncated per round with a lazy
-  * localCheckpoint (ContextCleaner-freed, never pinned) so the plan does
-  * not grow with iterations.
+  * the first round's O(|E|). Lineage is truncated per round with a pin so
+  * the plan does not grow with iterations.
   */
 object Components {
 
@@ -71,7 +70,7 @@ object Components {
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
       .distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     var prev = checksum(e)
     val stats = Seq.newBuilder[RoundStat]
     stats += RoundStat(0, prev._1)
@@ -122,7 +121,7 @@ object Components {
         .union(dir.select(col("u"), col("__m").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct()
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cur = checksum(small)
       converged = cur == prev
       prev = cur
@@ -157,8 +156,8 @@ object Components {
     * Scale shape: per round one equi-join (edges ⋈ ranks on src — shuffle
     * keyed by node id) + one groupBy-sum on dst; the edge set is never
     * mutated and its join-side partitioning is reusable round to round.
-    * No driver-side graph state; lineage truncated per round with a lazy
-    * localCheckpoint. Nodes with no in-links settle at (1-d) immediately.
+    * No driver-side graph state; lineage truncated per round with a pin.
+    * Nodes with no in-links settle at (1-d) immediately.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                nodes: DataFrame, nodeCol: String,
@@ -191,7 +190,7 @@ object Components {
       .join(seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("__seed", lit(1.0)), Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(0.0)).as("__seed"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     rankLoop(edges, srcCol, dstCol, n, iters, damping)
   }
 
@@ -204,7 +203,7 @@ object Components {
     val e = edges.join(deg, srcCol)
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"),
         col("__outdeg"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     var ranks = n.select(col("node"), col("__seed").as("rank"))
     for (_ <- 1 to iters) {
       val contrib = e.join(ranks, e("__src") === ranks("node"))
@@ -215,7 +214,7 @@ object Components {
         .select(col("node"),
           (lit(1.0 - damping) * col("__seed") +
             lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     ranks
   }
@@ -229,7 +228,7 @@ object Components {
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
     und.unionByName(und.select(col("v").as("u"), col("u").as("v")))
       .distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
   }
 
   /** Multi-source BFS levels over an undirected edge list: the minimum hop
@@ -245,14 +244,14 @@ object Components {
     * not graph-sized, work per round. The hop bound is chosen up front, so
     * a long-diameter component cannot stall the job; the only driver-side
     * action is the 1-row empty-frontier early exit, and lineage is cut per
-    * round with a lazy localCheckpoint like [[pageRank]].
+    * round with a pin like [[pageRank]].
     */
   def bfsLevels(edges: DataFrame, aCol: String, bCol: String,
                 sources: DataFrame, srcCol: String,
                 maxRounds: Int): DataFrame = {
     val e = symmetricEdges(edges, aCol, bCol)
     var frontier = sources.select(col(srcCol).cast("long").as("node"))
-      .distinct().localCheckpoint(eager = false)
+      .distinct().localCheckpoint()
     var visited = frontier.withColumn("dist", lit(0))
     var r = 1
     var exhausted = frontier.isEmpty
@@ -260,11 +259,11 @@ object Components {
       val next = e.join(frontier.withColumnRenamed("node", "u"), "u")
         .select(col("v").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       exhausted = next.isEmpty
       if (!exhausted) {
         visited = visited.unionByName(next.withColumn("dist", lit(r)))
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
         frontier = next
       }
       r += 1
@@ -297,7 +296,7 @@ object Components {
       e = e.join(keep, "u")
         .join(keep.withColumnRenamed("u", "v"), "v")
         .select("u", "v")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     e.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
   }
@@ -335,7 +334,7 @@ object Components {
         .select(col("node"), col("label"))
       labels = nodes.join(won, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     labels
   }
@@ -359,17 +358,17 @@ object Components {
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
         col(wCol).cast("long").as("w"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     var dist = sources.select(col(srcIdCol).cast("long").as("node"))
       .distinct().withColumn("d", lit(0L))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     (1 to maxRounds).foreach { _ =>
       val relaxed = e
         .join(dist.select(col("node").as("u"), col("d").as("__du")), "u")
         .select(col("v").as("node"), (col("__du") + col("w")).as("d"))
       dist = dist.unionByName(relaxed)
         .groupBy("node").agg(min("d").as("d"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     dist
   }
@@ -391,10 +390,10 @@ object Components {
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val nodes = e.select(col("u").as("node"))
       .unionByName(e.select(col("v").as("node"))).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     var hub = nodes.withColumn("h", lit(1L))
     var auth = nodes.withColumn("a", lit(0L))
     (1 to iters).foreach { _ =>
@@ -403,13 +402,13 @@ object Components {
           .groupBy(col("v").as("node")).agg(sum("h").as("a")),
         Seq("node"), "left")
         .select(col("node"), coalesce(col("a"), lit(0L)).as("a"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       hub = nodes.join(
         e.join(auth.select(col("node").as("v"), col("a")), "v")
           .groupBy(col("u").as("node")).agg(sum("a").as("h")),
         Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0L)).as("h"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     hub.join(auth, "node")
   }

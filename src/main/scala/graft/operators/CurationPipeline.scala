@@ -28,8 +28,8 @@ import graft.operators.{TextAnalysis => TA}
   * shingles, tiny mixture aggregates, two-level pack prefix sum) — no
   * stage introduces a join or shuffle the standalone operator doesn't
   * have. Stage outputs that feed multiple consumers (or an iterative
-  * stage) are pinned with lazy localCheckpoints, one per stage, so no
-  * stage's lineage replays an earlier stage's work.
+  * stage) are pinned, so no stage's lineage replays an earlier stage's
+  * work.
   *
   * [[stages]] exposes the cumulative survivor frame after every stage for
   * per-stage wall attribution (recorded in SCALE.md "pipe10 (round 10)").
@@ -46,14 +46,13 @@ object CurationPipeline {
     // exchanges, identical survivors (r15, guide §2.4)
     val gated = TA.gopherFilter(base, "text")
       .select(col("doc_id"), col("source"), col("text"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // 2. segment dedup; docs hollowed to zero surviving segments drop.
     // `source` rides the reassembly join (carry) instead of a second
     // corpus join on doc_id (r15)
     val seg = Dedup.segmentDedupText(gated, "doc_id", "text", segTokens = 20,
         carry = Seq("source"))
       .filter(col("kept_segs") > 0)
-      .localCheckpoint(eager = false)
     // 3. URL canonicalization dedup (dd12's planted messy URLs: scheme /
     // WWW case noise, utm_ params, per-doc cache-buster; min-id survives
     // per canonical URL)
@@ -77,24 +76,24 @@ object CurationPipeline {
       .withColumn("__h", Dedup.hash128(col("text_clean")))
       .withColumn("__m", min(col("doc_id")).over(Window.partitionBy("__h")))
       .filter(col("doc_id") === col("__m")).drop("__h", "__m")
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // 5. transitive LSH-cluster dedup: only cluster representatives (the
     // min-id node, which connectedComponents never lists as a non-root)
     // survive the anti-join
     val sig = Dedup.minhashSignatures(
       Dedup.shingleMultiset(exact, "doc_id", "text_clean"),
       "doc_id", bands = 4)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val cc = Components.connectedComponents(
       Dedup.lshCandidatePairs(sig, "doc_id"), "doc_a", "doc_b")
     val reps = exact.join(cc, exact("doc_id") === cc("node"), "left_anti")
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // 6. decontamination: any 5-gram shared with the eval slice drops the doc
     val cont = Dedup.contaminationOverlap(
       reps.select(col("doc_id"), col("text_clean").as("text")),
       docs.filter(col("doc_id") % 41 === 0), "doc_id", "text", n = 5)
     val clean = reps.join(cont.select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // 7. temperature mix + split; the split hash is salted differently
     // from the mix hash (pipe8's rationale: one fraction for two
     // keep/route decisions would correlate them)
@@ -105,7 +104,7 @@ object CurationPipeline {
         col("text_clean"), col("keep_p"),
         Sampling.splitLabel(
           concat(lit("split:"), col("doc_id").cast("string"))).as("split"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // 8. sequence packing over the final kept set
     val packed = Chunking.packAssignments(mixed, "doc_id", "text_clean",
       capacity = 2048)

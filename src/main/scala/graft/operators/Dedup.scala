@@ -396,7 +396,7 @@ object Dedup {
   def lshScurveAudit(docs: DataFrame, idCol: String, textCol: String,
                      bands: Int = 4, maxDf: Int = 50,
                      nBins: Int = 10): DataFrame = {
-    val sh = shingleSet(docs, idCol, textCol).localCheckpoint(eager = false)
+    val sh = shingleSet(docs, idCol, textCol).localCheckpoint()
     val rareSh = sh.groupBy("sh").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf).select("sh")
     val rare = sh.join(rareSh, "sh")
@@ -479,11 +479,9 @@ object Dedup {
                          shingleN: Int = 3,
                          mode: HashMode = HashMode.Md5): DataFrame = {
     // the distinct shingle set feeds the signature AND all three Jaccard
-    // consumers — materialize it once instead of re-tokenizing per
-    // consumer; lazy localCheckpoint so the blocks are ContextCleaner-freed
-    // rather than pinned in the cache manager (CacheHygieneSpec)
+    // consumers — pinned so it is tokenized once
     val sh = shingleSet(reps, idCol, textCol, shingleN)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val sig = minhashSignatures(sh, idCol, bands, mode)
     val cand = lshCandidatePairs(sig, idCol)
     jaccardOnCandidates(cand, sh, idCol)
@@ -675,7 +673,7 @@ object Dedup {
     // unchanged (and the dd22 oracle recomputes the pair set from raw
     // text, so any collision-induced drift at a tested SF hashes red).
     prefixFilterJaccardJoinHashed(
-      hashedShingleSet(docs, idCol, textCol).localCheckpoint(eager = false),
+      hashedShingleSet(docs, idCol, textCol).localCheckpoint(),
       idCol, minNum, minDen)
 
   /** [[prefixFilterJaccardJoin]] over an already-hashed (id, shh) shingle

@@ -70,7 +70,7 @@ object Indexing {
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val toks = docs.select(col(idCol).cast("long").as("doc_id"),
       explode(Dedup.tokens(col(textCol))).as("term"))
-      .localCheckpoint(eager = false) // feeds lengths + the tf table
+      .localCheckpoint() // feeds lengths + the tf table
     val lens = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))
     val stats = lens.agg(count(lit(1)).as("n_docs"), avg("len").as("avglen"))
     val tf = toks.filter(col("term").isin(queryTerms: _*))

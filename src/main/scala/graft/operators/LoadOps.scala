@@ -127,18 +127,14 @@ object LoadOps {
     * grows, so it carries no broadcast hint: AQE broadcasts it while it is
     * small and switches to a shuffled join past the threshold instead of
     * OOMing the driver.
+    *
+    * `calendar` is pinned: it feeds both the victim derivation and the
+    * final anti-join, and a derived input (the calendar daily run's
+    * K4→K5→K1) would otherwise run twice. So the call runs that pin's Spark
+    * job before it returns.
     */
   def supersededCleanup(calendar0: DataFrame, stmtDates: DataFrame): DataFrame = {
-    // `calendar` feeds BOTH the victim derivation and the final anti-join.
-    // Without persisting, Spark's DAG recomputes the whole upstream lineage
-    // once per consumer — when the input is a composed pipeline (K4→K5→K1,
-    // as in the calendar daily run) that doubles the entire load. A scan
-    // input re-reads at parquet cost either way, but the general contract
-    // here is "safe to pass derived plans", so materialize once. Lazy
-    // localCheckpoint, not cache(): the blocks are freed by the
-    // ContextCleaner when the plan goes out of scope instead of pinning
-    // cache-manager storage for the session (CacheHygieneSpec).
-    val calendar = calendar0.localCheckpoint(eager = false)
+    val calendar = calendar0.localCheckpoint()
     val distinctDates = stmtDates
       .select(col("act_symbol"), col("date")).distinct()
     val projectedNext = stmtDates.groupBy("act_symbol")

@@ -172,15 +172,15 @@ object Similarity {
           count(lit(1)).as("__n"))
         .select(col("cid"),
           transform(col("__s"), x => x / col("__n")).as("cv"))
-      // empty cells keep their previous centroid; localCheckpoint keeps the
-      // lineage from growing once per iteration (driver-side loop over a
+      // empty cells keep their previous centroid; the per-iteration pin
+      // keeps the lineage from growing (driver-side loop over a
       // FIXED small iteration count is the standard distributed-k-means
       // shape — each iteration is one full-parallel pass, nothing per-row
       // happens on the driver)
       centroids = centroids.join(means.select(col("cid"), col("cv").as("__nc")),
           Seq("cid"), "left")
         .select(col("cid"), coalesce(col("__nc"), col("cv")).as("cv"))
-        .localCheckpoint(eager = true)
+        .localCheckpoint()
       i += 1
     }
     centroids
@@ -228,12 +228,10 @@ object Similarity {
                          threshold: Double, bits: Int = 4): DataFrame = {
     // rep = min id per distinct vector value (window keys hash internally;
     // this is the same one-shuffle shape as nearDupPairs' md5 window);
-    // lazy localCheckpoint: e feeds members and reps across three joins —
-    // without it the full-vector-keyed window shuffle can recompute per
-    // consumer (same convention as annRecallAtK's corpus)
+    // e feeds members and reps across three joins, so it is pinned
     val e = widened(emb, idCol, vecCol)
       .withColumn("__rep", min(col(idCol)).over(Window.partitionBy(col("v"))))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val members = e.select(col(idCol).as("__mid"), col("__rep"))
     // norms hoisted out of the self-join: computed once per distinct
     // VECTOR, not once per pair — within a bucket of size B that's O(B·d)
@@ -297,7 +295,7 @@ object Similarity {
       s"trainFraction must be in (0, 1], got $trainFraction")
     val e = widened(emb, idCol, vecCol)
       .withColumn("__rep", min(col(idCol)).over(Window.partitionBy(col("v"))))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // train on the FULL corpus at the graded config (duplicate mass
     // legitimately pulls means); at scale train on a hash-sampled subset
     // instead — retraining on the whole corpus is what made the
@@ -321,7 +319,7 @@ object Similarity {
       }
     val reps = assignCells(e.filter(col(idCol) === col("__rep")), trained)
       .withColumn("nrm", l2norm(col("v")))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val a = reps.select(col("__rep").as("ra"), col("v").as("va"),
       col("nrm").as("na"), col("cell"))
     val b = reps.select(col("__rep").as("rb"), col("v").as("vb"),
@@ -410,7 +408,7 @@ object Similarity {
     // cutoff aggregate AND the final top-k — materialize once
     val cand = e.filter(col("__keep"))
       .join(broadcast(q), col("bucket") === col("pb"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // smallest radius whose cumulative candidate count reaches k; the
     // unpartitioned window is fine — it runs on ≤ maxRadius+1 rows
     val cum = cand.groupBy("radius").agg(count(lit(1)).as("n"))
@@ -495,7 +493,7 @@ object Similarity {
     val e = widened(emb, idCol, vecCol)
     val centroids = e.filter(col(idCol) < nlist)
       .select(col(idCol).cast("int").as("cid"), col("v").as("cv"))
-    val assigned = assignCells(e, centroids).localCheckpoint(eager = false)
+    val assigned = assignCells(e, centroids).localCheckpoint()
     val subLen = (size(col("v")) / subspaces).cast("int")
     def subs(df: DataFrame) = df.select(col(idCol),
       posexplode(transform(sequence(lit(0), lit(subspaces - 1)),
@@ -582,11 +580,10 @@ object Similarity {
       .withColumn("bucket", signBucket(col("v"), bits))
     val centroids = e.filter(col(idCol) < nlist)
       .select(col(idCol).cast("int").as("cid"), col("v").as("cv"))
-    // corpus feeds four candidate generators + the probe set — materialize
-    // once (lazy localCheckpoint: ContextCleaner-freed, repo convention)
+    // corpus feeds four candidate generators + the probe set
     val corpus = assignCells(e, centroids)
       .withColumn("nrm", l2norm(col("v")))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val probes = corpus.filter(col(idCol) < nQueries)
       .select(col(idCol).as("qid"), col("v").as("qv"), col("nrm").as("qn"),
         col("bucket").as("qbucket"), col("cell").as("qcell"))
@@ -662,7 +659,7 @@ object Similarity {
                           iters: Int = 5): DataFrame = {
     val e = widened(emb, idCol, vecCol)
       .withColumn("nrm", l2norm(col("v")))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val untrained = e.filter(col(idCol) < nlist)
       .select(col(idCol).cast("int").as("cid"), col("v").as("cv"))
     val trained = trainCentroids(emb, idCol, vecCol, nlist, iters)
@@ -672,7 +669,6 @@ object Similarity {
     val probes = e.filter(col(idCol) < nQueries)
       .select(col(idCol).as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val bf = topk(e.crossJoin(broadcast(probes)))
-      .localCheckpoint(eager = false) // truth set joins against both arms
 
     def arm(cents: DataFrame, label: String): DataFrame = {
       val assigned = assignCells(e, cents)
@@ -725,7 +721,7 @@ object Similarity {
       .withColumn("lo", packSignBits(col("v"), 1, 32))
       .withColumn("hi", packSignBits(col("v"), 33, 32))
       .withColumn("nrm", l2norm(col("v")))
-      .localCheckpoint(eager = false) // feeds codes, probes, re-rank, truth
+      .localCheckpoint() // feeds codes, probes, re-rank, truth
     val probes = packed.filter(col(idCol) < nQueries)
       .select(col(idCol).as("qid"), col("v").as("qv"), col("nrm").as("qn"),
         col("lo").as("qlo"), col("hi").as("qhi"))
@@ -791,7 +787,7 @@ object Similarity {
       .withColumn("pv", pvCol)
       .withColumn("pn2", dot(col("pv"), col("pv")))
       .withColumn("nrm", l2norm(col("v")))
-      .localCheckpoint(eager = false) // feeds coarse, probes, re-rank, truth
+      .localCheckpoint() // feeds coarse, probes, re-rank, truth
     val probes = packed.filter(col(idCol) < nQueries)
       .select(col(idCol).as("qid"), col("v").as("qv"), col("nrm").as("qn"),
         col("pv").as("qpv"), col("pn2").as("qn2"))
@@ -825,7 +821,7 @@ object Similarity {
       (df, m) =>
         df.withColumn(s"v$m", slice(col("v"), 1, m))
           .withColumn(s"n$m", l2norm(col(s"v$m")))
-    }.localCheckpoint(eager = false) // feeds probes, the cross, every arm
+    }.localCheckpoint() // feeds probes, the cross, every arm
     val probes = withSlices.filter(col(idCol) < nQueries).select(
       col(idCol).as("qid") +: col("v").as("qv") +: col("nrm").as("qn") +:
         widths.flatMap(m => Seq(col(s"v$m").as(s"qv$m"),
@@ -838,7 +834,7 @@ object Similarity {
         df.withColumn(s"s$m",
           round(dot(col(s"v$m"), col(s"qv$m")) / (col(s"n$m") * col(s"qn$m")),
             6))
-    }.localCheckpoint(eager = false) // one pair table, |widths|+1 rankings
+    }.localCheckpoint() // one pair table, |widths|+1 rankings
 
     def arm(scoreCol: String, label: String): DataFrame = {
       val w = Window.partitionBy("qid")

@@ -335,12 +335,12 @@ object TextAnalysis {
     // r14 (guide §2.4): df derives FROM the tf table — tf already holds
     // exactly one row per (doc, tok), so the old `toks.distinct()` pass
     // re-ran the whole tokenize+explode+distinct shuffle to compute the
-    // same counts; tf feeds two consumers, so it is pinned once (lazy
-    // localCheckpoint convention). Identical integer tf/df/n.
+    // same counts; tf feeds two consumers, so it is pinned. Identical
+    // integer tf/df/n.
     val tf = docs.select(col(idCol).as("doc_id"),
         explode(Dedup.tokens(col(textCol))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     tf.join(dfreq, "tok")
@@ -431,7 +431,7 @@ object TextAnalysis {
           "concat(element_at(w, i), ' ', element_at(w, i + 1)) as g))"))
         .as("s"))
       .select(col("doc_id"), col("s.w1").as("w1"), col("s.g").as("g"))
-      .localCheckpoint(eager = false) // feeds both count tables + the join
+      .localCheckpoint() // feeds both count tables + the join
     val bc = bigrams.groupBy("g").agg(count(lit(1)).as("bc"))
     val pc = bigrams.groupBy("w1").agg(count(lit(1)).as("pc"))
     val vsz = toks.select(explode(col("w")).as("tok"))
@@ -460,7 +460,7 @@ object TextAnalysis {
     val qLo = 0.333333
     val qHi = 0.666667
     val lp = bigramLogProb(docs, idCol, textCol)
-      .localCheckpoint(eager = false) // feeds the histogram AND the labels
+      .localCheckpoint() // feeds the histogram AND the labels
     val thr = Quantiles.histQuantiles(lp, "mean_logp", lo, hi, nBins,
       qs = Seq(qLo, qHi))
       .agg(min(when(col("q") === qLo, col("est"))).as("t_lo"),
@@ -490,7 +490,7 @@ object TextAnalysis {
                             maxDf: Long = 50,
                             mode: HashMode = HashMode.Md5): DataFrame = {
     val fp = winnowingFingerprints(docs, idCol, textCol, k, w, mode)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val rare = fp.withColumn("__df",
       count(lit(1)).over(Window.partitionBy("fp")))
       .filter(col("__df") <= maxDf).drop("__df")
@@ -570,7 +570,7 @@ object TextAnalysis {
     // already holds exactly one row per (doc, term), so the old second
     // full tokenize + distinct pass over the corpus computed the same
     // counts twice. tf feeds two consumers (dfreq and the weights), so it
-    // is pinned once with the lazy-localCheckpoint convention.
+    // is pinned.
     //
     // Term keys stay 64-bit: a collision merges two terms' tf/df and
     // perturbs a few cosines in the 6th decimal (a score wobble, not the
@@ -581,7 +581,7 @@ object TextAnalysis {
         explode(Dedup.wordShingles(col(textCol), shingle)).as("tok"))
       .select(col("doc_id"), xxhash64(col("tok")).as("th"))
       .groupBy("doc_id", "th").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val dfreq = tf.groupBy("th").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
     val n = docs.agg(count(lit(1)).as("n"))

@@ -25,7 +25,9 @@ object CalendarPipeline {
 
   /** Earnings: payloads must carry `raw` + `event_date` (see
     * [[graft.sources.RawZone.scanCalendarPayloads]]); `stmtDates` is the
-    * balance-sheet-assets (symbol, date) history J2 derives windows from. */
+    * balance-sheet-assets (symbol, date) history J2 derives windows from.
+    * Runs Spark jobs before it returns: the K4∘K5 pin and J2's calendar
+    * pin are materialized by the call. */
   def runEarnings(existing: DataFrame, payloads: DataFrame,
                   folderDate: java.sql.Date,
                   stmtDates: DataFrame): DataFrame =
@@ -36,7 +38,8 @@ object CalendarPipeline {
       stmtDates)
 
   /** Dividends: same shape minus the J2 cleanup; PK is (act_symbol,
-    * ex_date) and the slide-forward window runs on `ex_date`. */
+    * ex_date) and the slide-forward window runs on `ex_date`. Runs the
+    * K4∘K5 pin's Spark job before it returns. */
   def runDividends(existing: DataFrame, payloads: DataFrame,
                    folderDate: java.sql.Date): DataFrame =
     load(existing, CalendarExtract.dividendRows(payloads, col("raw")),
@@ -45,26 +48,20 @@ object CalendarPipeline {
   /** K4 → K5 → K1 of parsed calendar rows into `table`. Rows missing a
     * `Schemas` NOT NULL column are dropped before the load.
     *
-    * Both multi-consumer intermediates use a LAZY localCheckpoint rather
-    * than cache(): same materialize-once behavior on first action, but the
-    * storage is plain RDD blocks the ContextCleaner frees once the plan is
-    * garbage-collected — a cache() here pins cache-manager storage for the
-    * session, which in a daily loop over date folders accumulates until
-    * eviction thrash (the caller would have to know to unpersist a plan it
-    * never built). `fresh` feeds K5's retraction probe and K1's insert; the
-    * K4∘K5 plan is K1's existing side, which K1 reads twice (PK anti-join
-    * probe + the union) — two cheap pruned scans for a stored table, a
-    * re-run of K4∘K5 for a derived one. */
+    * The K4∘K5 plan is pinned: K1 reads its existing side twice (the PK
+    * anti-join probe and the union). `fresh` also has two consumers (K5's
+    * retraction probe and K1's insert) but stays unpinned: re-deriving one
+    * folder's parsed payloads measured cheaper on `calendars-rewrite` than
+    * materializing them. */
   private def load(existing: DataFrame, parsed: DataFrame, table: String,
                    dateCol: String, folderDate: java.sql.Date): DataFrame = {
     val fresh = parsed
       .filter(Schemas.tables(table).fields.filterNot(_.nullable)
         .map(f => col(f.name).isNotNull).reduce(_ && _))
-      .localCheckpoint(eager = false)
     val afterK4 = existing.filter(col(dateCol) < lit(folderDate))
     val retracted =
       LoadOps.slideForwardRetract(afterK4, fresh, "act_symbol", dateCol)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     LoadOps.dedupAppend(retracted, fresh, Schemas.primaryKeys(table))
   }
 }

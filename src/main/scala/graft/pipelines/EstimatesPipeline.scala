@@ -73,12 +73,11 @@ object EstimatesPipeline {
         })
 
   /** All six target tables from one scan of parsed documents. `pin`
-    * materializes the parsed base (lazy localCheckpoint — freed by the
-    * ContextCleaner when the plans die, never pinned in the cache manager)
-    * so a caller consuming several of the six tables parses each document
-    * once, not once per table; a single-table consumer should pass
-    * `pin = false` — materializing the deeply nested cell struct costs more
-    * than the one parse it saves.
+    * materializes the parsed base so a caller consuming several of the six
+    * tables parses each document once, not once per table; with `pin` the
+    * call runs the scan and parse as a Spark job before it returns. A
+    * single-table consumer should pass `pin = false` — materializing the
+    * deeply nested cell struct costs more than the one parse it saves.
     *
     * The pinned base is rebalanced, so AQE sizes its partitions to the
     * parsed bytes. The scan's split is set by file count, not by bytes:
@@ -91,7 +90,7 @@ object EstimatesPipeline {
     * the few partitions its bytes need. */
   def tables(docs: DataFrame, pin: Boolean = true): Map[String, DataFrame] = {
     val base =
-      if (pin) parsed(docs).hint("rebalance").localCheckpoint(eager = false)
+      if (pin) parsed(docs).hint("rebalance").localCheckpoint()
       else parsed(docs)
     val per = byPeriod(base)
 

@@ -139,18 +139,17 @@ object StatementsPipeline {
 
   /** Balance sheet → three tables from one parse
     * (`balance-sheet-transform-load.rkt:115-463`, one transaction per
-    * document covering assets/liabilities/equity). */
+    * document covering assets/liabilities/equity). `pin` is as in
+    * [[EstimatesPipeline.tables]]: materialize the parsed base only when the
+    * caller consumes more than one of the three tables, and with it the
+    * call runs the parse as a Spark job before it returns. */
   def balanceSheet(docs: DataFrame,
                    pin: Boolean = true): Map[String, DataFrame] = {
-    // pin: as in EstimatesPipeline.tables — materialize the parsed base
-    // (lazy localCheckpoint, ContextCleaner-freed) only when the caller
-    // consumes more than one of the three tables; persisting the nested
-    // parse struct costs more than a single parse
     val parsed0 = staleGuard(
       docs.withColumn("p", parseBalanceUdf(col("html"))),
       guardPeriod = "quarterly", twoDigitYear = false)
     val parsedDocs =
-      if (pin) parsed0.localCheckpoint(eager = false) else parsed0
+      if (pin) parsed0.localCheckpoint() else parsed0
     Seq("balance_sheet_assets", "balance_sheet_liabilities",
       "balance_sheet_equity")
       .map(t => t -> rows(parsedDocs, t, twoDigitYear = false)).toMap

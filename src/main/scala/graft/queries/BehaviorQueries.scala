@@ -202,7 +202,7 @@ object BehaviorQueries {
       val days = t(s, dir, "events")
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).cast("double").as("x"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val mean = days.agg(avg("x").as("mu"))
       val centered = days.crossJoin(broadcast(mean))
       val ss = centered
@@ -447,14 +447,14 @@ object BehaviorQueries {
     // one left_anti on the edge set. Same fixture graph as gr3.
     Q("gr4_adamic_adar", (s, dir) => {
       val sym = Components.docGraph(t(s, dir, "documents"))
-        .localCheckpoint(eager = false) // feeds degrees, wedges, exclusion
+        .localCheckpoint() // feeds degrees, wedges, exclusion
       val deg = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= 2 && col("d") <= 64)
       // the cap joins BEFORE the wedge self-join, so a hub over the cap
       // never fans out deg² pairs
       val capped = sym.join(deg, sym("a") === deg("z"))
         .select(col("z"), col("b"), col("d"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val l = capped.select(col("z"), col("b").as("pa"), col("d"))
       val r = capped.select(col("z"), col("b").as("pb"))
       l.join(r, Seq("z")).filter(col("pa") < col("pb"))
@@ -1210,13 +1210,13 @@ object BehaviorQueries {
       val baskets = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("k"), col("l_partkey").as("i"))
         .groupBy("k").agg(collect_set(col("i")).as("xs"))
-        .localCheckpoint(eager = false) // feeds item counts AND bf
+        .localCheckpoint() // feeds item counts AND bf
       val items = baskets.select(explode(col("xs")).as("i"))
         .groupBy("i").agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") >= 20).select("i")
       val bf = baskets.select(col("k"), explode(col("xs")).as("i"))
         .join(items, "i").select("k", "i")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val fb = bf.groupBy("k").agg(sort_array(collect_set(col("i"))).as("fs"))
       val fp = fb.select(explode(expr(
         """flatten(transform(fs, (x, i) ->
@@ -1225,7 +1225,7 @@ object BehaviorQueries {
         .select(col("p.p1").as("p1"), col("p.p2").as("p2"))
         .groupBy("p1", "p2").agg(count(lit(1)).as("co"))
         .filter(col("co") >= 2).select("p1", "p2")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       // candidate gen: (a,b)+(a,c) sharing the prefix, closed under (b,c)
       val cand = fp.select(col("p1").as("i1"), col("p2").as("i2"))
         .join(fp.select(col("p1").as("i1"), col("p2").as("i3")), Seq("i1"))
@@ -1305,7 +1305,7 @@ object BehaviorQueries {
         .select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
         .filter(col("u") =!= col("v")).distinct()
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val m = und.agg(count(lit(1)).as("m"))
       val withLabels = und
         .join(labels.select(col("node").as("u"), col("label").as("lu")), "u")

@@ -459,7 +459,7 @@ object LlmQueries {
       val docs = t(s, dir, "documents")
       val sh = Dedup.shingleMultiset(docs, "doc_id", "text")
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val texts = docs.select(col("doc_id"), col("text"))
       Dedup.lshCandidatePairs(sig, "doc_id")
         .join(texts.select(col("doc_id").as("doc_a"),
@@ -480,14 +480,13 @@ object LlmQueries {
       ORDER BY p.doc_a, p.doc_b""")),
 
     // MinHash + LSH banding: candidate pairs via (band, signature) buckets.
-    // The signature table feeds both sides of the candidate self-join —
-    // materialize it (lazy localCheckpoint: ContextCleaner-freed, never
-    // pinned) so the shingle explode + groupBy runs once, not twice.
+    // The signature table feeds both sides of the candidate self-join, so
+    // it is pinned: the shingle explode + groupBy runs once, not twice.
     Q("dd2_minhash_lsh", (s, dir) => {
       // multiset: min-per-band doesn't need the distinct's extra shuffle
       val sh = Dedup.shingleMultiset(t(s, dir, "documents"), "doc_id", "text")
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       Dedup.lshCandidatePairs(sig, "doc_id").orderBy("doc_a", "doc_b")
     }, Some(s"""
       WITH $MinhashPairsCte
@@ -510,7 +509,7 @@ object LlmQueries {
       val sh = Dedup.shingleMultiset(docs, "doc_id", "text")
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4,
         mode = graft.operators.HashMode.XxHash64)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cand = Dedup.lshCandidatePairs(sig, "doc_id")
       // r14: the verify side never needs shingle TEXT — hash before the
       // distinct so the dedup exchange and the overlap joins carry longs
@@ -540,9 +539,9 @@ object LlmQueries {
     // a pass/fail collision count.
     Q("dd2c_minhash_estimate_error", (s, dir) => {
       val sh = Dedup.shingleSet(t(s, dir, "documents"), "doc_id", "text")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cand = Dedup.lshCandidatePairs(sig, "doc_id")
       val sa = sig.select(col("doc_id").as("doc_a"), col("band"),
         col("mh").as("mh_a"))
@@ -592,7 +591,7 @@ object LlmQueries {
     // tokenize+explode+distinct per consumer.
     Q("dd3_ngram_jaccard", (s, dir) => {
       val sh = Dedup.shingleSet(t(s, dir, "documents"), "doc_id", "text")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 1)
       val cand = Dedup.lshCandidatePairs(sig, "doc_id")
       Dedup.jaccardOnCandidates(cand, sh, "doc_id")
@@ -624,7 +623,7 @@ object LlmQueries {
     // contained side, not the container.
     Q("dd14_containment", (s, dir) => {
       val sh = Dedup.shingleSet(t(s, dir, "documents"), "doc_id", "text")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
       val cand = Dedup.lshCandidatePairs(sig, "doc_id")
       Dedup.containmentOnCandidates(cand, sh, "doc_id")
@@ -924,7 +923,7 @@ object LlmQueries {
       val docs = t(s, dir, "documents")
       val sh = Dedup.shingleMultiset(docs, "doc_id", "text")
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cc = Components.connectedComponents(
         Dedup.lshCandidatePairs(sig, "doc_id"), "doc_a", "doc_b")
       docs.select(col("doc_id"))
@@ -993,7 +992,7 @@ object LlmQueries {
       val docs = t(s, dir, "documents")
       val sh = Dedup.shingleMultiset(docs, "doc_id", "text")
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cc = graft.operators.Components.connectedComponents(
         Dedup.lshCandidatePairs(sig, "doc_id"), "doc_a", "doc_b")
       docs.select(col("doc_id"),
@@ -2974,7 +2973,6 @@ object LlmQueries {
     Q("sa7_split_leakage", (s, dir) => {
       val docs = t(s, dir, "documents")
       val sh = Dedup.shingleSet(docs, "doc_id", "text")
-        .localCheckpoint(eager = false)
       val pairs = Dedup.lshCandidatePairs(
         Dedup.minhashSignatures(sh, "doc_id", bands = 4), "doc_id")
       val splits = docs.select(col("doc_id"),
@@ -3091,9 +3089,8 @@ object LlmQueries {
         TA.qualityScore(col("text")) >= 0.5 &&
           TA.langId(col("text")) === "en")
       // the deduped gate output feeds the near-dup pass, the survivor
-      // anti-join, and (via survivors) decontamination — materialize the
-      // quality+langId+window lineage once (lazy localCheckpoint:
-      // ContextCleaner-freed, never pinned in the cache manager)
+      // anti-join, and (via survivors) decontamination — pinned, so the
+      // quality+langId+window lineage runs once
       val exact = quality
         // internal group key only (oracle partitions by its own digest;
         // group identity is all that matters): hash128 — whole-text keys
@@ -3101,7 +3098,7 @@ object LlmQueries {
         .withColumn("__h", Dedup.hash128(col("text")))
         .withColumn("__m", min(col("doc_id")).over(Window.partitionBy("__h")))
         .filter(col("doc_id") === col("__m")).drop("__h", "__m")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       // `exact` is already one row per distinct text, so nearDupPairs'
       // own rep-collapse window would be the identity — the OnReps form
       // skips that second full corpus window (r15, guide §2.4)
@@ -3222,10 +3219,10 @@ object LlmQueries {
       // self-join — one scan, zero exchanges, same survivors (r15 §2.4)
       val gated = TA.gopherFilter(docs, "text")
         .select(col("doc_id"), col("source"), col("text"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val sh = Dedup.shingleMultiset(gated, "doc_id", "text")
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cc = Components.connectedComponents(
         Dedup.lshCandidatePairs(sig, "doc_id"), "doc_a", "doc_b")
       val reps = gated.join(cc, gated("doc_id") === cc("node"), "left_anti")
@@ -3316,7 +3313,6 @@ object LlmQueries {
       val seg = Dedup.segmentDedupText(docs, "doc_id", "text", segTokens = 20,
           carry = Seq("source"))
         .filter(col("kept_segs") > 0)
-        .localCheckpoint(eager = false)
       val plantedUrl = concat(
         when(col("doc_id") % 2 === 0, lit("HTTPS://WWW."))
           .otherwise(lit("https://")),
@@ -3330,7 +3326,7 @@ object LlmQueries {
           min(col("doc_id")).over(Window.partitionBy(col("__canon"))))
         .filter(col("doc_id") === col("__m"))
         .drop("__canon", "__m")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val vecs = TA.hashingEmbedding(urlKept, "doc_id", "text_clean",
           dims = 16)
         .groupBy("doc_id")
@@ -4115,7 +4111,7 @@ object LlmQueries {
       val docs = t(s, dir, "documents")
       val sh = Dedup.shingleMultiset(docs, "doc_id", "text")
       val sig = Dedup.minhashSignatures(sh, "doc_id", bands = 4)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cc = Components.connectedComponents(
         Dedup.lshCandidatePairs(sig, "doc_id"), "doc_a", "doc_b")
       // class identity only (never emitted): hash128 — whole-text class
@@ -4128,7 +4124,7 @@ object LlmQueries {
           col("tkey"))
       val ct = assign.groupBy("cluster_id", "tkey")
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false) // feeds both max-overlap sums
+        .localCheckpoint() // feeds both max-overlap sums
       val pur = ct.groupBy("cluster_id").agg(max("cnt").as("m"))
         .agg(count(lit(1)).as("n_clusters"), sum("m").as("pnum"))
       val inv = ct.groupBy("tkey").agg(max("cnt").as("m"))
@@ -4256,7 +4252,7 @@ object LlmQueries {
       val sig = Dedup.minhashSignatures(
         Dedup.shingleMultiset(t(s, dir, "documents"), "doc_id", "text"),
         "doc_id", bands = 4)
-        .localCheckpoint(eager = false) // both sides of the band join
+        .localCheckpoint() // both sides of the band join
       val a = sig.select(col("doc_id").as("doc_a"), col("band"), col("mh"))
       val b = sig.select(col("doc_id").as("doc_b"), col("band"), col("mh"))
       val votes = a.join(b, Seq("band", "mh"))
@@ -4303,7 +4299,7 @@ object LlmQueries {
       val vocab = t(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("freq"))
-        .localCheckpoint(eager = false) // feeds self keys + delete keys
+        .localCheckpoint() // feeds self keys + delete keys
       def deletes(df: org.apache.spark.sql.DataFrame, c: String) = df
         .select(col(c), explode(sequence(lit(1), length(col(c))))
           .as("i"))

@@ -208,7 +208,7 @@ object MetricQueries {
         .select(col("d").as("dy"), col("cents").as("y"))
       val al = x.join(y, col("d") === col("dy"))
         .select(col("d"), col("x"), col("y"))
-        .localCheckpoint(eager = false) // feeds pairs, ties, and the count
+        .localCheckpoint() // feeds pairs, ties, and the count
       val a = al.select(col("d").as("d1"), col("x").as("x1"),
         col("y").as("y1"))
       val b = al.select(col("d").as("d2"), col("x").as("x2"),
@@ -354,7 +354,6 @@ object MetricQueries {
       val sources = docs.filter(col("doc_id") % 125 === 0)
       val lv = Components
         .bfsLevels(fixture, "a", "b", sources, "doc_id", maxRounds = 6)
-        .localCheckpoint(eager = false) // feeds node counts + both ends
       val und = fixture
         .select(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v"))
@@ -420,7 +419,7 @@ object MetricQueries {
         .groupBy(col("n_chars"))
         .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("pos"),
           count(lit(1)).as("tot"))
-        .localCheckpoint(eager = false) // swept once per threshold
+        .localCheckpoint() // swept once per threshold
       val totals = hist.agg(sum("pos").as("p_all")) // 1-row broadcast
       val thr = s.range(0, 10).toDF("i")
         .select((col("i") * 100).as("thr"))
@@ -548,7 +547,7 @@ object MetricQueries {
         .withColumn("rn", row_number().over(wR))
         .withColumn("cum", sum("c").over(
           wR.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .localCheckpoint(eager = false) // swept once per vocab size
+        .localCheckpoint() // swept once per vocab size
       val totals = cum.agg(sum("c").as("total_tokens"),
         count(lit(1)).as("distinct_tokens"))
       val grid = s.createDataFrame(
@@ -663,7 +662,6 @@ object MetricQueries {
         .groupBy("bkt")
         .agg(min("bin").as("lo"), max("bin").as("hi"),
           sum("cnt").as("bcnt"), max("n").as("n"))
-        .localCheckpoint(eager = false) // probed once per range
       val probes = s.createDataFrame(Seq(
         ("p1_low", 0L, 50L), ("p2_mid", 100L, 200L),
         ("p3_wide", 50L, 400L))).toDF("probe", "a", "b")
@@ -779,7 +777,7 @@ object MetricQueries {
       val dimKeys = t(s, dir, "customer")
         .filter(col("c_nationkey") === 7)
         .select(col("c_custkey").cast("long").as("dk")).distinct()
-        .localCheckpoint(eager = false) // builds the bits AND the truth
+        .localCheckpoint() // builds the bits AND the truth
       val bits = positions(dimKeys, "dk").select(col("p")).distinct()
       val probe = positions(t(s, dir, "orders"), "o_custkey")
         .join(broadcast(bits.withColumnRenamed("p", "bp")),
@@ -1130,7 +1128,7 @@ object MetricQueries {
       val ev = t(s, dir, "events")
       val ut = ev.groupBy("user_id", "event_type")
         .agg(min("ts").as("mn"), max("ts").as("mx"))
-        .localCheckpoint(eager = false) // feeds pairs + per-type counts
+        .localCheckpoint() // feeds pairs + per-type counts
       val b = ut.select(col("user_id").as("ub"), col("event_type")
         .as("cons"), col("mx"))
       val pairs = ut.select(col("user_id"), col("event_type").as("ant"),
@@ -1265,7 +1263,7 @@ object MetricQueries {
         .filter(col("prev_type").isNotNull)
         .groupBy(col("prev_type"), col("event_type").as("next_type"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(eager = false) // feeds margins + both entropies
+        .localCheckpoint() // feeds margins + both entropies
       val nt = tr.agg(sum("n").as("tot"))
       val hn = tr.groupBy("next_type").agg(sum("n").as("nn"))
         .crossJoin(broadcast(nt))
@@ -1334,21 +1332,21 @@ object MetricQueries {
     // TakeOrdered, never a full sort to the driver.
     Q("gr15_katz", (s, dir) => {
       val docs = t(s, dir, "documents")
-      val edges = Components.docGraph(docs).localCheckpoint(eager = false)
+      val edges = Components.docGraph(docs).localCheckpoint()
       val ids = docs.select(col("doc_id").as("node"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       var x = ids.select(col("node"), lit(1000000L).as("score"))
       for (_ <- 1 to 3) {
-        // USING-join on renamed keys (hits' pattern) + per-round lazy
-        // checkpoint: no raw df("col") refs survive a self-referencing
-        // lineage, so round k+1 can't alias round k's attributes
+        // USING-join on renamed keys (hits' pattern) + per-round pin: no
+        // raw df("col") refs survive a self-referencing lineage, so round
+        // k+1 can't alias round k's attributes
         val c = edges
           .join(x.select(col("node").as("b"), col("score")), "b")
           .groupBy(col("a").as("node")).agg(sum("score").as("c"))
         x = ids.join(c, Seq("node"), "left")
           .selectExpr("node",
             "1000000L + coalesce(c, 0L) div 8L AS score")
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
       }
       x.orderBy(col("score").desc, col("node")).limit(10)
     }, Some("""
@@ -1394,7 +1392,7 @@ object MetricQueries {
         .select(col("doc_id"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
         .filter(col("term").isin("merge", "sort"))
-        .localCheckpoint(eager = false) // feeds gaps + tf counts
+        .localCheckpoint() // feeds gaps + tf counts
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val gaps = toks
         .withColumn("pterm", lag("term", 1).over(w))
@@ -1695,7 +1693,7 @@ object MetricQueries {
     // to a broadcast probe grid.
     Q("k25_overlap_depth", (s, dir) => {
       val ids = t(s, dir, "documents").select(col("doc_id"))
-        .localCheckpoint(eager = false) // feeds both layouts + the grid
+        .localCheckpoint() // feeds both layouts + the grid
       val mx = ids.agg(max("doc_id").as("m"))
       val fb = graft.operators.Sampling.hashFraction(
         col("doc_id").cast("string"))
@@ -1772,7 +1770,7 @@ object MetricQueries {
         .selectExpr("(CAST(ts AS LONG) div 86400L + 4L) % 7L AS dow",
           "(CAST(ts AS LONG) div 3600L) % 24L AS hour")
         .groupBy("dow", "hour").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false) // feeds 3 chi2s + both peaks
+        .localCheckpoint() // feeds 3 chi2s + both peaks
       val nt = cells.agg(sum("cnt").as("n"))
       def chi2(df: org.apache.spark.sql.DataFrame, k: Int) =
         df.crossJoin(broadcast(nt))
@@ -1934,7 +1932,7 @@ object MetricQueries {
         .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
           .cast("long").as("d"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("y"))
-        .localCheckpoint(eager = false) // feeds median rank + runs scan
+        .localCheckpoint() // feeds median rank + runs scan
       val med = daily
         .select(col("y"), row_number()
           .over(Window.orderBy("y", "d")).as("rn"))
@@ -2012,7 +2010,7 @@ object MetricQueries {
         .select(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
           .cast("long").as("d"), col("o_orderkey"),
           floor(col("o_totalprice") * 100).cast("long").as("cents"))
-        .localCheckpoint(eager = false) // feeds day-max + argmax join
+        .localCheckpoint() // feeds day-max + argmax join
       val daily = o.groupBy("d").agg(max("cents").as("maxc"))
       // renamed join keys (hits' discipline): daily derives from o, so
       // raw o("d")/daily("d") references are ambiguous self-join attrs
@@ -2073,7 +2071,7 @@ object MetricQueries {
       val sizes = ids.join(cc, ids("doc_id") === cc("node"), "left")
         .select(coalesce(col("component"), ids("doc_id")).as("component"))
         .groupBy("component").agg(count(lit(1)).as("sz"))
-        .localCheckpoint(eager = false) // feeds histogram + totals
+        .localCheckpoint() // feeds histogram + totals
       val tot = sizes.agg(count(lit(1)).as("n_components"),
         sum("sz").as("n_nodes"), max("sz").as("giant"),
         sum(when(col("sz") === 1, 1L).otherwise(0L)).as("singletons"))
@@ -2131,7 +2129,7 @@ object MetricQueries {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
           substring(md5(col("text")), 1, 1).isin("0", "1").as("del"))
-        .localCheckpoint(eager = false) // feeds max + file aggregate
+        .localCheckpoint() // feeds max + file aggregate
       val mx = docs.agg(max("doc_id").as("m"))
       docs.crossJoin(broadcast(mx))
         .selectExpr("doc_id * 16L div (m + 1L) AS file", "n_chars", "del")
@@ -2282,7 +2280,7 @@ object MetricQueries {
     Q("hq6_histogram_estimator", (s, dir) => {
       val c = t(s, dir, "orders")
         .select(floor(col("o_totalprice") * 100).cast("long").as("c"))
-        .localCheckpoint(eager = false) // feeds bounds + hist + truth
+        .localCheckpoint() // feeds bounds + hist + truth
       val bounds = c.agg(min("c").as("mn"), max("c").as("mx"))
         .selectExpr("mn", "mx", "mx - mn + 1L AS span")
       val hist = c.crossJoin(broadcast(bounds))
@@ -2402,7 +2400,7 @@ object MetricQueries {
         .groupBy(col("o_custkey").as("ck"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("x"))
         .filter(col("x") > 0)
-        .localCheckpoint(eager = false) // feeds totals + both folds
+        .localCheckpoint() // feeds totals + both folds
       val tot = x.agg(count(lit(1)).as("n"), sum("x").as("xt"))
       x.crossJoin(broadcast(tot))
         .select(col("ck"),
@@ -2529,7 +2527,7 @@ object MetricQueries {
       val delays = v0.join(p0, col("vu") === col("pu"))
         .filter(col("p0") >= col("v0"))
         .select(col("vu").as("u"), (col("p0") - col("v0")).as("delay"))
-        .localCheckpoint(eager = false) // feeds count + rank
+        .localCheckpoint() // feeds count + rank
       val ranked = delays
         .select(col("delay"), row_number()
           .over(Window.orderBy("delay", "u")).as("rn"))
@@ -2576,7 +2574,7 @@ object MetricQueries {
         .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
           .cast("long").as("d"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("y"))
-        .localCheckpoint(eager = false) // feeds totals + prefix scan
+        .localCheckpoint() // feeds totals + prefix scan
       val w = Window.orderBy("d")
       val tot = daily.agg(count(lit(1)).as("n"), sum("y").as("sn"))
       daily
@@ -2636,7 +2634,7 @@ object MetricQueries {
         .filter(col("x") > 0)
         .join(t(s, dir, "customer").select(col("c_custkey").as("ck"),
           col("c_mktsegment").as("seg")), "ck")
-        .localCheckpoint(eager = false) // feeds totals + both fold tiers
+        .localCheckpoint() // feeds totals + both fold tiers
       val tot = x.agg(count(lit(1)).as("n"), sum("x").as("xt"))
       val within = x
         .join(broadcast(x.groupBy(col("seg").as("sg"))
@@ -2650,7 +2648,7 @@ object MetricQueries {
         .agg(aggregate(transform(array_sort(
           collect_list(struct(col("ck"), col("tw")))),
           q => q.getField("tw")), lit(0.0), (a, q) => a + q).as("tws"))
-        .localCheckpoint(eager = false) // reused by the between fold
+        .localCheckpoint() // reused by the between fold
       val between = within.crossJoin(broadcast(tot))
         .select(col("seg"),
           ((col("xg") / col("xt").cast("double")) *
@@ -2731,7 +2729,7 @@ object MetricQueries {
       val sym = Components.docGraph(t(s, dir, "documents"))
         .selectExpr("a", "b",
           "((a + b) * 31L + a * b) % 997L + 1L AS w")
-        .localCheckpoint(eager = false) // feeds argmin + node count
+        .localCheckpoint() // feeds argmin + node count
       val pick = sym
         .groupBy("a")
         .agg(min(struct(col("w"), col("b"))).as("m"))
@@ -2739,7 +2737,7 @@ object MetricQueries {
       val edges = pick
         .selectExpr("least(a, b) AS u", "greatest(a, b) AS v", "w")
         .distinct()
-        .localCheckpoint(eager = false) // feeds CC + mass sums
+        .localCheckpoint() // feeds CC + mass sums
       val nodes = sym.select(col("a").as("node")).distinct()
       val cc = Components.connectedComponents(edges, "u", "v")
       val comp = nodes.join(cc, nodes("node") === cc("node"), "left")
@@ -2844,7 +2842,7 @@ object MetricQueries {
           .as("o_custkey"), col("c_mktsegment").as("seg")), "o_custkey")
         .select(col("seg"), col("o_orderkey"),
           floor(col("o_totalprice") * 100).cast("long").as("c"))
-        .localCheckpoint(eager = false) // feeds median rank + seg counts
+        .localCheckpoint() // feeds median rank + seg counts
       val med = o
         .select(col("c"), row_number()
           .over(Window.orderBy("c", "o_orderkey")).as("rn"))
@@ -2855,7 +2853,7 @@ object MetricQueries {
         .groupBy("seg")
         .agg(count(lit(1)).as("n_g"),
           sum(when(col("c") > col("med"), 1L).otherwise(0L)).as("a_g"))
-        .localCheckpoint(eager = false) // feeds totals + the fold
+        .localCheckpoint() // feeds totals + the fold
       val tot = segs.agg(sum("n_g").as("n"), sum("a_g").as("a"))
       val terms = segs.crossJoin(broadcast(tot))
         .select(col("seg"), col("n_g"), col("a_g"),
@@ -2920,10 +2918,10 @@ object MetricQueries {
         .selectExpr("doc_id", "n_chars div 50L AS cx",
           "CAST(size(split(text, ' ')) AS LONG) div 10L AS cy")
         .groupBy("cx", "cy").agg(count(lit(1)).as("n_docs"))
-        .localCheckpoint(eager = false) // feeds core set + noise mass
+        .localCheckpoint() // feeds core set + noise mass
       val core = cells.filter(col("n_docs") >= 5)
         .selectExpr("cx", "cy", "cx * 100000L + cy AS cell_id", "n_docs")
-        .localCheckpoint(eager = false) // both sides of the offset join
+        .localCheckpoint() // both sides of the offset join
       val b = core.selectExpr("cx AS bx", "cy AS by", "cell_id AS bid")
       val edges = core.join(b,
           abs(col("cx") - col("bx")) <= 1 &&
@@ -3292,7 +3290,7 @@ object MetricQueries {
       val x = t(s, dir, "orders")
         .groupBy(col("o_custkey").as("ck"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("x"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val ranked = x
         .select(col("x"), row_number()
           .over(Window.orderBy(col("x").desc, col("ck"))).cast("long")
@@ -3346,7 +3344,7 @@ object MetricQueries {
       val e2 = docs.filter(col("doc_id") >= 3)
         .selectExpr("doc_id AS u", "doc_id div 3L AS v")
       val edges = e1.unionByName(e2).distinct()
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       var layer = docs.select(col("doc_id").as("node"),
         lit(0L).as("layer"))
       for (_ <- 1 to 10) {
@@ -3357,7 +3355,7 @@ object MetricQueries {
         layer = docs.select(col("doc_id").as("node"))
           .join(relax, Seq("node"), "left")
           .selectExpr("node", "coalesce(lu, 0L) AS layer")
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
       }
       layer.groupBy("layer").agg(count(lit(1)).as("n_nodes"))
         .crossJoin(broadcast(layer.agg(max("layer").as("height"))))
@@ -3411,7 +3409,7 @@ object MetricQueries {
           element_at(col("cs"), col("i")).as("c"),
           element_at(col("cs"), col("i") + 1).as("nx"))
         .groupBy("source", "c", "nx").agg(count(lit(1)).as("n"))
-        .localCheckpoint(eager = false) // feeds margins + fold
+        .localCheckpoint() // feeds margins + fold
       val cm = pairs.groupBy(col("source").as("s2"), col("c").as("c2"))
         .agg(sum("n").as("nc"))
       val st = pairs.groupBy(col("source").as("s3"))
@@ -3526,7 +3524,7 @@ object MetricQueries {
         .crossJoin(broadcast(c.agg(count(lit(1)).as("n"))))
         .withColumn("lo", expr("n div 10L"))
         .withColumn("hi", expr("n - n div 10L"))
-        .localCheckpoint(eager = false) // feeds all four locations
+        .localCheckpoint() // feeds all four locations
       val med = ranked.filter(col("rn") === expr("(n + 1L) div 2L"))
         .selectExpr("c AS median_cents")
       val loVal = ranked.filter(col("rn") === col("lo") + 1)
@@ -3655,7 +3653,6 @@ object MetricQueries {
         .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
           .cast("long").as("d"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = false)
       val span = daily.agg((max("d") - min("d") + 1).as("n_days"),
         count(lit(1)).as("active_days"), sum("c").as("s"),
         sum(col("c") * col("c")).as("ss"))
@@ -3693,7 +3690,7 @@ object MetricQueries {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
           substring(md5(col("text")), 1, 1).isin("0", "1").as("del"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val mx = docs.agg(max("doc_id").as("m"))
       val files = docs.crossJoin(broadcast(mx))
         .selectExpr("doc_id * 16L div (m + 1L) AS file", "n_chars",
@@ -3875,7 +3872,7 @@ object MetricQueries {
           Window.partitionBy("seg")).cast("long"))
         .withColumn("lo", expr("n div 10L"))
         .withColumn("hi", expr("n - n div 10L"))
-        .localCheckpoint(eager = false) // feeds bounds + winsor sums
+        .localCheckpoint() // feeds bounds + winsor sums
       val bounds = ranked.filter(col("rn") === col("lo") + 1)
         .select(col("seg").as("s2"), col("c").as("lo_c"))
         .join(ranked.filter(col("rn") === col("hi"))
@@ -3961,7 +3958,7 @@ object MetricQueries {
         .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
           .cast("long").as("d"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("y"))
-        .localCheckpoint(eager = false) // feeds MR window + rescan
+        .localCheckpoint() // feeds MR window + rescan
       val w = Window.orderBy("d")
       val mr = daily
         .withColumn("mrv", abs(col("y") - lag("y", 1).over(w)))
@@ -4051,7 +4048,7 @@ object MetricQueries {
         .select(col("c"), row_number().over(
           Window.orderBy(col("c").desc, col("kk"))).cast("long").as("rn"))
         .filter(col("rn") <= k + 1)
-        .localCheckpoint(eager = false) // feeds pivot + fold
+        .localCheckpoint() // feeds pivot + fold
       val pivot = ranked.filter(col("rn") === k + 1)
         .selectExpr("c AS xk1")
       ranked.filter(col("rn") <= k)
@@ -4095,7 +4092,7 @@ object MetricQueries {
         .groupBy(col("l_partkey").as("pk"))
         .agg(sum(floor(col("l_extendedprice") * 100).cast("long"))
           .as("rev"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val ranked = pr
         .select(col("pk"), col("rev"), row_number().over(
           Window.orderBy(col("rev").desc, col("pk"))).cast("long")
@@ -4350,7 +4347,7 @@ object MetricQueries {
         .agg(count(lit(1)).as("x"))
         .select(col("x"), row_number().over(Window.orderBy("day"))
           .cast("long").as("rn"))
-        .localCheckpoint(eager = false) // feeds totals + both join sides
+        .localCheckpoint() // feeds totals + both join sides
       val tot = days.agg(count(lit(1)).as("n"), sum("x").as("sx"))
       val r = days.crossJoin(broadcast(tot))
         .select(col("rn"), (col("n") * col("x") - col("sx")).as("res"),
@@ -4479,7 +4476,7 @@ object MetricQueries {
         .groupBy("user_id", "sid")
         .agg(min("ts2").as("st"), max("ts2").as("en"))
       val conc = graft.operators.SweepLine.concurrency(sess, "st", "en")
-        .localCheckpoint(eager = false) // feeds peak + first-peak scans
+        .localCheckpoint() // feeds peak + first-peak scans
       val pk = conc.agg(max("conc").as("peak"))
       val tp = conc.join(broadcast(pk), col("conc") === col("peak"))
         .agg(min("t").as("t_peak"), first("peak").as("peak_conc"))
@@ -4547,7 +4544,7 @@ object MetricQueries {
         .withColumn("pnl", col("y") - lag("y", 1).over(wD))
         .filter(col("pnl").isNotNull)
         .select(col("d"), col("pnl"))
-        .localCheckpoint(eager = false) // feeds rank + moment folds
+        .localCheckpoint() // feeds rank + moment folds
       val n = pnl.count // day-grain bounded; drives the exact tail rank
       val k = (n + 19) / 20
       val ranked = pnl.select(col("pnl"), row_number().over(
@@ -4806,7 +4803,7 @@ object MetricQueries {
         .groupBy("c_custkey")
         .agg(expr("max_by(node, h)").as("owner8"),
           expr("max_by(node, h) FILTER (WHERE node < 7)").as("owner7"))
-        .localCheckpoint(eager = false) // feeds both layout rollups
+        .localCheckpoint() // feeds both layout rollups
       val by8 = owners.groupBy(col("owner8").as("node"))
         .agg(count(lit(1)).as("n_keys8"),
           sum(when(col("owner8") =!= col("owner7"), 1L).otherwise(0L))
@@ -5024,7 +5021,7 @@ object MetricQueries {
       val daily = t(s, dir, "lineitem")
         .groupBy(to_date(col("l_shipdate")).as("day"))
         .agg(sum(floor(col("l_quantity")).cast("long")).as("dem"))
-        .localCheckpoint(eager = false) // feeds rank, mean, and cost scans
+        .localCheckpoint() // feeds rank, mean, and cost scans
       val wR = Window.orderBy(col("dem"), col("day"))
       val ranked = daily.select(col("dem"),
         row_number().over(wR).cast("long").as("rn"))
@@ -5382,7 +5379,7 @@ object MetricQueries {
       val subsets = (0L to 7L).toDF("s")
       val v = subsets.join(masks, expr("(mask & s) = mask"), "left")
         .groupBy("s").agg(coalesce(sum("cnt"), lit(0L)).as("v"))
-        .localCheckpoint(eager = false) // feeds two coalition joins
+        .localCheckpoint() // feeds two coalition joins
       // (channel, S without channel, |S|) triples — 12 literal rows
       val triples = (for {
         i <- Seq(1L, 2L, 4L); ss <- 0L to 7L if (ss & i) == 0L
@@ -5498,7 +5495,7 @@ object MetricQueries {
           .selectExpr("u", "(3 * u + 2) % 499 AS v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-        .localCheckpoint(eager = false) // feeds both join sides + count
+        .localCheckpoint() // feeds both join sides + count
       val recip = edges.join(
         edges.select(col("v").as("u"), col("u").as("v")),
         Seq("u", "v"), "left_semi")
@@ -5539,7 +5536,7 @@ object MetricQueries {
       val preds = t(s, dir, "documents")
         .select(col("lang"),
           graft.operators.TextAnalysis.langId(col("text")).as("pred"))
-        .localCheckpoint(eager = false) // feeds diag + both marginals
+        .localCheckpoint() // feeds diag + both marginals
       val n = preds.agg(count(lit(1)).as("n"))
       val agree = preds.filter(col("lang") === col("pred"))
         .agg(count(lit(1)).as("n_agree"))
@@ -5619,7 +5616,7 @@ object MetricQueries {
         .withColumn("p", col("y") - lag("y", 1).over(wD))
         .filter(col("p").isNotNull)
         .select(col("d"), col("p"))
-        .localCheckpoint(eager = false) // feeds all three q-frames
+        .localCheckpoint() // feeds all three q-frames
       def foldBy(field: String) =
         aggregate(transform(array_sort(collect_list(
           struct(col("d"), col(field)))), q => q.getField(field)),
@@ -5853,7 +5850,7 @@ object MetricQueries {
       val terms = Seq("spark", "shuffle", "broadcast")
       val toks = t(s, dir, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .localCheckpoint(eager = false) // feeds lengths + the tf table
+        .localCheckpoint() // feeds lengths + the tf table
       val lens = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))
       val stats = lens.agg(count(lit(1)).as("n_docs"),
         avg("len").as("avglen"))
@@ -5927,7 +5924,7 @@ object MetricQueries {
         .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
           .cast("long").as("d"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("y"))
-        .localCheckpoint(eager = false) // feeds train ranks + test scans
+        .localCheckpoint() // feeds train ranks + test scans
       val train = daily.filter(col("d") < 1460)
       val m = train.count
       val ranked = train.select(col("y"), row_number().over(
@@ -6077,7 +6074,7 @@ object MetricQueries {
         .groupBy(datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
           .cast("long").as("d"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("y"))
-        .localCheckpoint(eager = false) // feeds totals + the curve
+        .localCheckpoint() // feeds totals + the curve
       val curve = daily
         .crossJoin(broadcast(daily.agg(count(lit(1)).as("n"),
           sum("y").as("sy"))))
@@ -6089,7 +6086,7 @@ object MetricQueries {
         .groupBy("grp")
         .agg(count(lit(1)).as("len"), min("d").as("start_d"),
           max("dd").as("depth"))
-        .localCheckpoint(eager = false) // feeds the rollup + the top-1
+        .localCheckpoint() // feeds the rollup + the top-1
       spells
         .agg(count(lit(1)).as("n_spells"),
           coalesce(max("len"), lit(0L)).as("longest_days"))
@@ -6306,7 +6303,7 @@ object MetricQueries {
       val ev = t(s, dir, "events")
         .select(col("event_type"), col("ts").cast("long").as("et"),
           length(col("props")).cast("long").as("pbytes"))
-        .localCheckpoint(eager = false) // feeds horizon + the rollup
+        .localCheckpoint() // feeds horizon + the rollup
       val hz = ev.agg(max("et").as("hz"))
       ev.crossJoin(broadcast(hz))
         .withColumn("expired",
@@ -6350,7 +6347,7 @@ object MetricQueries {
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts").cast("long").as("et"),
           floor(col("value") * 100).cast("long").as("cents"))
-        .localCheckpoint(eager = false) // feeds the midpoint + rollup
+        .localCheckpoint() // feeds the midpoint + rollup
       val mid = ev.agg(expr("(min(et) + max(et)) div 2").as("cut"))
       val perUser = ev.crossJoin(broadcast(mid))
         .groupBy(col("user_id"))
@@ -6706,7 +6703,7 @@ object MetricQueries {
           .as("x"))
         .select(col("day"), col("x"),
           dayofweek(col("day")).cast("long").as("dow"))
-        .localCheckpoint(eager = false) // feeds median ranks + deviations
+        .localCheckpoint() // feeds median ranks + deviations
       val wG = Window.partitionBy("dow").orderBy(col("x"), col("day"))
       val med = daily
         .withColumn("rn", row_number().over(wG).cast("long"))
@@ -7014,7 +7011,7 @@ object MetricQueries {
         .agg(count(lit(1)).as("x"))
         .select(col("x"), row_number().over(Window.orderBy("day"))
           .cast("long").as("rn"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tot = days.agg(count(lit(1)).as("n"), sum("x").as("sx"))
       val r = days.crossJoin(broadcast(tot))
         .select(col("rn"), (col("n") * col("x") - col("sx")).as("res"),
@@ -7027,7 +7024,7 @@ object MetricQueries {
           expr("prn = rn - k"))
         .groupBy("k")
         .agg(sum(col("res") * col("pres")).as("a"), first("n").as("n"))
-        .localCheckpoint(eager = false) // feeds cutoff + fold
+        .localCheckpoint() // feeds cutoff + fold
       val cutoff = byLag.filter(col("a") < 0)
         .agg(coalesce(min("k"), lit(m.toLong + 1)).as("kneg"))
       def foldBy(field: String) =
@@ -7438,12 +7435,12 @@ object MetricQueries {
         .select(col("d"), (col("p") * col("p")).as("s2"))
         .select(col("s2"), row_number().over(Window.orderBy("d"))
           .cast("long").as("rn"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tot = sq.agg(count(lit(1)).as("n"), sum("s2").as("ss2"))
       val r = sq.crossJoin(broadcast(tot))
         .select(col("rn"),
           (col("n") * col("s2") - col("ss2")).as("res"), col("n"))
-        .localCheckpoint(eager = false) // feeds SS + all lag joins
+        .localCheckpoint() // feeds SS + all lag joins
       def foldBy(df: org.apache.spark.sql.DataFrame, field: String) =
         df.agg(aggregate(transform(array_sort(collect_list(
           struct(col("rn"), col(field)))), q => q.getField(field)),
@@ -7515,7 +7512,7 @@ object MetricQueries {
       val active = t(s, dir, "orders")
         .filter(col("o_custkey") % 97 === 0)
         .select(to_date(col("o_orderdate")).as("day")).distinct()
-        .localCheckpoint(eager = false) // feeds span + the anti-join
+        .localCheckpoint() // feeds span + the anti-join
       val span = active.agg(min("day").as("d0"), max("day").as("d1"),
         count(lit(1)).as("n_active"))
       val spine = span.select(explode(expr("sequence(d0, d1)")).as("day"))
@@ -7579,7 +7576,6 @@ object MetricQueries {
         .toDF("hex_chars", "bits")
       val docs = t(s, dir, "documents")
         .select(md5(col("text")).as("h"))
-        .localCheckpoint(eager = false) // feeds all three widths
       docs.crossJoin(broadcast(widths))
         .select(col("hex_chars"), col("bits"),
           expr("substring(h, 1, CAST(hex_chars AS INT))").as("hw"))
@@ -7751,7 +7747,7 @@ object MetricQueries {
         .agg(count(lit(1)).as("x"))
         .select(col("x"), row_number().over(Window.orderBy("day"))
           .cast("long").as("rn"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tot = days.agg(count(lit(1)).as("n"), sum("x").as("sx"))
       val r = days.crossJoin(broadcast(tot))
         .select(col("rn"), (col("n") * col("x") - col("sx")).as("res"))
@@ -7762,7 +7758,7 @@ object MetricQueries {
         .join(r.select(col("rn").as("prn"), col("res").as("pres")),
           expr("prn = rn - k"))
         .groupBy("k").agg(sum(col("res") * col("pres")).as("a"))
-        .localCheckpoint(eager = false) // feeds argmax + the lag-7 probe
+        .localCheckpoint() // feeds argmax + the lag-7 probe
       val best = byLag.orderBy(col("a").desc, col("k")).limit(1)
         .selectExpr("k AS best_lag", "a AS a_best")
       val ref7 = byLag.filter(col("k") === 7)
@@ -7815,7 +7811,7 @@ object MetricQueries {
         .distinct()
       val adj = edges.unionAll(edges.select(col("v").as("u"),
         col("u").as("v"))).distinct()
-        .localCheckpoint(eager = false) // feeds both hops
+        .localCheckpoint() // feeds both hops
       val twoHop = adj.select(col("u"), col("v").as("mid"))
         .join(adj.select(col("u").as("mid"), col("v").as("w")), "mid")
         .select(col("u"), col("w").as("v"))
@@ -7974,11 +7970,11 @@ object MetricQueries {
       val oDates = t(s, dir, "orders")
         .groupBy(to_date(col("o_orderdate")).as("k"))
         .agg(count(lit(1)).as("a"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val lDates = t(s, dir, "lineitem")
         .groupBy(to_date(col("l_shipdate")).as("k"))
         .agg(count(lit(1)).as("b"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       def audit(name: String, left: org.apache.spark.sql.DataFrame,
                 right: org.apache.spark.sql.DataFrame) = {
         val exact = left.join(right, "k")

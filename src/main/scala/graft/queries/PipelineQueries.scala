@@ -528,11 +528,9 @@ object PipelineQueries {
         buildCfLegacyNumUdf(col("p_partkey")).as("html"),
         lit("2025-06-01").cast("date").as("folder_date"))
       // fresh feeds the poison-store derivation AND both load sides (guard
-      // join + anti-join) — without materializing, the parse lineage runs
-      // once per appearance. Lazy localCheckpoint (ContextCleaner-freed,
-      // repo convention) makes it one parse total.
+      // join + anti-join) — pinned, so it is one parse total.
       val fresh = StatementsPipeline.cashFlow(docs, layout2024 = false)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tableCols = Schemas.cashFlowStatement.fieldNames.toSeq
       val poison = fresh
         .filter(expr("CAST(substr(act_symbol, 2) AS BIGINT) % 3 = 0"))
@@ -999,7 +997,7 @@ object PipelineQueries {
       val fps = graft.operators.TextAnalysis.winnowingFingerprints(
         docs, "doc_id", "text", k = 8, w = 4,
         mode = graft.operators.HashMode.XxHash64)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val cand = fps.as("a")
         .join(fps.as("b"), col("a.fp") === col("b.fp") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -1015,7 +1013,7 @@ object PipelineQueries {
         .select(col("doc_id"), split(col("text"), "").as("__cs"))
         .select(col("doc_id"), explode(g11).as("g"))
         .select(col("doc_id"), xxhash64(col("g")).as("gh"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val rare = grams.join(
         grams.groupBy("gh").agg(count(lit(1)).as("df"))
           .filter(col("df") <= 20).select("gh"), "gh")

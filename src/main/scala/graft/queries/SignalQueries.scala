@@ -365,10 +365,9 @@ object SignalQueries {
       // token totals and the vocabulary size both derive from the bounded
       // (class, word) count table (tot = Σcnt per class, v = distinct w of
       // tc), where they previously each re-ran the full explode. tc feeds
-      // three consumers, so it is pinned (lazy localCheckpoint). Identical
-      // integer counts.
+      // three consumers, so it is pinned. Identical integer counts.
       val tc = tw.groupBy("c", "w").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tot = tc.groupBy("c").agg(sum("cnt").as("tot"))
       val v = tc.select("w").distinct().groupBy().agg(count(lit(1)).as("v"))
       val classes = tot.crossJoin(broadcast(v)) // |langs| rows

@@ -65,7 +65,7 @@ object TrendQueries {
     Q("w14_rolling_distinct_users", (s, dir) => {
       val ud = t(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-        .localCheckpoint(eager = false) // feeds days, dau, and the explode
+        .localCheckpoint() // feeds days, dau, and the explode
       val days = ud.select("day").distinct()
       val dau = ud.groupBy("day").agg(countDistinct("user_id").as("dau"))
       val wau = ud
@@ -206,7 +206,7 @@ object TrendQueries {
     Q("mb3_item_cooccurrence", (s, dir) => {
       val b = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-        .localCheckpoint(eager = false) // feeds item counts AND the pair join
+        .localCheckpoint() // feeds item counts AND the pair join
       val ic = b.groupBy("p").agg(count(lit(1)).as("c"))
       val pairs = b.select(col("o"), col("p").as("pa"))
         .join(b.select(col("o"), col("p").as("pb")), "o")
@@ -247,7 +247,7 @@ object TrendQueries {
         .join(core.select(col("z").as("a")), Seq("a"), "left_semi")
         .join(core.select(col("z").as("b")), Seq("b"), "left_semi")
         .select("a", "b")
-        .localCheckpoint(eager = false) // feeds degrees, wedges, adjacency
+        .localCheckpoint() // feeds degrees, wedges, adjacency
       val deg = edges.groupBy(col("a").as("z")).agg(count(lit(1)).as("d"))
       val l = edges.select(col("a").as("z"), col("b").as("pa"))
       val r = edges.select(col("a").as("z"), col("b").as("pb"))
@@ -330,7 +330,7 @@ object TrendQueries {
         .select(col("user_id"), to_date(col("ts")).as("day"))
       val daySk = ud.groupBy("day")
         .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-        .localCheckpoint(eager = false) // feeds day list AND the explode
+        .localCheckpoint() // feeds day list AND the explode
       val days = daySk.select("day")
       val est = daySk
         .select(col("sk"),
@@ -409,7 +409,7 @@ object TrendQueries {
     // over exact integers.
     Q("gr10_clustering_coefficient", (s, dir) => {
       val sym = Components.docGraph(t(s, dir, "documents"))
-        .localCheckpoint(eager = false) // feeds degrees AND the edge list
+        .localCheckpoint() // feeds degrees AND the edge list
       val und = sym.filter(col("a") < col("b"))
         .select(col("a").as("u"), col("b").as("v"))
       val tri = Triangles.trianglesPerNode(und)
@@ -479,11 +479,11 @@ object TrendQueries {
       // signature aggregate without ever being stored.
       val truth = Dedup.prefixFilterJaccardJoin(docs, "doc_id", "text", 2, 5)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager = false) // counted AND intersected below
+        .localCheckpoint() // counted AND intersected below
       val sh = Dedup.shingleSet(docs, "doc_id", "text")
       val cand = Dedup.lshCandidatePairs(
         Dedup.minhashSignatures(sh, "doc_id", bands = 4), "doc_id")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       val nTrue = truth.agg(count(lit(1)).as("n_true"))
       val nCand = cand.agg(count(lit(1)).as("n_cand"))
@@ -538,7 +538,7 @@ object TrendQueries {
     // (disassortative), the expected shape for this divisor graph.
     Q("gr11_degree_assortativity", (s, dir) => {
       val sym = Components.docGraph(t(s, dir, "documents"))
-        .localCheckpoint(eager = false) // feeds degrees AND the edge scan
+        .localCheckpoint() // feeds degrees AND the edge scan
       val deg = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("d"))
       sym
         .join(deg.select(col("z").as("a"), col("d").as("__x")), "a")
@@ -694,7 +694,7 @@ object TrendQueries {
       val terms = Seq("spark", "shuffle", "broadcast")
       val toks = t(s, dir, "documents")
         .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("term"))
-        .localCheckpoint(eager = false) // feeds lens, cf, tf
+        .localCheckpoint() // feeds lens, cf, tf
       val lens = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))
       val total = toks.agg(count(lit(1)).as("__T"))
       val cf = toks.filter(col("term").isin(terms: _*))
@@ -1115,7 +1115,7 @@ object TrendQueries {
         (col("user_id") % 1024).cast("int").as("x"),
         dayofyear(col("ts")).as("y"))
         .withColumn("zkey", ZOrder.mortonKey(col("x"), col("y")))
-        .localCheckpoint(eager = false) // three layouts scan it
+        .localCheckpoint() // three layouts scan it
       def env(order: org.apache.spark.sql.Column, layout: String) = keyed
         .withColumn("file_id",
           ntile(16).over(Window.orderBy(order, col("event_id"))))
@@ -1129,7 +1129,7 @@ object TrendQueries {
       val all = env(col("event_id"), "1_insertion")
         .unionByName(env(col("x"), "2_sorted_x"))
         .unionByName(env(col("zkey"), "3_zorder"))
-        .localCheckpoint(eager = false) // both predicates read it
+        .localCheckpoint() // both predicates read it
       def audit(pred: String, hit: org.apache.spark.sql.Column,
                 m: org.apache.spark.sql.Column) = all
         .groupBy("layout")
@@ -1318,7 +1318,7 @@ object TrendQueries {
           expr("date_add(d0, 30)").as("recorded_at"),
           (col("cents") + 1000).as("cents"))
       val versions = v1.unionByName(v2)
-        .localCheckpoint(eager = false) // both query points scan it
+        .localCheckpoint() // both query points scan it
       def asOf(label: String, t_ : String, v: String) = {
         val w = Window.partitionBy("k")
           .orderBy(col("valid_from").desc, col("recorded_at").desc)
@@ -1512,7 +1512,7 @@ object TrendQueries {
       val w = col("__w")
       val uni = docs.select(explode(split(col("text"), " ")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("c1"))
-        .localCheckpoint(eager = false) // probed by both joins + the total
+        .localCheckpoint() // probed by both joins + the total
       val ntot = uni.agg(sum("c1").as("__n"))
       val bg = docs.select(split(col("text"), " ").as("__w"))
         .select(explode(when(size(w) >= 2,
@@ -1970,7 +1970,7 @@ object TrendQueries {
       val edges = Components.docGraph(docs)
       val src1 = docs.agg(min("doc_id").as("doc_id"))
       val lv1 = Components.bfsLevels(edges, "a", "b", src1, "doc_id",
-        maxRounds = 16).localCheckpoint(eager = false)
+        maxRounds = 16)
       val far = lv1.orderBy(col("dist").desc, col("node")).limit(1)
         .select(col("node").as("doc_id"))
       val lv2 = Components.bfsLevels(edges, "a", "b", far, "doc_id",
@@ -2035,7 +2035,7 @@ object TrendQueries {
           x => x.getField("tok")), " ").as("phrase"),
           count(lit(1)).as("len"))
         .filter(col("len") >= 2)
-        .localCheckpoint(eager = false) // feeds word stats AND phrase types
+        .localCheckpoint() // feeds word stats AND phrase types
       val wstat = inst
         .select(explode(split(col("phrase"), " ")).as("w"), col("len"))
         .groupBy("w").agg(count(lit(1)).as("freq"), sum("len").as("deg"))
@@ -2223,7 +2223,7 @@ object TrendQueries {
           datediff(to_date(col("o_orderdate")), lit("1992-01-01"))
             .cast("long").as("d"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("cents"))
-        .localCheckpoint(eager = false) // both series come off this frame
+        .localCheckpoint() // both series come off this frame
       val x = daily.filter(col("pri") === "1-URGENT")
         .select(col("d"), col("cents").as("xv"))
       val y = daily.filter(col("pri") === "5-LOW")
@@ -2303,7 +2303,6 @@ object TrendQueries {
           .agg(count(lit(1)).as("rows"))
           .select(lit(g).as("gran"), col("p"), col("rows"))
       }.reduce(_ unionByName _)
-        .localCheckpoint(eager = false) // probed once per range
       val wTot = Window.partitionBy("gran")
       val touched = parts
         .withColumn("n_partitions", count(lit(1)).over(wTot))
@@ -2384,7 +2383,7 @@ object TrendQueries {
         .groupBy(((year(to_date(col("o_orderdate"))) - 1992) * 12 +
           month(to_date(col("o_orderdate"))) - 1).cast("long").as("m"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("x"))
-        .localCheckpoint(eager = false) // feeds pairs, ties, and n
+        .localCheckpoint() // feeds pairs, ties, and n
       val a = monthly.select(col("m").as("m1"), col("x").as("x1"))
       val b = monthly.select(col("m").as("m2"), col("x").as("x2"))
       val sRow = a.crossJoin(b).filter(col("m1") < col("m2"))
@@ -2869,7 +2868,6 @@ object TrendQueries {
           .cast("long").as("d"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("y"))
         .withColumn("r", row_number().over(wIdx).cast("long") - 1L)
-        .localCheckpoint(eager = false) // indexed once, exploded 4×
       val blocks = daily
         .select(col("r"), col("y"),
           explode(array(lit(8L), lit(16L), lit(32L), lit(64L))).as("w"))
@@ -3076,9 +3074,9 @@ object TrendQueries {
     // division.
     Q("gr14_rich_club", (s, dir) => {
       val sym = Components.docGraph(t(s, dir, "documents"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val deg = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("d"))
-        .localCheckpoint(eager = false) // feeds N_k and both edge ends
+        .localCheckpoint() // feeds N_k and both edge ends
       val ks = t(s, dir, "documents").sparkSession
         .range(0, 3).selectExpr("CAST(2 * pow(2, id) AS BIGINT) AS k")
       val nk = deg.crossJoin(broadcast(ks))

@@ -24,8 +24,8 @@ object StreamingLoad {
 
   /** Watch `dir` for newline-JSON files with the given schema; apply
     * `onBatch(store, batch) => newStore` to every micro-batch, carrying the
-    * snapshot from batch to batch (localCheckpoint keeps the lineage from
-    * growing unboundedly across batches). Returns the running query and a
+    * snapshot from batch to batch (a pin keeps the lineage from growing
+    * unboundedly across batches). Returns the running query and a
     * reader for the current snapshot. */
   def foreachFolderBatch(spark: SparkSession, dir: String, schema: StructType,
                          initial: DataFrame,
@@ -35,7 +35,7 @@ object StreamingLoad {
     val q = spark.readStream.schema(schema).json(dir)
       .writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        store = onBatch(store, batch).localCheckpoint(eager = true)
+        store = onBatch(store, batch).localCheckpoint()
         ()
       }
       .start()

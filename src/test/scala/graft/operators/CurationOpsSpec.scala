@@ -201,7 +201,7 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("shardShuffle partitions the corpus into dense, balanced shards") {
     val out = Sampling.shardShuffle(docs, col("doc_id").cast("string"), 16)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     assert(out.count() == 400 &&
       out.select("doc_id").distinct().count() == 400,
       "every row lands in exactly one shard")
