@@ -43,7 +43,7 @@ class StreamingSpec extends AnyFunSuite {
           "date", folderDate)
         store = LoadOps.dedupAppend(
           afterK4.limit(0), afterK4, Seq("act_symbol", "date"))
-          .localCheckpoint(eager = true)
+          .localCheckpoint()
         ()
       }
       .start()
@@ -377,7 +377,7 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     val inDir = Files.createTempDirectory("graft_cdc_in").toFile
     var store: DataFrame = Seq((1L, "A", 10.0), (2L, "B", 20.0),
-      (3L, "C", 30.0)).toDF("pk", "st", "tp").localCheckpoint(eager = true)
+      (3L, "C", 30.0)).toDF("pk", "st", "tp").localCheckpoint()
     val cdcSchema = StructType(Seq(
       StructField("pk", LongType), StructField("op", StringType),
       StructField("seq", LongType), StructField("st", StringType),
@@ -388,7 +388,7 @@ class StreamingSpec extends AnyFunSuite {
         store = LoadOps.cdcMerge(store,
           batch.select(cdcSchema.fieldNames.map(col).toSeq: _*),
           "pk", "seq", "op", Seq("st", "tp"))
-          .localCheckpoint(eager = true)
+          .localCheckpoint()
         ()
       }
       .start()
