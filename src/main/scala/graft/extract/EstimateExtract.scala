@@ -84,23 +84,29 @@ object EstimateExtract {
       .replace(",", "")
   }
 
-  /** The quote ribbon section, hero-wrapped after 2024-11-10
-    * (`estimate-transform-load.rkt:14-27`). Follows the reference's strict
-    * child path body#home > div#main_content > div#right_content >
-    * [section.quote_page_hero_section >] section#quote_ribbon_v2. */
+  /** One step of the quote ribbon's strict child path: the first child
+    * with `tag` whose id is `id` and whose class list holds `cls` (either
+    * test skipped when empty). */
+  private final case class Step(tag: String, id: String = "", cls: String = "") {
+    def test(elemId: String, elemCls: String): Boolean =
+      (id.isEmpty || elemId == id) &&
+        (cls.isEmpty || elemCls.split("\\s+").contains(cls))
+  }
+
+  /** The ribbon's strict child path (`estimate-transform-load.rkt:14-27`):
+    * html > body#home > div#main_content > div#right_content >
+    * [section.quote_page_hero_section >] section#quote_ribbon_v2, the
+    * hero step from 2024-11-10 on. */
+  private val Trunk = Seq(Step("html"), Step("body", id = "home"),
+    Step("div", id = "main_content"), Step("div", id = "right_content"))
+  private val Hero = Step("section", cls = "quote_page_hero_section")
+  private val RibbonId = "quote_ribbon_v2"
+
   private def ribbon(root: HElem, folderDate: LocalDate): Option[HElem] =
-    for {
-      html <- root.kid("html")
-      body <- html.kids("body").find(_.id.contains("home"))
-      main <- body.kids("div").find(_.id.contains("main_content"))
-      right <- main.kids("div").find(_.id.contains("right_content"))
-      rib <- if (folderDate.isBefore(HeroCutoff))
-        right.kids("section").find(_.id.contains("quote_ribbon_v2"))
-      else right.childElems.find(e => e.tag == "section" &&
-          e.attrs.get("class").exists(_.split("\\s+")
-            .contains("quote_page_hero_section")))
-        .flatMap(_.kids("section").find(_.id.contains("quote_ribbon_v2")))
-    } yield rib
+    (Trunk ++ (if (folderDate.isBefore(HeroCutoff)) None else Some(Hero)) :+
+      Step("section", id = RibbonId))
+      .foldLeft(Option(root))((at, s) => at.flatMap(_.kids(s.tag).find(e =>
+        s.test(e.attrs.getOrElse("id", ""), e.attrs.getOrElse("class", "")))))
 
   /** U2 — rank text, post-F5 ("1-Strong Buy" → "Strong Buy",
     * `estimate-transform-load.rkt:13-29`). */
@@ -134,41 +140,58 @@ object EstimateExtract {
     s.getOrElse("")
   }
 
-  /** Parse everything the loader needs from one detailed-estimates page.
-    * Each section's n-th table (sales/eps share a section — `first`/`second`
+  /** Sections [[parse]] keeps whole: the data sections and the ribbon. */
+  private val Whole: Set[String] =
+    (Sections.map(_._2.id) :+ SurpriseSpec.id :+ RibbonId).toSet
+
+  /** Every step the ribbon navigation can take below the root, in both
+    * layouts; the ribbon itself is kept whole. */
+  private val Skeleton = Trunk :+ Hero
+
+  /** The keep rule of [[parse]]: every [[Whole]] section in full, and the
+    * tag, id and class of every element that can take a step of
+    * [[Skeleton]]. It keeps all candidates of a step, not only the one that
+    * passes, so `find` makes the same first match as on the full tree.
+    * State k ≤ `Skeleton.size` lets children take step k - 1 (the root is
+    * 1); an element past the path, or failing its step, takes none. */
+  private object SectionRule extends Html.Keep {
+    def root: Int = 1
+    def open(parent: Int, tag: String, id: String, cls: String): Int =
+      if (tag == "section" && Whole(id)) Html.All
+      else if (parent >= 1 && parent <= Skeleton.size &&
+        tag == Skeleton(parent - 1).tag)
+        if (Skeleton(parent - 1).test(id, cls)) parent + 1 else Skeleton.size + 1
+      else Html.Skip
+  }
+
+  /** Parse everything the loader needs from one detailed-estimates page:
+    * one tokenizer pass that builds nodes only for the four data sections,
+    * the rank ribbon and the ribbon's path ([[SectionRule]]), then [[read]]
+    * on that tree. The page chrome (most of a 40–80 KB page) is tokenized
+    * but never built, so no section lookup walks it. */
+  def parse(html: String, folderDate: LocalDate): EstimatesParsed =
+    read(Html.parse(html, SectionRule), folderDate)
+
+  /** The navigation of [[parse]] over a parsed tree, pruned or full. Each
+    * section's n-th table (sales/eps share a section — `first`/`second`
     * table, `estimate-transform-load.rkt:81-86`) is materialized to a
     * [[TableGrid]] in one walk; the hundreds of per-cell lookups are then
     * O(1) — the reference re-runs an sxpath per cell instead
     * (`estimate-transform-load.rkt:113-114`). */
-  def parse(html: String, folderDate: LocalDate): EstimatesParsed = {
-    val root = Html.parse(html)
-    val gridCache = scala.collection.mutable.Map[(String, Int), TableGrid]()
-    def gridFor(spec: SectionSpec): TableGrid =
-      gridCache.getOrElseUpdate((spec.id, spec.tableOrdinal),
-        root.byId("section", spec.id)
-          .flatMap(_.nthDescendant("table", spec.tableOrdinal))
-          .map(TableGrid.of)
-          .getOrElse(TableGrid(Vector.empty, Vector.empty)))
-    def cell(spec: SectionSpec, rowGroup: String, row: Int,
-             col: Int): String =
-      sanitizeCell(gridFor(spec).cell(rowGroup, row, col))
-
-    val periodCells = for {
-      (period, i) <- Periods.zipWithIndex
-      (name, spec) <- Sections
-    } yield {
-      val col = i + 2
-      val entries = spec.entries.map { case (entry, row) =>
-        entry -> cell(spec, "tbody", row, col)
-      } :+ ("date" -> cell(spec, "thead", 1, col))
-      cellKey(name, period) -> entries.toMap
-    }
-    val historyCells = HistoryQuarters.zipWithIndex.map { case (q, i) =>
-      val col = i + 2
-      val entries = SurpriseSpec.entries.map { case (entry, row) =>
-        entry -> cell(SurpriseSpec, "tbody", row, col)
-      } :+ ("date" -> cell(SurpriseSpec, "thead", 1, col))
-      cellKey("eps-surprise", q) -> entries.toMap
+  def read(root: HElem, folderDate: LocalDate): EstimatesParsed = {
+    def cells(name: String, spec: SectionSpec,
+              periods: Seq[String]): Seq[(String, Map[String, String])] = {
+      val grid = root.byId("section", spec.id)
+        .flatMap(_.nthDescendant("table", spec.tableOrdinal))
+        .map(TableGrid.of)
+        .getOrElse(TableGrid(Vector.empty, Vector.empty))
+      periods.zipWithIndex.map { case (period, i) =>
+        val col = i + 2
+        val entries = spec.entries.map { case (entry, row) =>
+          entry -> sanitizeCell(grid.cell("tbody", row, col))
+        } :+ ("date" -> sanitizeCell(grid.cell("thead", 1, col)))
+        cellKey(name, period) -> entries.toMap
+      }
     }
     EstimatesParsed(
       rank = rank(root, folderDate),
@@ -176,6 +199,8 @@ object EstimateExtract {
       growth = styleScore(root, folderDate, 2),
       momentum = styleScore(root, folderDate, 3),
       vgm = styleScore(root, folderDate, 4),
-      cells = (periodCells ++ historyCells).toMap)
+      cells = (Sections.flatMap { case (name, spec) =>
+        cells(name, spec, Periods)
+      } ++ cells("eps-surprise", SurpriseSpec, HistoryQuarters)).toMap)
   }
 }

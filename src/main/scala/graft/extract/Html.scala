@@ -1,6 +1,6 @@
 package graft.extract
 
-import scala.collection.mutable.{ArrayBuffer, Stack}
+import scala.collection.immutable.VectorBuilder
 
 /** Minimal tolerant HTML parser — the Spark-side analogue of the reference's
   * `html->xexp` (`estimate-transform-load.rkt:167`). Real Zacks pages are not
@@ -11,6 +11,11 @@ import scala.collection.mutable.{ArrayBuffer, Stack}
   * Scope is exactly what the reference's sxpaths need: element tree with
   * tag/attrs/children, id/class lookup, child-axis navigation with 1-based
   * positional indexing, and text extraction.
+  *
+  * One tokenizer serves every caller. `Html.parse(input)` keeps every node;
+  * `Html.parse(input, keep)` builds only what a [[Html.Keep]] rule keeps,
+  * so a caller that reads a few sections of a large page pays for the
+  * tokenizer pass and those sections' nodes, not for the page chrome.
   */
 sealed trait HNode
 
@@ -134,31 +139,71 @@ object TableGrid {
 
 object Html {
 
+  /** Which nodes [[parse]] builds, decided per element as it opens. An
+    * element's state is one of:
+    *  - `All`: the element and every node below it, all attributes. The
+    *    rule is not asked again below it.
+    *  - a positive, rule-defined state: the element's tag with its `id` and
+    *    `class`, no text; the state is the `parent` the rule sees for each
+    *    child.
+    *  - `Skip`: no text below it, and no node of its own unless something
+    *    below it is kept; then it stays as its bare tag, so every kept node
+    *    keeps its ancestors' tags and its place in document order.
+    * Every element goes on the tag stack whatever its state, so implicit
+    * closes and stray end tags shape the kept nodes exactly as they shape
+    * the full tree. A skipped region builds no text node, decodes no
+    * entity and reads no attribute beyond `id` and `class`. */
+  trait Keep {
+    /** State of the synthetic root. */
+    def root: Int
+    /** State of an element opening under a parent in state `parent` (never
+      * `All`); `id` and `cls` are its decoded attributes, "" when absent. */
+    def open(parent: Int, tag: String, id: String, cls: String): Int
+  }
+
+  val All: Int = -1
+  val Skip: Int = 0
+
+  private object KeepAll extends Keep {
+    def root: Int = All
+    def open(parent: Int, tag: String, id: String, cls: String): Int = All
+  }
+
   /** Elements that never have children. */
-  private val Void = Set("area", "base", "br", "col", "embed", "hr", "img",
-    "input", "link", "meta", "param", "source", "track", "wbr")
+  private def isVoid(tag: String): Boolean = tag match {
+    case "area" | "base" | "br" | "col" | "embed" | "hr" | "img" | "input" |
+         "link" | "meta" | "param" | "source" | "track" | "wbr" => true
+    case _ => false
+  }
 
-  /** Elements whose body is raw text up to the matching end tag. */
-  private val RawText = Set("script", "style")
+  /** Elements whose body is raw text up to the matching end tag: the end
+    * tag's prefix, or null. */
+  private def rawTextClose(tag: String): String = tag match {
+    case "script" => "</script"
+    case "style" => "</style"
+    case _ => null
+  }
 
-  /** tag → set of open tags it implicitly closes (HTML5 omission rules,
-    * restricted to the table/paragraph subset the Zacks pages use). */
-  private val ImplicitClose: Map[String, Set[String]] = Map(
-    "tr" -> Set("td", "th", "tr", "colgroup", "caption"),
-    "td" -> Set("td", "th"),
-    "th" -> Set("td", "th"),
+  /** Whether opening `tag` implicitly closes an open `open` element (HTML5
+    * omission rules, restricted to the table/paragraph subset the Zacks
+    * pages use). */
+  private def closes(tag: String, open: String): Boolean = tag match {
+    case "tr" => open match {
+      case "td" | "th" | "tr" | "colgroup" | "caption" => true
+      case _ => false
+    }
+    case "td" | "th" => open == "td" || open == "th"
     // colgroup/caption end tags are omissible in HTML5: any row-group or
     // row opener must close them, or thead/tbody nest INSIDE the colgroup
     // and the table reads empty
-    "tbody" -> Set("td", "th", "tr", "tbody", "thead", "tfoot", "colgroup",
-      "caption"),
-    "thead" -> Set("td", "th", "tr", "tbody", "thead", "tfoot", "colgroup",
-      "caption"),
-    "tfoot" -> Set("td", "th", "tr", "tbody", "thead", "tfoot", "colgroup",
-      "caption"),
-    "p" -> Set("p"),
-    "li" -> Set("li"),
-    "option" -> Set("option"))
+    case "tbody" | "thead" | "tfoot" => open match {
+      case "td" | "th" | "tr" | "tbody" | "thead" | "tfoot" | "colgroup" |
+           "caption" => true
+      case _ => false
+    }
+    case "p" | "li" | "option" => open == tag
+    case _ => false
+  }
 
   private def decodeEntities(s: String): String =
     if (!s.contains('&')) s
@@ -201,142 +246,231 @@ object Html {
       sb.toString
     }
 
-  private final class Frame(val tag: String, val attrs: Map[String, String]) {
-    val children = new ArrayBuffer[HNode]()
+  private final class Frame(val tag: String, val attrs: Map[String, String],
+                            val state: Int) {
+    private var kids: VectorBuilder[HNode] = null
+    def add(node: HNode): Unit = {
+      if (kids == null) kids = new VectorBuilder[HNode]
+      kids += node
+    }
+    def isEmpty: Boolean = kids == null
+    def children: Vector[HNode] = if (kids == null) Vector.empty else kids.result()
   }
 
   /** Parse an HTML document; returns a synthetic root element containing all
     * top-level nodes (normally just `<html>`). Never throws on malformed
     * input — unparseable fragments degrade to text or are skipped. */
-  def parse(input: String): HElem = {
-    val stack = Stack(new Frame("#root", Map.empty))
-    var i = 0
-    val n = input.length
-    // case-insensitive search without lowercasing the whole input: locale
-    // rules (Turkish dotless-i, U+0130 expanding to two chars) would break
-    // matching or desync offsets
-    def indexOfIgnoreCase(needle: String, from: Int): Int = {
-      var k = from
-      val last = n - needle.length
-      while (k <= last) {
-        if (input.regionMatches(true, k, needle, 0, needle.length)) return k
-        k += 1
-      }
-      -1
-    }
+  def parse(input: String): HElem = parse(input, KeepAll)
 
-    def popFrame(): Unit = {
-      val f = stack.pop()
-      stack.top.children += HElem(f.tag, f.attrs, f.children.toVector)
-    }
+  /** [[parse]] building only the nodes `keep` keeps. */
+  def parse(input: String, keep: Keep): HElem = new Parser(input, keep).run()
 
-    def addText(raw: String): Unit =
-      if (raw.nonEmpty) stack.top.children += HText(decodeEntities(raw))
+  private final class Parser(input: String, keep: Keep) {
+    private val n = input.length
+    private var stack = new Array[Frame](64)
+    private var depth = 0
+    stack(0) = new Frame("#root", Map.empty, keep.root)
+    private def top: Frame = stack(depth)
 
-    while (i < n) {
-      val lt = input.indexOf('<', i)
-      if (lt < 0) { addText(input.substring(i)); i = n }
-      else {
-        if (lt > i) addText(input.substring(i, lt))
-        if (lt + 1 >= n) { addText("<"); i = n }
-        else input.charAt(lt + 1) match {
-          case '!' =>
-            if (input.startsWith("<!--", lt)) {
-              val end = input.indexOf("-->", lt + 4)
-              i = if (end < 0) n else end + 3
-            } else { // doctype / CDATA-ish: skip to '>'
+    // attributes of the open tag scanned last
+    private var attrs = Map.empty[String, String]
+    private var id, cls = ""
+    private var selfClose = false
+
+    def run(): HElem = {
+      var i = 0
+      while (i < n) {
+        val lt = input.indexOf('<', i)
+        if (lt < 0) { text(i, n); i = n }
+        else {
+          text(i, lt)
+          if (lt + 1 >= n) { text(lt, n); i = n }
+          else input.charAt(lt + 1) match {
+            case '!' =>
+              if (input.startsWith("<!--", lt)) {
+                val end = input.indexOf("-->", lt + 4)
+                i = if (end < 0) n else end + 3
+              } else { // doctype / CDATA-ish: skip to '>'
+                val end = input.indexOf('>', lt)
+                i = if (end < 0) n else end + 1
+              }
+            case '?' =>
               val end = input.indexOf('>', lt)
               i = if (end < 0) n else end + 1
-            }
-          case '?' =>
-            val end = input.indexOf('>', lt)
-            i = if (end < 0) n else end + 1
-          case '/' =>
-            val end = input.indexOf('>', lt)
-            if (end < 0) i = n
-            else {
-              val name = input.substring(lt + 2, end).trim
-                .toLowerCase(java.util.Locale.ROOT)
-              if (stack.exists(_.tag == name)) {
-                while (stack.top.tag != name) popFrame()
-                popFrame()
-              } // stray end tag: ignore
-              i = end + 1
-            }
-          case c if c.isLetter =>
-            // parse open tag
-            var j = lt + 1
-            while (j < n && (input.charAt(j).isLetterOrDigit ||
-              input.charAt(j) == '-' || input.charAt(j) == ':')) j += 1
-            val tag = input.substring(lt + 1, j)
-              .toLowerCase(java.util.Locale.ROOT)
-            // attributes until '>' or '/>'
-            var attrs = Map.empty[String, String]
-            var selfClose = false
-            var done = false
-            while (!done && j < n) {
-              while (j < n && input.charAt(j).isWhitespace) j += 1
-              if (j >= n) done = true
-              else input.charAt(j) match {
-                case '>' => j += 1; done = true
-                case '/' =>
-                  if (j + 1 < n && input.charAt(j + 1) == '>') {
-                    selfClose = true; j += 2; done = true
-                  } else j += 1
-                case _ =>
-                  val nameStart = j
-                  while (j < n && !input.charAt(j).isWhitespace &&
-                    input.charAt(j) != '=' && input.charAt(j) != '>' &&
-                    input.charAt(j) != '/') j += 1
-                  val name = input.substring(nameStart, j)
-                    .toLowerCase(java.util.Locale.ROOT)
-                  while (j < n && input.charAt(j).isWhitespace) j += 1
-                  var value = ""
-                  if (j < n && input.charAt(j) == '=') {
-                    j += 1
-                    while (j < n && input.charAt(j).isWhitespace) j += 1
-                    if (j < n && (input.charAt(j) == '"' || input.charAt(j) == '\'')) {
-                      val q = input.charAt(j)
-                      val close = input.indexOf(q, j + 1)
-                      if (close < 0) { value = input.substring(j + 1); j = n }
-                      else { value = input.substring(j + 1, close); j = close + 1 }
-                    } else {
-                      val vs = j
-                      while (j < n && !input.charAt(j).isWhitespace &&
-                        input.charAt(j) != '>' && input.charAt(j) != '/') j += 1
-                      value = input.substring(vs, j)
-                    }
-                  }
-                  if (name.nonEmpty) attrs += name -> decodeEntities(value)
-              }
-            }
-            // implicit closes
-            ImplicitClose.get(tag).foreach { closes =>
-              while (closes.contains(stack.top.tag)) popFrame()
-            }
-            if (Void.contains(tag) || selfClose)
-              stack.top.children += HElem(tag, attrs, Vector.empty)
-            else if (RawText.contains(tag)) {
-              val endIdx = indexOfIgnoreCase(s"</$tag", j)
-              val bodyEnd = if (endIdx < 0) n else endIdx
-              val body = input.substring(j, bodyEnd)
-              val gt = if (endIdx < 0) n else {
-                val g = input.indexOf('>', endIdx); if (g < 0) n else g + 1
-              }
-              val kids: Vector[HNode] =
-                if (body.nonEmpty) Vector(HText(body)) else Vector.empty
-              stack.top.children += HElem(tag, attrs, kids)
-              j = gt
-            } else stack.push(new Frame(tag, attrs))
-            i = j
-          case _ => // lone '<' in text
-            addText("<")
-            i = lt + 1
+            case '/' => i = endTag(lt)
+            case c if c.isLetter => i = openTag(lt)
+            case _ => // lone '<' in text
+              text(lt, lt + 1)
+              i = lt + 1
+          }
+        }
+      }
+      while (depth > 0) popFrame()
+      HElem("#root", Map.empty, top.children)
+    }
+
+    private def text(from: Int, to: Int): Unit =
+      if (to > from && top.state == All)
+        top.add(HText(decodeEntities(input.substring(from, to))))
+
+    private def push(f: Frame): Unit = {
+      depth += 1
+      if (depth == stack.length) stack = java.util.Arrays.copyOf(stack, 2 * depth)
+      stack(depth) = f
+    }
+
+    private def popFrame(): Unit = {
+      val f = top
+      stack(depth) = null
+      depth -= 1
+      if (f.state != Skip || !f.isEmpty)
+        top.add(HElem(f.tag, f.attrs, f.children))
+    }
+
+    // tag and attribute names met on this page, by hash: a repeated name
+    // is neither copied nor hashed again
+    private val names = new Array[String](256)
+
+    /** `input[from, to)` lower-cased under `Locale.ROOT`. */
+    private def name(from: Int, to: Int): String = {
+      var h = 0
+      var upper = false
+      var k = from
+      while (k < to && input.charAt(k) < 0x80) {
+        val c = input.charAt(k)
+        if (c >= 'A' && c <= 'Z') { upper = true; h = 31 * h + c + 32 }
+        else h = 31 * h + c
+        k += 1
+      }
+      if (k < to) input.substring(from, to).toLowerCase(java.util.Locale.ROOT)
+      else {
+        val slot = h & (names.length - 1)
+        val hit = names(slot)
+        if (hit != null && hit.length == to - from && {
+          var m = 0
+          while (m < hit.length && {
+            val c = input.charAt(from + m)
+            (if (c >= 'A' && c <= 'Z') c + 32 else c.toInt) == hit.charAt(m)
+          }) m += 1
+          m == hit.length
+        }) hit
+        else {
+          val s = input.substring(from, to)
+          val out = if (upper) s.toLowerCase(java.util.Locale.ROOT) else s
+          names(slot) = out
+          out
         }
       }
     }
-    while (stack.size > 1) popFrame()
-    val root = stack.pop()
-    HElem("#root", Map.empty, root.children.toVector)
+
+    private def endTag(lt: Int): Int = {
+      val end = input.indexOf('>', lt)
+      if (end < 0) n
+      else {
+        var a = lt + 2
+        var b = end
+        while (a < b && input.charAt(a) <= ' ') a += 1 // String.trim
+        while (b > a && input.charAt(b - 1) <= ' ') b -= 1
+        val tag = name(a, b)
+        var k = depth
+        while (k > 0 && stack(k).tag != tag) k -= 1
+        while (k > 0 && depth >= k) popFrame() // k = 0: stray, ignored
+        end + 1
+      }
+    }
+
+    private def openTag(lt: Int): Int = {
+      var j = lt + 1
+      while (j < n && (input.charAt(j).isLetterOrDigit ||
+        input.charAt(j) == '-' || input.charAt(j) == ':')) j += 1
+      val tag = name(lt + 1, j)
+      while (closes(tag, top.tag)) popFrame()
+      val parent = top.state
+      var end = scanAttrs(j, full = parent == All)
+      val state = if (parent == All) All else keep.open(parent, tag, id, cls)
+      val kept =
+        if (parent == All) attrs
+        else if (state == All) { scanAttrs(j, full = true); attrs }
+        else if (state == Skip) Map.empty[String, String]
+        else {
+          val m = if (id.isEmpty) Map.empty[String, String] else Map("id" -> id)
+          if (cls.isEmpty) m else m + ("class" -> cls)
+        }
+      val close = rawTextClose(tag)
+      if (isVoid(tag) || selfClose || close != null) {
+        var kids = Vector.empty[HNode]
+        if (close != null) {
+          val endIdx = rawTextEnd(close, end)
+          val bodyEnd = if (endIdx < 0) n else endIdx
+          if (bodyEnd > end && state == All)
+            kids = Vector(HText(input.substring(end, bodyEnd)))
+          end = if (endIdx < 0) n else {
+            val g = input.indexOf('>', endIdx); if (g < 0) n else g + 1
+          }
+        }
+        if (state != Skip) top.add(HElem(tag, kept, kids))
+      } else push(new Frame(tag, kept, state))
+      end
+    }
+
+    /** Scans an open tag's attributes from `from` up to and past its `>` or
+      * `/>`; returns the offset after it. `full` reads every attribute into
+      * `attrs`; otherwise only `id` and `cls` are read. */
+    private def scanAttrs(from: Int, full: Boolean): Int = {
+      attrs = Map.empty; id = ""; cls = ""; selfClose = false
+      var j = from
+      var done = false
+      while (!done && j < n) {
+        while (j < n && input.charAt(j).isWhitespace) j += 1
+        if (j >= n) done = true
+        else input.charAt(j) match {
+          case '>' => j += 1; done = true
+          case '/' =>
+            if (j + 1 < n && input.charAt(j + 1) == '>') {
+              selfClose = true; j += 2; done = true
+            } else j += 1
+          case _ =>
+            val nameStart = j
+            while (j < n && !input.charAt(j).isWhitespace &&
+              input.charAt(j) != '=' && input.charAt(j) != '>' &&
+              input.charAt(j) != '/') j += 1
+            val nameEnd = j
+            while (j < n && input.charAt(j).isWhitespace) j += 1
+            var vs, ve = j
+            if (j < n && input.charAt(j) == '=') {
+              j += 1
+              while (j < n && input.charAt(j).isWhitespace) j += 1
+              if (j < n && (input.charAt(j) == '"' || input.charAt(j) == '\'')) {
+                val close = input.indexOf(input.charAt(j), j + 1)
+                vs = j + 1
+                if (close < 0) { ve = n; j = n } else { ve = close; j = close + 1 }
+              } else {
+                vs = j
+                while (j < n && !input.charAt(j).isWhitespace &&
+                  input.charAt(j) != '>' && input.charAt(j) != '/') j += 1
+                ve = j
+              }
+            }
+            if (nameEnd > nameStart) {
+              val attr = name(nameStart, nameEnd)
+              if (full) attrs += attr -> decodeEntities(input.substring(vs, ve))
+              else if (attr == "id") id = decodeEntities(input.substring(vs, ve))
+              else if (attr == "class") cls = decodeEntities(input.substring(vs, ve))
+            }
+        }
+      }
+      j
+    }
+
+    /** Offset of the first `close` at or after `from`, case-insensitively,
+      * or -1. Compares only where a `<` is, without lower-casing the input:
+      * locale rules (Turkish dotless-i, U+0130 expanding to two chars) would
+      * break matching or desync offsets. */
+    private def rawTextEnd(close: String, from: Int): Int = {
+      var k = input.indexOf('<', from)
+      while (k >= 0 && !input.regionMatches(true, k, close, 0, close.length))
+        k = input.indexOf('<', k + 1)
+      k
+    }
   }
 }

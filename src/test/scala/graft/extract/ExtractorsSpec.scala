@@ -10,24 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class ExtractorsSpec extends AnyFunSuite {
 
   private def ribbonDoc(hero: Boolean, styleDiv: Int,
-                        pipeSpans: Boolean): String = {
-    val spans =
-      if (pipeSpans)
-        "<span>A</span><span>|</span><span>B</span><span>|</span><span>C</span><span>|</span><span>D</span>"
-      else "<span>A</span><span>B</span><span>C</span><span>D</span>"
-    val styles = s"<div><p>$spans</p></div>"
-    val inner = styleDiv match {
-      case 2 => s"<div><p>\n<span></span>\n2-Buy\n</p></div>$styles"
-      case 3 => s"<div><p>\n<span></span>\n2-Buy\n</p></div><div></div>$styles"
-    }
-    val ribbon =
-      s"""<section id="quote_ribbon_v2"><div></div><div>$inner</div></section>"""
-    val wrapped =
-      if (hero) s"""<section class="quote_page_hero_section">$ribbon</section>"""
-      else ribbon
-    s"""<html><body id="home"><div id="main_content">
-       |<div id="right_content">$wrapped</div></div></body></html>""".stripMargin
-  }
+                        pipeSpans: Boolean): String =
+    EstimatePages.page(EstimatePages.ribbon(hero, styleDiv, pipeSpans))
 
   test("U2 rank follows the 2024-11-10 hero-section move") {
     val pre = Html.parse(ribbonDoc(hero = false, styleDiv = 2, pipeSpans = true))
@@ -57,26 +41,8 @@ class ExtractorsSpec extends AnyFunSuite {
   }
 
   private val estimateDoc =
-    """<html><body id="home">
-      |<section id="detailed_earnings_estimates">
-      |<table><thead><tr><th>x</th><th>(3/2025)</th><th>(6/2025)</th><th>(12/2025)</th><th>(12/2026)</th></tr></thead>
-      |<tbody>
-      |<tr><td>Consensus</td><td>10.5</td><td>11</td><td>12</td><td>13</td></tr>
-      |<tr><td>Count</td><td>7</td><td>8</td><td>9</td><td>10</td></tr>
-      |<tr><td>High</td><td>1,000.5M</td><td>2B</td><td>3T</td><td>NA</td></tr>
-      |<tr><td>Low</td><td>1</td><td>2</td><td>3</td><td>4</td></tr>
-      |<tr><td>Year Ago</td><td>5</td><td>6</td><td>7</td><td>8</td></tr>
-      |</tbody></table>
-      |<table><thead><tr><th>x</th><th>(3/2025)</th><th>(6/2025)</th><th>(12/2025)</th><th>(12/2026)</th></tr></thead>
-      |<tbody>
-      |<tr><td>Consensus</td><td>1.5</td><td>1.6</td><td>1.7</td><td>1.8</td></tr>
-      |<tr><td>Count</td><td>3</td><td>4</td><td>5</td><td>6</td></tr>
-      |<tr><td>Recent</td><td>1.4</td><td>1.5</td><td>1.6</td><td>1.7</td></tr>
-      |<tr><td>High</td><td>2</td><td>(2.1)</td><td>2.2</td><td>2.3</td></tr>
-      |<tr><td>Low</td><td>1</td><td>1.1</td><td>M</td><td>1.3</td></tr>
-      |<tr><td>Year Ago</td><td>0.9</td><td>1.0</td><td>1.1</td><td>1.2</td></tr>
-      |</tbody></table>
-      |</section></body></html>""".stripMargin
+    s"""<html><body id="home">
+       |${EstimatePages.estimates}</body></html>""".stripMargin
 
   test("U1 sales/eps share a section: first vs second table, row offsets") {
     val p = EstimateExtract.parse(estimateDoc, LocalDate.of(2025, 1, 1))
@@ -93,6 +59,93 @@ class ExtractorsSpec extends AnyFunSuite {
     assert(cell("eps-estimates", "next-quarter", "high") === "2.1") // parens stripped
     assert(cell("eps-estimates", "current-year", "low") === "NA")   // bare M
     assert(cell("eps-estimates", "current-quarter", "date") === "3/2025")
+  }
+
+  /** `parse` (the section rule's pruned tree) against the same navigation
+    * over the full tree, in both ribbon layouts; returns the hero-era parse. */
+  private def prunedAsFull(doc: String): EstimateExtract.EstimatesParsed = {
+    val full = Html.parse(doc)
+    val ps = Seq(LocalDate.of(2024, 1, 1), LocalDate.of(2025, 1, 1)).map { d =>
+      val p = EstimateExtract.parse(doc, d)
+      assert(p === EstimateExtract.read(full, d), s"pruned differs from full on $d")
+      p
+    }
+    ps.last
+  }
+
+  private def cell(p: EstimateExtract.EstimatesParsed, section: String,
+                   entry: String, period: String = "current-quarter"): String =
+    p.cells(EstimateExtract.cellKey(section, period))(entry)
+
+  private val heroRibbon = EstimatePages.ribbon(hero = true, styleDiv = 2, pipeSpans = true)
+
+  test("section rule: an id in a comment, a script or an attribute is no section") {
+    val decoy = """<section id="detailed_earnings_estimates"><table><tbody><tr><td>C</td><td>999</td></tr></tbody></table></section>"""
+    val p = prunedAsFull(EstimatePages.page(
+      s"<!-- $decoy --><script>document.write('$decoy')</script>" +
+        s"<div data-html='$decoy'>x</div>$heroRibbon" +
+        EstimatePages.sections.mkString("\n")))
+    assert(cell(p, "sales-estimates", "consensus") === "10.5")
+    assert(cell(p, "eps-upside", "most-accurate") === "812")
+    assert(p.rank === "Buy" && p.vgm === "D")
+  }
+
+  test("section rule: a decoy data section before the real one wins, as on the full tree") {
+    val decoy = """<section id="detailed_earnings_estimates"><table><tbody><tr><td>C</td><td>777</td></tr></tbody></table></section>"""
+    val doc = s"""<html><body id="home"><div id="main_content"><div id="left_content">$decoy</div>
+                 |<div id="right_content">$heroRibbon${EstimatePages.sections.mkString}</div></div></body></html>""".stripMargin
+    val p = prunedAsFull(doc)
+    assert(cell(p, "sales-estimates", "consensus") === "777")
+    assert(cell(p, "eps-estimates", "consensus") === "") // the decoy has one table
+    assert(cell(p, "eps-revisions", "up-7") === "712")
+  }
+
+  test("section rule: the ribbon path takes the first body#home and div#right_content") {
+    def doc(main: String, after: String = "") =
+      s"""<html><body id="home"><div id="main_content">$main</div></body>$after</html>"""
+    val ribbon = s"""<div id="right_content">$heroRibbon</div>"""
+    // a second body#home: the first one is read, and has no ribbon
+    assert(prunedAsFull(doc("", s"""<body id="home"><div id="main_content">$ribbon</div></body>""")).rank === "")
+    // div#right_content after another div: found
+    assert(prunedAsFull(doc(s"""<div id="left_content"><p>x</p></div>$ribbon""")).rank === "Buy")
+    // the ribbon one element below div#right_content is off the path
+    assert(prunedAsFull(doc(s"""<div id="right_content"><div>$heroRibbon</div></div>""")).rank === "")
+    // two div#right_content: the first, empty one is read
+    assert(prunedAsFull(doc(s"""<div id="right_content"></div>$ribbon""")).rank === "")
+    // a candidate that fails its step keeps its place but leads nowhere
+    assert(prunedAsFull(doc(s"""<div id="main_content">$ribbon</div>$ribbon""")).rank === "Buy")
+  }
+
+  test("section rule: an unclosed data section and a stray </section> in the chrome") {
+    val Seq(est, rev, up, sur) = EstimatePages.sections
+    val doc = s"""<html><body id="home"><div id="main_content"><div id="left_content"><p>a</section>b</p></div>
+                 |<div id="right_content">$heroRibbon$est$rev${up.stripSuffix("</section>")}$sur</div></div>
+                 |<footer></section></footer></body></html>""".stripMargin
+    val p = prunedAsFull(doc)
+    assert(cell(p, "eps-upside", "most-accurate") === "812")
+    assert(cell(p, "eps-surprise", "estimate", "two-quarters-ago") === "923")
+    assert(p.momentum === "C")
+  }
+
+  test("section rule: uppercase tags and unquoted ids") {
+    val doc = EstimatePages.page(heroRibbon + EstimatePages.sections.mkString)
+      .replace("<section", "<SECTION").replace("</section", "</SECTION")
+      .replace("<div", "<DIV").replace("</div", "</DIV").replace("<td>", "<TD>")
+      .replaceAll("id=\"(\\w+)\"", "ID=$1")
+    assert(doc.contains("<SECTION ID=quote_upside>"))
+    val p = prunedAsFull(doc)
+    assert(cell(p, "eps-upside", "most-accurate") === "812")
+    assert(p.rank === "Buy")
+  }
+
+  test("section rule: a data section at the bottom of 20k- and 100k-deep nests") {
+    for (depth <- Seq(20000, 100000)) {
+      val doc = "<html><body id=home>" + "<div>" * depth +
+        EstimatePages.sections.mkString + "</div>" * depth + "</body></html>"
+      val p = prunedAsFull(doc)
+      assert(cell(p, "sales-estimates", "high", "next-quarter") === "2e9")
+      assert(p.rank === "")
+    }
   }
 
   private def balanceDoc: String = {

@@ -9,7 +9,7 @@ import org.scalacheck.Prop.forAll
 object HtmlProps extends Properties("Html") {
 
   // strings biased toward markup metacharacters and fragments
-  private val soup: Gen[String] = Gen.listOf(Gen.frequency(
+  private[extract] val soup: Gen[String] = Gen.listOf(Gen.frequency(
     5 -> Gen.alphaNumStr.map(_.take(6)),
     3 -> Gen.oneOf("<", ">", "&", "\"", "'", "=", "/", "<!--", "-->",
       "<div", "</div>", "<td", "<table>", "</p", "<script>", "</script>",

@@ -93,4 +93,55 @@ class HtmlSpec extends AnyFunSuite {
     assert(parsed.rank === "")
     assert(parsed.cells.values.forall(_.values.forall(_ == "")))
   }
+
+  test("raw text ends at the first </script or </style in any case, also as a prefix") {
+    val doc = Html.parse(
+      "<div><script>x</p>y</SCRIPT >z<style>s</styles>t</style>u</div>")
+    val div = doc.kid("div").get
+    assert(div.kid("script").get.allText === "x</p>y")
+    assert(div.kid("style").get.allText === "s") // ends at "</styles"
+    assert(div.textKids === Vector("z", "t", "u")) // "</style>" is stray
+  }
+
+  /** Keeps `section#s` whole and nothing else. */
+  private object KeepS extends Html.Keep {
+    def root: Int = 1
+    def open(parent: Int, tag: String, id: String, cls: String): Int =
+      if (tag == "section" && id == "s") Html.All else Html.Skip
+  }
+
+  test("a keep rule builds the kept subtrees of the full tree, also past raw text") {
+    val html =
+      """<p>a &amp; b</p><script>w("<section id=s>in script</section>")</SCRIPT>
+        |<!-- <section id=s>in comment</section> --><div title="<section id=s>">
+        |<script>"</scripts><section id=s>early</section>"</script>
+        |<section id=s class=k><b>late</b></section></div>""".stripMargin
+    val full = Html.parse(html)
+    val kept = Html.parse(html, KeepS)
+    assert(full.byId("section", "s").get.allText === "early")
+    assert(kept.byId("section", "s") === full.byId("section", "s"))
+    val Seq(early, late) = kept.descendants.filter(_.tag == "section").toSeq
+    assert(late === full.descendants.filter(_.tag == "section").toSeq(1))
+    assert(late.attrs === Map("id" -> "s", "class" -> "k"))
+    assert(early.allText === "early")
+    // no text or element outside the kept subtrees but the bare div that
+    // holds them
+    assert(kept.children === Vector(HElem("div", Map.empty, Vector(early, late))))
+  }
+
+  test("an end tag naming the synthetic root is stray") {
+    val doc = Html.parse("<div>a</#root>b</div>")
+    assert(doc.kid("div").get.allText === "ab")
+  }
+
+  test("a 100k-deep nest parses on both paths") {
+    val depth = 100000
+    val html = "<div>" * depth + "<section id=s>x</section>" + "</div>" * depth
+    val full = Html.parse(html)
+    assert(full.nthDescendant("div", depth).isDefined)
+    val kept = Html.parse(html, KeepS)
+    assert(kept.byId("section", "s") === full.byId("section", "s"))
+    assert(kept.nthDescendant("div", depth).get.children ===
+      Vector(HElem("section", Map("id" -> "s"), Vector(HText("x")))))
+  }
 }
