@@ -170,40 +170,30 @@ object Html {
   }
 
   /** Elements that never have children. */
-  private def isVoid(tag: String): Boolean = tag match {
-    case "area" | "base" | "br" | "col" | "embed" | "hr" | "img" | "input" |
-         "link" | "meta" | "param" | "source" | "track" | "wbr" => true
-    case _ => false
-  }
+  private val Void = Set("area", "base", "br", "col", "embed", "hr", "img",
+    "input", "link", "meta", "param", "source", "track", "wbr")
 
-  /** Elements whose body is raw text up to the matching end tag: the end
-    * tag's prefix, or null. */
-  private def rawTextClose(tag: String): String = tag match {
-    case "script" => "</script"
-    case "style" => "</style"
-    case _ => null
-  }
+  /** Elements whose body is raw text up to the matching end tag. */
+  private val RawText = Set("script", "style")
 
-  /** Whether opening `tag` implicitly closes an open `open` element (HTML5
-    * omission rules, restricted to the table/paragraph subset the Zacks
-    * pages use). */
-  private def closes(tag: String, open: String): Boolean = tag match {
-    case "tr" => open match {
-      case "td" | "th" | "tr" | "colgroup" | "caption" => true
-      case _ => false
-    }
-    case "td" | "th" => open == "td" || open == "th"
+  /** tag → set of open tags it implicitly closes (HTML5 omission rules,
+    * restricted to the table/paragraph subset the Zacks pages use). */
+  private val ImplicitClose: Map[String, Set[String]] = Map(
+    "tr" -> Set("td", "th", "tr", "colgroup", "caption"),
+    "td" -> Set("td", "th"),
+    "th" -> Set("td", "th"),
     // colgroup/caption end tags are omissible in HTML5: any row-group or
     // row opener must close them, or thead/tbody nest INSIDE the colgroup
     // and the table reads empty
-    case "tbody" | "thead" | "tfoot" => open match {
-      case "td" | "th" | "tr" | "tbody" | "thead" | "tfoot" | "colgroup" |
-           "caption" => true
-      case _ => false
-    }
-    case "p" | "li" | "option" => open == tag
-    case _ => false
-  }
+    "tbody" -> Set("td", "th", "tr", "tbody", "thead", "tfoot", "colgroup",
+      "caption"),
+    "thead" -> Set("td", "th", "tr", "tbody", "thead", "tfoot", "colgroup",
+      "caption"),
+    "tfoot" -> Set("td", "th", "tr", "tbody", "thead", "tfoot", "colgroup",
+      "caption"),
+    "p" -> Set("p"),
+    "li" -> Set("li"),
+    "option" -> Set("option"))
 
   private def decodeEntities(s: String): String =
     if (!s.contains('&')) s
@@ -327,51 +317,15 @@ object Html {
         top.add(HElem(f.tag, f.attrs, f.children))
     }
 
-    // tag and attribute names met on this page, by hash: a repeated name
-    // is neither copied nor hashed again
-    private val names = new Array[String](256)
-
     /** `input[from, to)` lower-cased under `Locale.ROOT`. */
-    private def name(from: Int, to: Int): String = {
-      var h = 0
-      var upper = false
-      var k = from
-      while (k < to && input.charAt(k) < 0x80) {
-        val c = input.charAt(k)
-        if (c >= 'A' && c <= 'Z') { upper = true; h = 31 * h + c + 32 }
-        else h = 31 * h + c
-        k += 1
-      }
-      if (k < to) input.substring(from, to).toLowerCase(java.util.Locale.ROOT)
-      else {
-        val slot = h & (names.length - 1)
-        val hit = names(slot)
-        if (hit != null && hit.length == to - from && {
-          var m = 0
-          while (m < hit.length && {
-            val c = input.charAt(from + m)
-            (if (c >= 'A' && c <= 'Z') c + 32 else c.toInt) == hit.charAt(m)
-          }) m += 1
-          m == hit.length
-        }) hit
-        else {
-          val s = input.substring(from, to)
-          val out = if (upper) s.toLowerCase(java.util.Locale.ROOT) else s
-          names(slot) = out
-          out
-        }
-      }
-    }
+    private def name(from: Int, to: Int): String =
+      input.substring(from, to).toLowerCase(java.util.Locale.ROOT)
 
     private def endTag(lt: Int): Int = {
       val end = input.indexOf('>', lt)
       if (end < 0) n
       else {
-        var a = lt + 2
-        var b = end
-        while (a < b && input.charAt(a) <= ' ') a += 1 // String.trim
-        while (b > a && input.charAt(b - 1) <= ' ') b -= 1
-        val tag = name(a, b)
+        val tag = input.substring(lt + 2, end).trim.toLowerCase(java.util.Locale.ROOT)
         var k = depth
         while (k > 0 && stack(k).tag != tag) k -= 1
         while (k > 0 && depth >= k) popFrame() // k = 0: stray, ignored
@@ -384,7 +338,7 @@ object Html {
       while (j < n && (input.charAt(j).isLetterOrDigit ||
         input.charAt(j) == '-' || input.charAt(j) == ':')) j += 1
       val tag = name(lt + 1, j)
-      while (closes(tag, top.tag)) popFrame()
+      ImplicitClose.get(tag).foreach { c => while (c.contains(top.tag)) popFrame() }
       val parent = top.state
       var end = scanAttrs(j, full = parent == All)
       val state = if (parent == All) All else keep.open(parent, tag, id, cls)
@@ -396,19 +350,17 @@ object Html {
           val m = if (id.isEmpty) Map.empty[String, String] else Map("id" -> id)
           if (cls.isEmpty) m else m + ("class" -> cls)
         }
-      val close = rawTextClose(tag)
-      if (isVoid(tag) || selfClose || close != null) {
-        var kids = Vector.empty[HNode]
-        if (close != null) {
-          val endIdx = rawTextEnd(close, end)
-          val bodyEnd = if (endIdx < 0) n else endIdx
-          if (bodyEnd > end && state == All)
-            kids = Vector(HText(input.substring(end, bodyEnd)))
-          end = if (endIdx < 0) n else {
-            val g = input.indexOf('>', endIdx); if (g < 0) n else g + 1
-          }
+      if (Void.contains(tag) || selfClose) {
+        if (state != Skip) top.add(HElem(tag, kept, Vector.empty))
+      } else if (RawText.contains(tag)) {
+        val endIdx = rawTextEnd(s"</$tag", end)
+        val bodyEnd = if (endIdx < 0) n else endIdx
+        if (state != Skip) top.add(HElem(tag, kept,
+          if (bodyEnd > end && state == All) Vector(HText(input.substring(end, bodyEnd)))
+          else Vector.empty))
+        end = if (endIdx < 0) n else {
+          val g = input.indexOf('>', endIdx); if (g < 0) n else g + 1
         }
-        if (state != Skip) top.add(HElem(tag, kept, kids))
       } else push(new Frame(tag, kept, state))
       end
     }

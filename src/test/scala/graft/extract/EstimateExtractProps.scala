@@ -20,6 +20,7 @@ object EstimateExtractProps extends Properties("EstimateExtract") {
     """<div class="teaser"><h3><a href="/news/2">outlook</a></h3><p>value &amp; trade <span class="ts">4 min ago</span></p></div>""",
     """<div class="footer-links"><p><a href="/fund">fund</a> | <a href="/stock">stock</a></p></div>""",
     """<script>window.cfg = {"a": "<section id='quote_upside'>"};</script>""",
+    """<script src="/js/app.js"/>""", "<style/>",
     """<!-- <section id="agreement_estimate"><table><tr><td>1</td></tr></table></section> -->""",
     "<p>para", "<li>item", "<table><tr><td>stray cell</td></tr></table>", "words only")
 

@@ -129,6 +129,16 @@ class HtmlSpec extends AnyFunSuite {
     assert(kept.children === Vector(HElem("div", Map.empty, Vector(early, late))))
   }
 
+  test("a self-closed script or style is empty, on both paths") {
+    val html = "<script src=x/><style/><section id=s>y</section><script>z</script>"
+    val full = Html.parse(html)
+    assert(full.kid("script").get === HElem("script", Map("src" -> "x"), Vector.empty))
+    assert(full.kid("style").get.children.isEmpty)
+    val s = full.byId("section", "s")
+    assert(s.map(_.allText) === Some("y"))
+    assert(Html.parse(html, KeepS).byId("section", "s") === s)
+  }
+
   test("an end tag naming the synthetic root is stray") {
     val doc = Html.parse("<div>a</#root>b</div>")
     assert(doc.kid("div").get.allText === "ab")
